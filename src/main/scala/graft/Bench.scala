@@ -271,10 +271,10 @@ object Bench {
     // per gate — a line-oriented parser ingests however many survive its
     // capture window, and a full-stdout parser gets all of them. Purely
     // additive: the timed region, methodology and both existing metric
-    // lines are unchanged.
-    outcomes.foreach { o =>
-      println(s"""{"metric":"gate","gate":"${o.name}","min_sec":${o.minSec.getOrElse(-1.0)},"median_sec":${o.medianSec.getOrElse(-1.0)},"passes":$passes}""")
-    }
+    // lines are unchanged. A failed gate has no recorded time and gets
+    // no line (its failure is in the total line's failed list).
+    for (o <- outcomes; mn <- o.minSec; med <- o.medianSec)
+      println(s"""{"metric":"gate","gate":"${o.name}","min_sec":$mn,"median_sec":$med,"passes":$passes}""")
     // The per-query map above runs ~3 KB for 119 queries — longer than the
     // driver's tail capture. Emit a compact total-only line LAST so a
     // parseable metric line always survives tail truncation; it carries

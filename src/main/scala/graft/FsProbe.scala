@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.{FileContext, Path}
 
 /** Micro-probe for publish-path filesystem op costs (r18): FileContext
   * mkdir-with-permission vs plain mkdirs vs java.nio, rename, and
@@ -22,11 +22,6 @@ object FsProbe {
     t("fc.mkdir(perm=getDirDefault)") { i =>
       fc.mkdir(new Path(s"$base/m1_$i"),
         org.apache.hadoop.fs.permission.FsPermission.getDirDefault, true)
-    }
-    t("fc.mkdir(perm=null→default?) via util.mkdirs") { i =>
-      fc.util.exists(new Path(s"$base/m2_$i")) // no-op probe of exists
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"$base/m2_$i"))
     }
     t("java.nio createDirectories") { i =>
       java.nio.file.Files.createDirectories(

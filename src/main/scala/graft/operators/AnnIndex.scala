@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileContext, Options, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,10 +16,11 @@ import graft.functions.VectorFunctions._
   *
   * Layout under `path` — GENERATIONAL (all parquet, self-contained):
   *  - `_CURRENT`    one-line text file naming the live generation id.
-  *                  Swapped via tmp-write + overwriting rename (the
-  *                  Structured-Streaming checkpoint trick), so a
-  *                  reader never observes a half-written artifact:
-  *                  it reads either the old generation or the new one.
+  *                  Swapped via tmp-write + atomic replace
+  *                  ([[Layout.swapCurrent]], the same pointer as
+  *                  generational tables), so a reader never observes a
+  *                  half-written artifact or a missing pointer: it
+  *                  reads either the old generation or the new one.
   *  - `gen-N/`      one immutable-once-swapped artifact generation:
   *    - `meta/`       one row: format version, dim, nlist, m, codebook
   *                    size, id/vec column names — [[load]] refuses a
@@ -79,12 +80,12 @@ object AnnIndex {
       sampleSize, idCol, vecCol)
     val books = Similarity.pqCodebooks(corpus, m, codebookSize, trainIters,
       sampleSize, idCol, vecCol)
-    val next = currentGeneration(spark, path).getOrElse(0) + 1
+    val next = Layout.currentGeneration(spark, path).getOrElse(0) + 1
     val gen = genDir(path, next)
     writeQuantizers(spark, gen, centroids, books, idCol, vecCol)
     writeVectors(corpus, gen, centroids, books, idCol, vecCol,
       SaveMode.Overwrite)
-    swapCurrent(spark, path, next)
+    Layout.swapCurrent(spark, path, next)
     load(spark, path)
   }
 
@@ -126,7 +127,7 @@ object AnnIndex {
       .repartition(col("cid"))
       .write.mode(SaveMode.Overwrite).partitionBy("cid")
       .parquet(s"$gen/vectors")
-    swapCurrent(spark, path, next)
+    Layout.swapCurrent(spark, path, next)
     load(spark, path)
   }
 
@@ -135,16 +136,15 @@ object AnnIndex {
     * before the last swap). Returns the deleted generation ids.
     */
   def cleanup(spark: SparkSession, path: String, keep: Int = 0): Seq[Int] = {
-    val cur = currentGeneration(spark, path).getOrElse(
+    val cur = Layout.currentGeneration(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no ann index at $path"))
-    val fc = fileContext(spark, path)
-    val root = new Path(path)
-    val gens = fc.util.listStatus(root).toSeq
+    val fs = TableFs(spark, path)
+    val gens = fs.list(new Path(path)).toSeq
       .map(_.getPath.getName)
       .collect { case GenName(n) => n.toInt }
       .filter(_ != cur)
       .sorted.reverse.drop(keep)
-    gens.foreach(g => fc.delete(new Path(genDir(path, g)), true))
+    gens.foreach(g => fs.delete(new Path(genDir(path, g)), true))
     gens
   }
 
@@ -164,7 +164,7 @@ object AnnIndex {
     * `_CURRENT`) loads as generation 0 at `path` itself.
     */
   def load(spark: SparkSession, path: String): AnnIndex = {
-    val (genPath, generation) = currentGeneration(spark, path) match {
+    val (genPath, generation) = Layout.currentGeneration(spark, path) match {
       case Some(g) => (genDir(path, g), g)
       case None    => (path, 0) // legacy flat layout
     }
@@ -188,42 +188,6 @@ object AnnIndex {
 
   private val GenName = "gen-([0-9]+)".r
   private def genDir(path: String, gen: Int) = s"$path/gen-$gen"
-
-  private def fileContext(spark: SparkSession, path: String): FileContext =
-    FileContext.getFileContext(new Path(path).toUri,
-      spark.sessionState.newHadoopConf())
-
-  /** The live generation id, or None for a missing/legacy artifact. */
-  private[operators] def currentGeneration(spark: SparkSession,
-                                           path: String): Option[Int] = {
-    val fc = fileContext(spark, path)
-    val cur = new Path(path, "_CURRENT")
-    if (!fc.util.exists(cur)) None
-    else {
-      val in = fc.open(cur)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toInt)
-      finally in.close()
-    }
-  }
-
-  /** Point `_CURRENT` at `gen`: write `_CURRENT.tmp`, then rename with
-    * OVERWRITE — the atomic-pointer pattern; a concurrent [[load]] sees
-    * the old id or the new one, never a torn write.
-    */
-  private def swapCurrent(spark: SparkSession, path: String, gen: Int): Unit = {
-    val fc = fileContext(spark, path)
-    val tmp = new Path(path, "_CURRENT.tmp")
-    val cur = new Path(path, "_CURRENT")
-    val out = fc.create(tmp,
-      java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-        org.apache.hadoop.fs.CreateFlag.OVERWRITE),
-      Options.CreateOpts.createParent())
-    try out.write(gen.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fc.rename(tmp, cur, Options.Rename.OVERWRITE)
-  }
 
   private def writeQuantizers(spark: SparkSession, genPath: String,
                               centroids: Array[Array[Double]],

@@ -88,15 +88,8 @@ object Ivm {
     * unmanaged applies only). */
   def lastAppliedBatch(spark: SparkSession, path: String): Option[Long] =
     Layout.currentGeneration(spark, path).flatMap { g =>
-      val fc = Layout.fileContext(spark, path)
-      val p = new Path(s"${Layout.generationPath(path, g)}/$BatchMarker")
-      if (!fc.util.exists(p)) None
-      else {
-        val in = fc.open(p)
-        try Some(new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-        finally in.close()
-      }
+      TableFs(spark, path).readPointer(
+        new Path(s"${Layout.generationPath(path, g)}/$BatchMarker"))
     }
 
   /** Fold one delta batch into the summary at `path`; returns false
@@ -162,7 +155,7 @@ object Ivm {
           .filter(col("n_rows") < 0L)
           .select(keys.map(col): _*).limit(5).collect()
           .map(_.toSeq.mkString("(", ",", ")")).mkString(", ")
-        Layout.fileContext(spark, path).delete(new Path(genDir), true)
+        TableFs(spark, path).delete(new Path(genDir), true)
         throw new IllegalStateException(
           s"IVM retraction below zero: $negKeys key(s) would land with " +
             s"negative n_rows (sample keys: $sample) — a retract arrived " +
@@ -171,16 +164,11 @@ object Ivm {
             "the offending delta and re-apply.")
       }
       val marker = (if (batchId >= 0) Some(batchId) else applied)
-      marker.foreach { id =>
-        val fc = Layout.fileContext(spark, path)
-        val out = fc.create(new Path(s"$genDir/$BatchMarker"),
-          java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-            org.apache.hadoop.fs.CreateFlag.OVERWRITE),
-          org.apache.hadoop.fs.Options.CreateOpts.createParent())
-        try out.write(id.toString.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      }
+      // the marker lands inside the not-yet-live generation, so a plain
+      // write suffices; the _CURRENT swap below publishes both
+      marker.foreach(id => TableFs(spark, path).writeBytes(
+        new Path(s"$genDir/$BatchMarker"),
+        id.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
       Layout.swapCurrent(spark, path, next)
       true
     }

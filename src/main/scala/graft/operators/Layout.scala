@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileContext, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -50,18 +50,15 @@ object Layout {
   private[operators] def withMaintenanceLock[T](spark: SparkSession, path: String,
                                                 waitMs: Long = 0)
                                     (body: => T): T = {
-    val fc = FileContext.getFileContext(new Path(path).toUri,
-      spark.sessionState.newHadoopConf())
+    val fs = TableFs(spark, path)
     val lock = new Path(s"$path.__maint.lock")
-    val isLocal = Option(new Path(path).toUri.getScheme)
-      .forall(s => s == "file" || s.isEmpty)
     val deadline = System.nanoTime() + waitMs * 1000000L
     val staleMs = leaseStaleMs(spark)
     val ownerInfo =
       s"pid=${ProcessHandle.current().pid()} thread=${Thread.currentThread().getName}"
     var acquired = false
     while (!acquired) {
-      if (atomicCreateExclusive(fc, lock, isLocal, ownerInfo))
+      if (fs.createExclusive(lock, ownerInfo))
         acquired = true
       else {
         // LIVENESS, two probes — both single-winner through the same
@@ -78,8 +75,8 @@ object Layout {
         //    means nothing — and breaks. The margin (default 40 s vs
         //    a 5 s refresh) absorbs GC pauses and filesystem clock
         //    skew; a live holder's heartbeat keeps the mtime fresh.
-        if (isLocal && breakDeadOwnerLock(fc, lock, isLocal)) ()
-        else if (breakStaleLease(fc, lock, isLocal, staleMs)) ()
+        if (fs.local && breakDeadOwnerLock(fs, lock)) ()
+        else if (breakStaleLease(fs, lock, staleMs)) ()
         else if (System.nanoTime() < deadline) Thread.sleep(100)
         else throw new IllegalStateException(
           s"another maintenance writer holds $lock for table $path " +
@@ -90,53 +87,9 @@ object Layout {
           "if this persists with no live writer, delete the lock file")
       }
     }
-    try withLeaseHeartbeat(fc, lock, leaseHeartbeatMs(spark)) { body }
-    finally { if (fc.util.exists(lock)) fc.delete(lock, false); () }
+    try withLeaseHeartbeat(fs, lock, leaseHeartbeatMs(spark)) { body }
+    finally { if (fs.exists(lock)) fs.delete(lock, false); () }
   }
-
-  /** ATOMIC create-exclusive of a lock/claim file, owner info
-    * included. Hadoop's local `create(CreateFlag.CREATE)` is
-    * check-then-create — NOT exclusive: two racing acquirers can both
-    * "win" (found by ConcStressProbe at 7 contending threads; the
-    * 2-thread gates never hit the window) — so local paths go through
-    * NIO's O_EXCL `CREATE_NEW`. HDFS-like filesystems get real
-    * exclusivity from the namenode via CreateFlag.CREATE; object
-    * stores without atomic create keep the documented manual-remedy
-    * caveat. */
-  private def atomicCreateExclusive(fc: FileContext, p: Path,
-                                    isLocal: Boolean,
-                                    content: String): Boolean =
-    if (isLocal) {
-      try {
-        val nio = java.nio.file.Paths.get(p.toUri.getPath)
-        Option(nio.getParent).foreach(par =>
-          java.nio.file.Files.createDirectories(par))
-        java.nio.file.Files.write(nio,
-          content.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-        case _: java.io.IOException => false
-      }
-    } else {
-      try {
-        val out = fc.create(p,
-          java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE),
-          org.apache.hadoop.fs.Options.CreateOpts.createParent())
-        // the create alone IS the lease; an IO error writing the owner
-        // info must not leak the file and wedge the table
-        try {
-          try out.write(content.getBytes(
-            java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-          true
-        } catch { case _: java.io.IOException =>
-          if (fc.util.exists(p)) fc.delete(p, false); false
-        }
-      } catch { case _: java.io.IOException => false }
-    }
 
   /** How often a lease holder refreshes its lock file's mtime (the
     * remote-host liveness signal) and how stale that mtime must be
@@ -152,13 +105,13 @@ object Layout {
     * `intervalMs` — the heartbeat [[breakStaleLease]] reads. IO errors
     * are swallowed (the release path may have already deleted the
     * lock; the worst a missed beat costs is a widened stale margin). */
-  private def withLeaseHeartbeat[T](fc: FileContext, lock: Path,
+  private def withLeaseHeartbeat[T](fs: TableFs, lock: Path,
                                     intervalMs: Long)(body: => T): T = {
     val stop = new java.util.concurrent.CountDownLatch(1)
     val t = new Thread(() => {
       while (!stop.await(intervalMs,
           java.util.concurrent.TimeUnit.MILLISECONDS)) {
-        try fc.setTimes(lock, System.currentTimeMillis(), -1)
+        try fs.touch(lock)
         catch { case _: java.io.IOException => () }
       }
     }, "graft-lease-heartbeat")
@@ -173,14 +126,14 @@ object Layout {
     * After winning the single-winner claim the staleness re-verifies:
     * a lock deleted-and-re-created by a concurrent breaker + new
     * holder has a fresh mtime and is refused. */
-  private def breakStaleLease(fc: FileContext, lock: Path,
-                              isLocal: Boolean, staleMs: Long): Boolean = {
+  private def breakStaleLease(fs: TableFs, lock: Path,
+                              staleMs: Long): Boolean = {
     def stale: Boolean =
       try System.currentTimeMillis() -
-        fc.getFileStatus(lock).getModificationTime > staleMs
+        fs.status(lock).getModificationTime > staleMs
       catch { case _: java.io.IOException => false }
-    stale && underBreakClaim(fc, lock, isLocal) {
-      if (stale) { if (fc.util.exists(lock)) fc.delete(lock, false); true }
+    stale && underBreakClaim(fs, lock) {
+      if (stale) { if (fs.exists(lock)) fs.delete(lock, false); true }
       else false
     }
   }
@@ -189,12 +142,11 @@ object Layout {
     * atomically created the `.break` claim file (released after), so
     * two waiters can never each delete what the other just re-created.
     * Returns false when the claim was lost or `decide` declined. */
-  private def underBreakClaim(fc: FileContext, lock: Path,
-                              isLocal: Boolean)
+  private def underBreakClaim(fs: TableFs, lock: Path)
                              (decide: => Boolean): Boolean = {
     val claim = new Path(lock.getParent, lock.getName + ".break")
-    if (!atomicCreateExclusive(fc, claim, isLocal, "")) false
-    else try decide finally fc.delete(claim, false)
+    if (!fs.createExclusive(claim, "")) false
+    else try decide finally fs.delete(claim, false)
   }
 
   /** True iff `lock` named a provably-dead owner and THIS caller won
@@ -208,14 +160,12 @@ object Layout {
     * dead pid, then stalled while another waiter broke the lock and a
     * NEW writer re-acquired it, must see the re-created lock's LIVE
     * pid and refuse, not delete the fresh lease on stale evidence. */
-  private def breakDeadOwnerLock(fc: FileContext, lock: Path,
-                                 isLocal: Boolean): Boolean = {
+  private def breakDeadOwnerLock(fs: TableFs, lock: Path): Boolean = {
     def ownerDead: Boolean = {
       val pid =
         try {
-          val in = fc.open(lock)
-          val txt = try new String(in.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8) finally in.close()
+          val txt = new String(fs.readBytes(lock),
+            java.nio.charset.StandardCharsets.UTF_8)
           "pid=(\\d+)".r.findFirstMatchIn(txt).map(_.group(1).toLong)
         } catch { case _: java.io.IOException => None }
       pid.exists { p =>
@@ -223,11 +173,11 @@ object Layout {
         !h.isPresent || !h.get.isAlive
       }
     }
-    ownerDead && underBreakClaim(fc, lock, isLocal) {
+    ownerDead && underBreakClaim(fs, lock) {
       // re-verify under the claim: the lock as it exists NOW (possibly
       // re-created since the pre-claim read) must itself name a dead
       // owner for the delete to be sound
-      if (ownerDead) { if (fc.util.exists(lock)) fc.delete(lock, false); true }
+      if (ownerDead) { if (fs.exists(lock)) fs.delete(lock, false); true }
       else false
     }
   }
@@ -285,18 +235,11 @@ object Layout {
     val n1 = spark.read.parquet(tmp).count()
     require(n1 == n0, s"compaction would lose rows: $n0 -> $n1; aborting")
     // dir-over-dir rename cannot OVERWRITE a non-empty target, so swap
-    // via rename-aside: old moves out, compacted moves in, aside
-    // deletes last. The two renames are each atomic; the window between
-    // them is the documented maintenance-window semantics (a table
-    // format/manifest is the cure where concurrent readers must never
-    // miss the listing).
-    val fc = FileContext.getFileContext(new Path(path).toUri,
-      spark.sessionState.newHadoopConf())
-    val aside = new Path(s"$path.__compact_old")
-    if (fc.util.exists(aside)) fc.delete(aside, true) // crashed prior run
-    renameFresh(fc, new Path(path), aside)
-    renameFresh(fc, new Path(tmp), new Path(path))
-    fc.delete(aside, true)
+    // via rename-aside; the window between the two renames is the
+    // documented maintenance-window semantics (a table format/manifest
+    // is the cure where concurrent readers must never miss the listing)
+    TableFs(spark, path).swapDir(new Path(tmp), new Path(path),
+      new Path(s"$path.__compact_old"))
     val filesAfter = spark.read.parquet(path).inputFiles.length.toLong
     (filesBefore, filesAfter)
   }
@@ -344,23 +287,20 @@ object Layout {
     requireNotManifest(spark, path, "merge")
     require(keys.nonEmpty, "merge needs at least one key column")
     require(!keys.contains(versionCol), "versionCol cannot be a key")
-    val base = spark.read.parquet(path)
     require(partitionCols.forall(updates.columns.contains),
       "update batch must carry the partition columns")
     deleteCol.foreach(d => require(updates.columns.contains(d),
       s"update batch must carry the delete flag column '$d'"))
-    val fc = FileContext.getFileContext(new Path(path).toUri,
-      spark.sessionState.newHadoopConf())
+    val fs = TableFs(spark, path)
     if (partitionCols.isEmpty) {
       val tmpDir = s"$path.__merge_tmp"
-      latestWins(base, updates, keys, versionCol, deleteCol)
+      latestWins(spark.read.parquet(path), updates, keys, versionCol,
+          deleteCol)
         .write.mode(SaveMode.Overwrite).parquet(tmpDir)
-      val aside = new Path(s"$path.__merge_old")
-      if (fc.util.exists(aside)) fc.delete(aside, true)
-      renameFresh(fc, new Path(path), aside)
-      renameFresh(fc, new Path(tmpDir), new Path(path))
-      fc.delete(aside, true)
+      fs.swapDir(new Path(tmpDir), new Path(path),
+        new Path(s"$path.__merge_old"))
     } else {
+      import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       // touched partition values: bounded by the BATCH's partitions.
       // Each value is collected twice — natively (for the pruning
       // predicate) and through Spark's OWN Cast-to-string (columns
@@ -377,6 +317,24 @@ object Layout {
       require(touched.length <= maxTouchedPartitions,
         s"update batch touches > $maxTouchedPartitions partitions; " +
         "run an unpartitioned full-table merge instead")
+      // writer-exact dir name of each touched value: Spark's Cast
+      // rendering (collected above) + the writer's escaping/nulls
+      val touchedRels = touched.map { r =>
+        partitionCols.zipWithIndex.map { case (c, i) =>
+          ExternalCatalogUtils.getPartitionPathString(c,
+            if (r.isNullAt(nPc + i)) null else r.getString(nPc + i))
+        }.mkString("/")
+      }
+      def asideOf(dst: Path) =
+        new Path(dst.getParent, s".${dst.getName}.__merge_old")
+      // crash recovery BEFORE the base scan: a prior merge that died
+      // between its swap's two renames left the aside as the only copy
+      // of a touched partition — scanning without it would drop its rows
+      touchedRels.foreach { rel =>
+        val dst = new Path(path, rel)
+        if (!fs.exists(dst) && fs.exists(asideOf(dst)))
+          fs.rename(asideOf(dst), dst)
+      }
       // prune the base scan to the touched partitions only — this
       // predicate hits the partition directories, not the data
       val touchedPred = touched.map { r =>
@@ -385,36 +343,24 @@ object Layout {
         }.reduce(_ && _)
       }.reduceOption(_ || _).getOrElse(lit(false))
       val tmpDir = s"$path.__merge_tmp"
-      latestWins(base.filter(touchedPred), updates, keys, versionCol,
-          deleteCol)
+      latestWins(spark.read.parquet(path).filter(touchedPred), updates,
+          keys, versionCol, deleteCol)
         .write.mode(SaveMode.Overwrite)
         .partitionBy(partitionCols: _*).parquet(tmpDir)
       // swap each touched partition dir; untouched dirs are never read
       // or written. New-in-batch partition values rename straight in.
       val tmpPath = new Path(tmpDir)
       def swapRec(src: Path, dst: Path): Unit = {
-        val kids = fc.util.listStatus(src)
+        val kids = fs.list(src)
           .filter(s0 => s0.isDirectory && s0.getPath.getName.contains("="))
-        if (kids.nonEmpty && fc.util.exists(dst))
+        if (kids.nonEmpty && fs.exists(dst))
           kids.foreach(k => swapRec(k.getPath, new Path(dst, k.getPath.getName)))
-        else {
-          val aside = new Path(dst.getParent, s".${dst.getName}.__merge_old")
-          // crash recovery: a prior run died between its two renames —
-          // the aside is the only copy of this partition; restore it
-          // before treating it as stale
-          if (fc.util.exists(aside) && !fc.util.exists(dst))
-            renameFresh(fc, aside, dst)
-          if (fc.util.exists(aside)) fc.delete(aside, true)
-          if (fc.util.exists(dst)) renameFresh(fc, dst, aside)
-          mkdirsFast(fc, dst.getParent)
-          renameFresh(fc, src, dst)
-          if (fc.util.exists(aside)) fc.delete(aside, true)
-        }
+        else fs.swapDir(src, dst, asideOf(dst))
       }
       // capture which partition rel-paths the write produced BEFORE the
       // swap renames them out of tmp (the post-swap tmp is empty)
       def partitionRels(p: Path, prefix: String): Seq[String] = {
-        val kids = fc.util.listStatus(p)
+        val kids = fs.list(p)
           .filter(s0 => s0.isDirectory && s0.getPath.getName.contains("="))
         if (kids.isEmpty) Seq(prefix).filter(_.nonEmpty)
         else kids.toSeq.flatMap(k => partitionRels(k.getPath,
@@ -422,30 +368,19 @@ object Layout {
           else s"$prefix/${k.getPath.getName}"))
       }
       val tmpRels = partitionRels(tmpPath, "").toSet
-      val statuses = fc.util.listStatus(tmpPath)
+      val statuses = fs.list(tmpPath)
         .filter(st => st.isDirectory && !st.getPath.getName.startsWith("_"))
       statuses.foreach { st =>
         swapRec(st.getPath, new Path(path, st.getPath.getName))
       }
       // a touched partition whose rows were ALL deleted produces no tmp
       // dir — its OLD dir must still go, or the deletes silently
-      // survive. Resolve each touched value to its Spark partition-dir
-      // name (same escaping the writer used) and drop leftovers.
-      if (deleteCol.isDefined) {
-        import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        touched.foreach { r =>
-          // writer-exact fragment: Spark's Cast rendering (collected
-          // above) + the same escaping/null handling the writer uses
-          val rel = partitionCols.zipWithIndex.map { case (c, i) =>
-            ExternalCatalogUtils.getPartitionPathString(c,
-              if (r.isNullAt(nPc + i)) null else r.getString(nPc + i))
-          }.mkString("/")
-          val dst = new Path(path, rel)
-          if (!tmpRels.contains(rel) && fc.util.exists(dst))
-            fc.delete(dst, true)
-        }
+      // survive: drop each touched dir the write did not reproduce.
+      if (deleteCol.isDefined) touchedRels.foreach { rel =>
+        val dst = new Path(path, rel)
+        if (!tmpRels.contains(rel) && fs.exists(dst)) fs.delete(dst, true)
       }
-      fc.delete(tmpPath, true)
+      fs.delete(tmpPath, true)
     }
   }
 
@@ -536,40 +471,18 @@ object Layout {
   // generational tables are read through [[readCurrent]]. Migrate
   // during a maintenance window, then reap the flat files.
 
-  private[operators] def fileContext(spark: SparkSession, path: String): FileContext =
-    FileContext.getFileContext(new Path(path).toUri,
-      spark.sessionState.newHadoopConf())
-
   private[operators] def generationPath(path: String, g: Int): String =
     if (g == 0) path else s"$path/gen-$g"
 
   /** The live generation id, or None for a flat/missing table. */
-  def currentGeneration(spark: SparkSession, path: String): Option[Int] = {
-    val fc = fileContext(spark, path)
-    val cur = new Path(path, "_CURRENT")
-    if (!fc.util.exists(cur)) None
-    else {
-      val in = fc.open(cur)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toInt)
-      finally in.close()
-    }
-  }
+  def currentGeneration(spark: SparkSession, path: String): Option[Int] =
+    TableFs(spark, path).readPointer(new Path(path, "_CURRENT")).map(_.toInt)
 
-  /** Point `_CURRENT` at `gen` atomically (tmp write + rename OVERWRITE). */
-  private[operators] def swapCurrent(spark: SparkSession, path: String, gen: Int): Unit = {
-    val fc = fileContext(spark, path)
-    val tmp = new Path(path, "_CURRENT.tmp")
-    val cur = new Path(path, "_CURRENT")
-    val out = fc.create(tmp,
-      java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-        org.apache.hadoop.fs.CreateFlag.OVERWRITE),
-      org.apache.hadoop.fs.Options.CreateOpts.createParent())
-    try out.write(gen.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    atomicReplace(fc, tmp, cur)
-  }
+  /** Point `_CURRENT` at `gen` atomically (tmp write + replace). Shared
+    * by every generational layout: this file's tables, [[AnnIndex]]
+    * artifacts and [[Ivm]] summaries. */
+  private[operators] def swapCurrent(spark: SparkSession, path: String, gen: Int): Unit =
+    TableFs(spark, path).publishPointer(new Path(path, "_CURRENT"), gen)
 
   /** Read the LIVE generation of the table at `path` — the pointer is
     * resolved once, here; the returned DataFrame's file listing stays
@@ -583,11 +496,11 @@ object Layout {
   /** Generation ids present on disk, ascending — the live one plus any
     * not-yet-reaped predecessors (0 = flat legacy files in the root). */
   def generations(spark: SparkSession, path: String): Seq[Int] = {
-    val fc = fileContext(spark, path)
+    val fs = TableFs(spark, path)
     val p = new Path(path)
-    if (!fc.util.exists(p)) Seq.empty
+    if (!fs.exists(p)) Seq.empty
     else {
-      val sts = fc.util.listStatus(p)
+      val sts = fs.list(p)
       val gens = sts.collect {
         case st if st.isDirectory && st.getPath.getName.startsWith("gen-") &&
           st.getPath.getName.drop(4).forall(_.isDigit) =>
@@ -616,13 +529,13 @@ object Layout {
     * maintenance run's partial output (never pointed at, so never read). */
   private def dropOrphanGenerations(spark: SparkSession, path: String,
                                     current: Int): Unit = {
-    val fc = fileContext(spark, path)
+    val fs = TableFs(spark, path)
     val p = new Path(path)
-    if (fc.util.exists(p)) fc.util.listStatus(p).foreach { st =>
+    if (fs.exists(p)) fs.list(p).foreach { st =>
       val n = st.getPath.getName
       if (st.isDirectory && n.startsWith("gen-") &&
           n.drop(4).forall(_.isDigit) && n.drop(4).toInt > current)
-        fc.delete(st.getPath, true)
+        fs.delete(st.getPath, true)
     }
   }
 
@@ -709,16 +622,16 @@ object Layout {
 
   private def reapBelow(spark: SparkSession, path: String,
                         cur: Int): Seq[Int] = {
-    val fc = fileContext(spark, path)
+    val fs = TableFs(spark, path)
     val deleted = scala.collection.mutable.ArrayBuffer.empty[Int]
-    fc.util.listStatus(new Path(path)).foreach { st =>
+    fs.list(new Path(path)).foreach { st =>
       val n = st.getPath.getName
       if (st.isDirectory && n.startsWith("gen-") &&
           n.drop(4).forall(_.isDigit) && n.drop(4).toInt < cur) {
-        fc.delete(st.getPath, true); deleted += n.drop(4).toInt
+        fs.delete(st.getPath, true); deleted += n.drop(4).toInt
       } else if (!st.isDirectory && isWriteArtifact(n)) {
         // flat legacy data file (generation 0) superseded by gen-N
-        fc.delete(st.getPath, false)
+        fs.delete(st.getPath, false)
         if (n.startsWith("part-") && !deleted.contains(0)) deleted += 0
       }
     }
@@ -994,34 +907,27 @@ object Layout {
   /** Live manifest version of the table at `path`, or None if `path` is
     * not a manifest table.
     *
-    * MID-SWAP WINDOW: Hadoop's `Rename.OVERWRITE` is delete-then-
-    * rename on several filesystems (RawLocal included), so a reader
-    * can catch the microsecond window where the pointer file is ABSENT
-    * while a commit replaces it (found by ConcStressProbe at 7
-    * threads; the 2-thread gates never hit it). A true manifest table
+    * MID-SWAP WINDOW: on remote filesystems the pointer replace
+    * ([[TableFs.replace]]) may be delete-then-rename, so a reader can
+    * catch the window where the pointer file is ABSENT while a commit
+    * replaces it (found by ConcStressProbe at 7 threads on the local
+    * FS before it moved to an atomic nio move). A true manifest table
     * always has `_MANIFEST.v*` files, so absence WITH version files
     * present means mid-swap — retry briefly instead of mis-answering
     * "not a manifest table"; a plain directory (no version files)
     * still answers None immediately. */
   def manifestVersion(spark: SparkSession, path: String): Option[Int] = {
-    val fc = fileContext(spark, path)
+    val fs = TableFs(spark, path)
     val cur = new Path(path, ManifestPointer)
     def read(): Option[Int] =
-      try {
-        if (!fc.util.exists(cur)) None
-        else {
-          val in = fc.open(cur)
-          try Some(new String(in.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8).trim.toInt)
-          finally in.close()
-        }
-      } catch { case _: java.io.IOException => None } // deleted mid-read
+      try fs.readPointer(cur).map(_.toInt)
+      catch { case _: java.io.IOException => None } // deleted mid-read
     read().orElse {
       val tableExists =
-        try fc.util.exists(new Path(path))
+        try fs.exists(new Path(path))
         catch { case _: java.io.IOException => false }
       val hasVersions = tableExists &&
-        fc.util.listStatus(new Path(path)).exists(st =>
+        fs.list(new Path(path)).exists(st =>
           !st.isDirectory &&
             st.getPath.getName.startsWith("_MANIFEST.v"))
       if (!hasVersions) None
@@ -1167,81 +1073,18 @@ object Layout {
     }
   }
 
-  private def readBytes(fc: FileContext, p: Path): Array[Byte] = {
-    val in = fc.open(p)
-    try in.readAllBytes() finally in.close()
-  }
-
-  /** Atomically replace `dst` with `tmp` — the pointer-swap primitive.
-    * Hadoop's `Rename.OVERWRITE` is delete-then-rename on several
-    * filesystems, leaving a reader-visible absence window
-    * (ConcStressProbe caught readers falling into it); on LOCAL
-    * filesystems NIO's ATOMIC_MOVE maps to rename(2), which replaces
-    * in one step — no window at all. Remote filesystems keep the
-    * Hadoop rename (HDFS's is atomic server-side) plus the readers'
-    * mid-swap retry as the backstop. */
-  private def atomicReplace(fc: FileContext, tmp: Path, dst: Path): Unit = {
-    val local = Option(tmp.toUri.getScheme)
-      .forall(s => s == "file" || s.isEmpty)
-    if (local)
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(tmp.toUri.getPath),
-        java.nio.file.Paths.get(dst.toUri.getPath),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    else fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    ()
-  }
-
-  /** Local-filesystem fast paths for the publish pools' metadata ops
-    * (r18, optimization guide §6 — metadata latency). Without the
-    * native hadoop library, the Hadoop local filesystem SHELLS OUT a
-    * process per call on exactly the ops a publish runs once per
-    * partition dir: mkdir-with-permission forks `chmod`, and
-    * FileContext.rename loads permissions via a forked `ls -ld`.
-    * Measured (FsProbe): fc.mkdir 4.5 ms, fc.rename 13.8 ms — vs
-    * 0.03 ms for the equivalent java.nio call, which is the same
-    * mkdir(2)/rename(2) the fork eventually issues. A 525-partition
-    * publish pays ~10 s of fork latency in its rename pool alone.
-    * On `file://` paths these helpers go straight to java.nio
-    * ([[atomicReplace]]'s existing pattern); any other scheme keeps
-    * FileContext unchanged — on HDFS/object stores the ops are RPCs
-    * (no forking) and FileContext's semantics are required. The
-    * non-overwrite rename keeps fail-loud semantics: java.nio throws
-    * FileAlreadyExistsException when dst exists, exactly like
-    * fc.rename with Rename.NONE. */
-  private def localNioPath(p: Path): Option[java.nio.file.Path] = {
-    val u = p.toUri
-    if (u.getScheme == null || u.getScheme == "file")
-      Some(java.nio.file.Paths.get(u.getPath))
-    else None
-  }
-
-  private def mkdirsFast(fc: FileContext, p: Path): Unit =
-    localNioPath(p) match {
-      case Some(np) => java.nio.file.Files.createDirectories(np); ()
-      case None => fc.mkdir(p,
-        org.apache.hadoop.fs.permission.FsPermission.getDirDefault, true)
-    }
-
-  private def renameFresh(fc: FileContext, src: Path, dst: Path): Unit =
-    (localNioPath(src), localNioPath(dst)) match {
-      case (Some(s), Some(d)) => java.nio.file.Files.move(s, d); ()
-      case _ => fc.rename(src, dst)
-    }
-
   /** Parse the root of manifest `version`: the HEADER meta (schema,
     * partition cols, specs, bucket bounds — per-rel maps populated
     * only for FLAT manifests) plus the bucket references of a
     * hierarchical one (empty for flat). */
   private def readManifestRoot(spark: SparkSession, path: String,
                                version: Int): (ManifestMeta, Seq[BucketRef]) = {
-    val fc = fileContext(spark, path)
+    val fs = TableFs(spark, path)
     val p = new Path(path, s"_MANIFEST.v$version")
-    require(fc.util.exists(p),
+    require(fs.exists(p),
       s"manifest version $version of $path is not on disk (reaped or " +
         "never written)")
-    val node = manifestJson.readTree(new String(readBytes(fc, p),
+    val node = manifestJson.readTree(new String(fs.readBytes(p),
       java.nio.charset.StandardCharsets.UTF_8))
     import scala.jdk.CollectionConverters._
     val header = ManifestMeta(
@@ -1332,13 +1175,13 @@ object Layout {
   private def readBuckets(spark: SparkSession, path: String,
                           header: ManifestMeta,
                           refs: Seq[BucketRef]): ManifestMeta = {
-    val fc = fileContext(spark, path)
+    val fs = TableFs(spark, path)
     refs.foldLeft(header) { (m, r) =>
       val p = new Path(path, r.file)
-      require(fc.util.exists(p),
+      require(fs.exists(p),
         s"manifest v${header.version} of $path references bucket file " +
           s"${r.file} which is not on disk (reaped?)")
-      parseRelMaps(m, manifestJson.readTree(new String(readBytes(fc, p),
+      parseRelMaps(m, manifestJson.readTree(new String(fs.readBytes(p),
         java.nio.charset.StandardCharsets.UTF_8)))
     }
   }
@@ -1348,26 +1191,6 @@ object Layout {
     val (header, refs) = readManifestRoot(spark, path, version)
     if (refs.isEmpty) header else readBuckets(spark, path, header, refs)
   }
-
-  private def writeFile(fc: FileContext, p: Path,
-                        bytes: Array[Byte]): Unit =
-    localNioPath(p) match {
-      // local fast path: fc.create-with-permission forks a chmod per
-      // file without the native hadoop lib (the [[mkdirsFast]] story);
-      // java.nio is the same create+truncate+write
-      case Some(np) =>
-        Option(np.getParent).foreach { par =>
-          java.nio.file.Files.createDirectories(par); ()
-        }
-        java.nio.file.Files.write(np, bytes)
-        ()
-      case None =>
-        val out = fc.create(p,
-          java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-            org.apache.hadoop.fs.CreateFlag.OVERWRITE),
-          org.apache.hadoop.fs.Options.CreateOpts.createParent())
-        try out.write(bytes) finally out.close()
-    }
 
   /** Per-bucket stats rollup (min of mins / max of maxes across the
     * bucket's rels, through Spark's Cast + ordering — one tiny local
@@ -1434,7 +1257,7 @@ object Layout {
 
   private def writeManifestMeta(spark: SparkSession, path: String,
                                 m: ManifestMeta): Unit = {
-    val fc = fileContext(spark, path)
+    val fs = TableFs(spark, path)
     val root = manifestJson.createObjectNode()
     root.put("version", m.version)
     // the publish stamp is ALWAYS freshly taken here — metas are
@@ -1519,7 +1342,7 @@ object Layout {
           .digest(bytes).take(16).map("%02x".format(_)).mkString
         val name = s"_MBUCKET.$sha.json"
         val p = new Path(path, name)
-        if (!fc.util.exists(p)) writeFile(fc, p, bytes)
+        if (!fs.exists(p)) fs.writeBytes(p, bytes)
         val bn = arr.addObject()
         bn.put("file", name)
         val (stR, blR) = rollups(b)
@@ -1539,15 +1362,10 @@ object Layout {
         }
       }
     }
-    writeFile(fc, new Path(path, s"_MANIFEST.v${m.version}"),
+    fs.writeBytes(new Path(path, s"_MANIFEST.v${m.version}"),
       manifestJson.writeValueAsBytes(root))
-    // atomic publish: tmp write + rename OVERWRITE, the swapCurrent
-    // discipline — readers resolve either the old version or the new
-    val tmp = new Path(path, s"$ManifestPointer.tmp")
-    val cur = new Path(path, ManifestPointer)
-    writeFile(fc, tmp, m.version.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    atomicReplace(fc, tmp, cur)
+    // atomic publish: readers resolve either the old version or the new
+    fs.publishPointer(new Path(path, ManifestPointer), m.version)
   }
 
   /** Next generation number for `rel` that collides with NOTHING:
@@ -1561,12 +1379,12 @@ object Layout {
     * snapshot's data in place). Crashed-run orphans are simply
     * numbered past; [[reapManifest]] removes them with retention
     * consent. */
-  private def nextGenOnDisk(fc: FileContext, path: String,
+  private def nextGenOnDisk(fs: TableFs, path: String,
                             m: ManifestMeta, rel: String): Int = {
     val partDir = new Path(s"$path/$rel")
     val onDisk =
-      if (!fc.util.exists(partDir)) Nil
-      else fc.util.listStatus(partDir).toSeq.collect {
+      if (!fs.exists(partDir)) Nil
+      else fs.list(partDir).toSeq.collect {
         case st if st.isDirectory &&
             st.getPath.getName.startsWith("gen=") &&
             st.getPath.getName.drop(4).forall(_.isDigit) =>
@@ -1575,10 +1393,27 @@ object Layout {
     math.max(m.nextGen(rel), (0 +: onDisk).max + 1)
   }
 
+  /** Generation publish: move each produced `tmpDir/<rel>` to its own
+    * fresh `path/<rel>/gen=<g>` on the bounded pool and return the
+    * numbering. `g` is collision-free above `m` AND the disk
+    * ([[nextGenOnDisk]]) — so a repartition back to an earlier scheme
+    * lands beside the dirs retained versions still reference — and
+    * numbering runs under the lease, so two writers never pick the
+    * same gen. */
+  private def publishGens(fs: TableFs, path: String, tmpDir: String,
+                          m: ManifestMeta,
+                          rels: Seq[String]): Map[String, Int] =
+    inParallel(rels) { rel =>
+      val g = nextGenOnDisk(fs, path, m, rel)
+      fs.mkdirs(new Path(s"$path/$rel"))
+      fs.rename(new Path(s"$tmpDir/$rel"), new Path(s"$path/$rel/gen=$g"))
+      rel -> g
+    }.toMap
+
   /** Leaf partition rel-paths (`a=1/b=2`) under `p`. */
-  private def listPartitionRels(fc: FileContext, p: Path): Seq[String] = {
+  private def listPartitionRels(fs: TableFs, p: Path): Seq[String] = {
     def rec(q: Path, prefix: String): Seq[String] = {
-      val kids = fc.util.listStatus(q)
+      val kids = fs.list(q)
         .filter(s0 => s0.isDirectory && s0.getPath.getName.contains("=") &&
           !s0.getPath.getName.startsWith("gen="))
       if (kids.isEmpty) Seq(prefix).filter(_.nonEmpty)
@@ -1773,9 +1608,9 @@ object Layout {
     * planner reads never have to list the table themselves. */
   private def bytesFor(spark: SparkSession, path: String,
                        gens: Map[String, Int]): Map[String, Long] = {
-    val fc = fileContext(spark, path)
+    val fs = TableFs(spark, path)
     inParallel(gens.toSeq) { case (rel, g) =>
-      rel -> fc.util.listStatus(new Path(s"$path/$rel/gen=$g"))
+      rel -> fs.list(new Path(s"$path/$rel/gen=$g"))
         .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
           !st.getPath.getName.startsWith("."))
         .map(_.getLen).sum
@@ -1810,10 +1645,10 @@ object Layout {
     }
 
   /** [[bytesFor]] over a writer's tmp tree (before the renames). */
-  private def bytesUnder(fc: FileContext, tmpDir: String,
+  private def bytesUnder(fs: TableFs, tmpDir: String,
                          rels: Seq[String]): Map[String, Long] =
     inParallel(rels) { rel =>
-      rel -> fc.util.listStatus(new Path(s"$tmpDir/$rel"))
+      rel -> fs.list(new Path(s"$tmpDir/$rel"))
         .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
           !st.getPath.getName.startsWith("."))
         .map(_.getLen).sum
@@ -2096,7 +1931,7 @@ object Layout {
     } catch { case _: Exception => None }
   }
 
-  private def scanTmpTree(spark: SparkSession, fc: FileContext,
+  private def scanTmpTree(spark: SparkSession, fs: TableFs,
                           m: ManifestMeta, tmpDir: String,
                           rels: Seq[String]): TmpScan = {
     val sch = manifestSchema(m)
@@ -2107,29 +1942,20 @@ object Layout {
     val footerEligible = m.statsCols.nonEmpty &&
       m.statsCols.forall(c => !m.partitionCols.contains(c))
     val listed: Seq[(String, Seq[(String, Long)])] = inParallel(rels) { rel =>
-      rel -> fc.util.listStatus(new Path(s"$tmpDir/$rel"))
+      rel -> fs.list(new Path(s"$tmpDir/$rel"))
         .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
           !st.getPath.getName.startsWith("."))
         .map(st => (st.getPath.getName, st.getLen)).toSeq.sortBy(_._1)
     }
-    val conf = spark.sessionState.newHadoopConf()
-    val allFiles = listed.flatMap { case (rel, fs) =>
-      fs.map { case (name, _) => (rel, name) } }
+    val allFiles = listed.flatMap { case (rel, files) =>
+      files.map { case (name, _) => (rel, name) } }
     val bailReason =
       new java.util.concurrent.atomic.AtomicReference[String](null)
     // per-file footer read: row counts always; per-block min/max only
     // while every needed chunk stays soundly mappable
     val perFile = inParallel(allFiles) { case (rel, name) =>
-      // nio InputFile on local paths: skips the Hadoop stream stack
-      // (FsProbe: 9.3 → 6.8 ms per footer open); other schemes keep
-      // the Hadoop input file
-      val fp = new Path(s"$tmpDir/$rel/$name")
-      val in = localNioPath(fp) match {
-        case Some(np) => new org.apache.parquet.io.LocalInputFile(np)
-        case None =>
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(fp, conf)
-      }
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        fs.inputFile(new Path(s"$tmpDir/$rel/$name")))
       try {
         import scala.jdk.CollectionConverters._
         val blocks = r.getFooter.getBlocks.asScala.toSeq
@@ -2545,23 +2371,23 @@ object Layout {
     * the publish-path cost class); the emptied bucket dirs delete
     * recursively, sweeping any checksum shadows along. */
   private def flattenBucketDirs(spark: SparkSession, tmpDir: String): Unit = {
-    val fc = fileContext(spark, tmpDir)
-    val bucketRels = listPartitionRels(fc, new Path(tmpDir))
+    val fs = TableFs(spark, tmpDir)
+    val bucketRels = listPartitionRels(fs, new Path(tmpDir))
       .filter(_.split("/").last.startsWith(s"$BucketDir="))
     inParallel(bucketRels) { rel =>
       val dir = new Path(s"$tmpDir/$rel")
       val b = rel.substring(rel.lastIndexOf('=') + 1).toInt
-      fc.util.listStatus(dir).toSeq
+      fs.list(dir).toSeq
         .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
           !st.getPath.getName.startsWith("."))
         .foreach { st =>
           val n = st.getPath.getName
           val dot = n.indexOf('.')
           val (base, ext) = if (dot < 0) (n, "") else n.splitAt(dot)
-          renameFresh(fc, st.getPath,
+          fs.rename(st.getPath,
             new Path(dir.getParent, f"${base}_$b%05d$ext"))
         }
-      fc.delete(dir, true)
+      fs.delete(dir, true)
     }
   }
 
@@ -2678,9 +2504,9 @@ object Layout {
     }
     require(manifestVersion(spark, path).isEmpty,
       s"$path is already a manifest table; use mergeManifest")
-    val fc = fileContext(spark, path)
+    val fs = TableFs(spark, path)
     val tmpDir = s"$path.__manifest_tmp"
-    fc.delete(new Path(tmpDir), true)
+    fs.delete(new Path(tmpDir), true)
     // cluster on the partition columns into shuffle.partitions tasks:
     // each partition dir's rows land in exactly ONE task (one file per
     // dir — not |tasks| tiny files in every dir, the small-files
@@ -2692,7 +2518,7 @@ object Layout {
     // here: atomicity comes from the manifest pointer swap, and the
     // tmp tree is deleted before every attempt.
     clusteredWrite(spark, df, tmpDir, partitionCols, bucketCols, buckets)
-    val rels = listPartitionRels(fc, new Path(tmpDir))
+    val rels = listPartitionRels(fs, new Path(tmpDir))
     val dataCols = df.schema.fields.filterNot(f =>
       partitionCols.contains(f.name))
     val parts = partitionCols.map(c => df.schema(c))
@@ -2717,7 +2543,7 @@ object Layout {
     // derive the published metadata from the tmp tree BEFORE the
     // renames scatter it: one footer walk of one root — file list,
     // bytes and stats without re-reading the data just written
-    val scan = scanTmpTree(spark, fc, meta0, tmpDir, rels)
+    val scan = scanTmpTree(spark, fs, meta0, tmpDir, rels)
     val (seedStats, seedFileStats) = statsFromScan(spark, meta0, tmpDir, scan)
     val meta1 = meta0.copy(
       stats = seedStats,
@@ -2727,21 +2553,21 @@ object Layout {
       op = "seed")
     inParallel(rels) { rel =>
       val dst = new Path(s"$path/$rel/gen=1")
-      mkdirsFast(fc, dst.getParent)
-      if (fc.util.exists(dst)) fc.delete(dst, true) // crashed prior seed
-      renameFresh(fc, new Path(s"$tmpDir/$rel"), dst)
+      fs.mkdirs(dst.getParent)
+      if (fs.exists(dst)) fs.delete(dst, true) // crashed prior seed
+      fs.rename(new Path(s"$tmpDir/$rel"), dst)
     }
     writeManifestMeta(spark, path, meta1)
-    fc.delete(new Path(tmpDir), true)
+    fs.delete(new Path(tmpDir), true)
   }
 
   /** Every RETAINED manifest version number on disk, ascending — the
     * time-travel window ([[readManifestVersion]] reaches exactly
     * these; [[reapManifest]] shrinks the list). */
   def manifestVersions(spark: SparkSession, path: String): Seq[Int] = {
-    val fc = fileContext(spark, path)
-    if (!fc.util.exists(new Path(path))) Nil
-    else fc.util.listStatus(new Path(path)).toSeq.flatMap { st =>
+    val fs = TableFs(spark, path)
+    if (!fs.exists(new Path(path))) Nil
+    else fs.list(new Path(path)).toSeq.flatMap { st =>
       val n = st.getPath.getName
       if (!st.isDirectory && n.startsWith("_MANIFEST.v") &&
           n.drop(11).nonEmpty && n.drop(11).forall(_.isDigit))
@@ -2879,11 +2705,11 @@ object Layout {
   def readManifestVersion(spark: SparkSession, path: String,
                           version: Int): DataFrame = {
     val m = readManifestMeta(spark, path, version)
-    val fc = fileContext(spark, path)
+    val fs = TableFs(spark, path)
     val allRels = (m.entries.keySet ++ m.deltas.keySet).toSeq.sorted
     allRels.foreach { rel =>
       m.liveGens(rel).foreach { g =>
-        require(fc.util.exists(new Path(s"$path/$rel/gen=$g")),
+        require(fs.exists(new Path(s"$path/$rel/gen=$g")),
           s"manifest v$version of $path references $rel/gen=$g which is " +
             "not on disk (reaped?); time travel only reaches retained " +
             "generations")
@@ -2939,14 +2765,11 @@ object Layout {
     * re-creates it, and an actively-writing tree has a fresh root
     * mtime anyway). */
   private val TmpHeartbeat = "_GRAFT_HEARTBEAT"
-  private def withTmpHeartbeat[T](fc: FileContext, tmpDir: String)
+  private def withTmpHeartbeat[T](fs: TableFs, tmpDir: String)
                                  (body: => T): T = {
     val hb = new Path(tmpDir, TmpHeartbeat)
     def beat(): Unit =
-      try fc.create(hb,
-        java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-          org.apache.hadoop.fs.CreateFlag.OVERWRITE),
-        org.apache.hadoop.fs.Options.CreateOpts.createParent()).close()
+      try fs.writeBytes(hb, Array.emptyByteArray)
       catch { case _: java.io.IOException => () }
     val stop = new java.util.concurrent.CountDownLatch(1)
     val t = new Thread(() => {
@@ -2960,10 +2783,10 @@ object Layout {
 
   /** The orphan sweep's age of a crashed writer's tmp tree: the
     * freshest of the root's own mtime and the in-flight heartbeat. */
-  private def tmpTreeMtime(fc: FileContext,
+  private def tmpTreeMtime(fs: TableFs,
                            st: org.apache.hadoop.fs.FileStatus): Long = {
     val hb =
-      try fc.getFileStatus(new Path(st.getPath, TmpHeartbeat))
+      try fs.status(new Path(st.getPath, TmpHeartbeat))
         .getModificationTime
       catch { case _: java.io.IOException => 0L }
     math.max(st.getModificationTime, hb)
@@ -3116,7 +2939,7 @@ object Layout {
                     forceWins: Boolean = false): Boolean = {
     require(keys.nonEmpty, "mergeManifest needs at least one key column")
     require(!keys.contains(versionCol), "versionCol cannot be a key")
-    val fc = fileContext(spark, path)
+    val fs = TableFs(spark, path)
     val maxAttempts = 3
     var attempt = 0
     var lastConflict = ""
@@ -3212,7 +3035,7 @@ object Layout {
       // touched partitions' deltas into the generation it writes
       val base = readResolved(spark, path, m0, baseRels)
       val tmpDir = uniqueTmpDir(path)
-      try withTmpHeartbeat(fc, tmpDir) {
+      try withTmpHeartbeat(fs, tmpDir) {
         // ONE shuffle for resolve + layout on unbucketed tables: the
         // tagged union pre-partitions by the partition columns, the
         // latest-wins window rides that clustering (see latestWins),
@@ -3252,7 +3075,7 @@ object Layout {
             .write.mode(SaveMode.Overwrite)
             .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
             .partitionBy(pcols: _*).parquet(tmpDir)
-        val produced = listPartitionRels(fc, new Path(tmpDir))
+        val produced = listPartitionRels(fs, new Path(tmpDir))
         // a produced rel outside the touched+landing set means the Cast
         // rendering and the writer disagreed — fail BEFORE publishing
         val unexpected = produced.filterNot(expectedProduced.contains)
@@ -3264,7 +3087,7 @@ object Layout {
         // derive published metadata from the tmp tree BEFORE the commit
         // (one footer walk, no data rescan — and outside the lease, so
         // the critical section stays renames + one JSON)
-        val scan = scanTmpTree(spark, fc, m0, tmpDir, produced)
+        val scan = scanTmpTree(spark, fs, m0, tmpDir, produced)
         val (newStats, newFileStats) = statsFromScan(spark, m0, tmpDir, scan)
         val newBlooms = bloomsFor(spark, path, m0, Map.empty,
           srcDir = Some(tmpDir))
@@ -3286,16 +3109,7 @@ object Layout {
               Left(s"concurrent commit moved touched partition(s) " +
                 touchedMoved.take(5).mkString(", "))
             else {
-              val newGens = inParallel(produced) { rel =>
-                // collision-free above the LIVE manifest AND the disk
-                // (see nextGenOnDisk); numbering runs under the lease,
-                // so two writers can never pick the same gen
-                val g = nextGenOnDisk(fc, path, m1, rel)
-                val dst = new Path(s"$path/$rel/gen=$g")
-                mkdirsFast(fc, dst.getParent)
-                renameFresh(fc, new Path(s"$tmpDir/$rel"), dst)
-                rel -> g
-              }.toMap
+              val newGens = publishGens(fs, path, tmpDir, m1, produced)
               // touched partitions that produced no output were fully
               // deleted: they leave the manifest (dirs reap after
               // readers drain); touched partitions' pending deltas were
@@ -3338,7 +3152,7 @@ object Layout {
             commitConflicts.incrementAndGet()
             lastConflict = reason // retry fresh
         }
-      } finally { fc.delete(new Path(tmpDir), true); () }
+      } finally { fs.delete(new Path(tmpDir), true); () }
     }
     throw new IllegalStateException(
       s"mergeManifest on $path: commit conflicted $maxAttempts times " +
@@ -3444,7 +3258,7 @@ object Layout {
                      maxTouchedPartitions: Int = 10000,
                      batchId: Long = -1L,
                      sinkId: String = ""): Boolean = {
-    val fc = fileContext(spark, path)
+    val fs = TableFs(spark, path)
     val maxAttempts = 3
     var attempt = 0
     var lastConflict = ""
@@ -3502,7 +3316,7 @@ object Layout {
           "split the batch or raise maxTouchedPartitions")
       val touchedRels = touchedRows.map(relOf(pcols, _)).toSet
       val tmpDir = uniqueTmpDir(path)
-      try withTmpHeartbeat(fc, tmpDir) {
+      try withTmpHeartbeat(fs, tmpDir) {
         val sch = manifestSchema(m0)
         // cast (validated lossless above) so the landed files carry
         // exactly the stored types
@@ -3512,14 +3326,14 @@ object Layout {
           .write.mode(SaveMode.Overwrite)
           .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
           .partitionBy(pcols: _*).parquet(tmpDir)
-        val produced = listPartitionRels(fc, new Path(tmpDir))
+        val produced = listPartitionRels(fs, new Path(tmpDir))
         val unexpected = produced.filterNot(touchedRels.contains)
         require(unexpected.isEmpty,
           s"appendManifest: writer produced partition dirs " +
             s"${unexpected.mkString(",")} outside the touched set — " +
             "partition rendering mismatch")
         val (deltaStats, deltaFileStats) = statsFromScan(spark, m0, tmpDir,
-          scanTmpTree(spark, fc, m0, tmpDir, produced))
+          scanTmpTree(spark, fs, m0, tmpDir, produced))
         val deltaBlooms = bloomsFor(spark, path, m0, Map.empty,
           srcDir = Some(tmpDir))
         val outcome: Either[String, Boolean] =
@@ -3531,13 +3345,7 @@ object Layout {
             else if (v1 != v0 && invariantsChanged(m0, m1).isDefined)
               Left(invariantsChanged(m0, m1).get)
             else {
-              val newGens = inParallel(produced) { rel =>
-                val g = nextGenOnDisk(fc, path, m1, rel)
-                val dst = new Path(s"$path/$rel/gen=$g")
-                mkdirsFast(fc, dst.getParent)
-                renameFresh(fc, new Path(s"$tmpDir/$rel"), dst)
-                rel -> g
-              }.toMap
+              val newGens = publishGens(fs, path, tmpDir, m1, produced)
               writeManifestMeta(spark, path, m1.copy(version = v1 + 1,
                 deltas = m1.deltas ++ newGens.map { case (rel, g) =>
                   rel -> (m1.deltas.getOrElse(rel, Nil) :+ g) },
@@ -3561,7 +3369,7 @@ object Layout {
             commitConflicts.incrementAndGet()
             lastConflict = reason
         }
-      } finally { fc.delete(new Path(tmpDir), true); () }
+      } finally { fs.delete(new Path(tmpDir), true); () }
     }
     throw new IllegalStateException(
       s"appendManifest on $path: commit conflicted $maxAttempts times " +
@@ -3577,7 +3385,7 @@ object Layout {
                          sinkId: String = ""): Boolean = {
     require(keys.nonEmpty, "mergeManifestDelta needs at least one key")
     require(!keys.contains(versionCol), "versionCol cannot be a key")
-    val fc = fileContext(spark, path)
+    val fs = TableFs(spark, path)
     val maxAttempts = 3
     var attempt = 0
     var lastConflict = ""
@@ -3690,7 +3498,7 @@ object Layout {
         }
       }
       val tmpDir = uniqueTmpDir(path)
-      try withTmpHeartbeat(fc, tmpDir) {
+      try withTmpHeartbeat(fs, tmpDir) {
         val del = deleteCol.map(col(_).cast("boolean")).getOrElse(lit(false))
         val sch = manifestSchema(m0)
         // record whether this batch carries ANY delete row — observed on
@@ -3710,7 +3518,7 @@ object Layout {
           .partitionBy(pcols: _*).parquet(tmpDir)
         val hasDeletes = deleteCol.nonEmpty &&
           Option(delObs.get("anydel")).contains(true)
-        val produced = listPartitionRels(fc, new Path(tmpDir))
+        val produced = listPartitionRels(fs, new Path(tmpDir))
         val unexpected = produced.filterNot(touchedRels.contains)
         require(unexpected.isEmpty,
           s"mergeManifestDelta: writer produced partition dirs " +
@@ -3720,7 +3528,7 @@ object Layout {
         // aggregate) — widened monotonically into the standing ones at
         // commit time
         val (deltaStats, deltaFileStats) = statsFromScan(spark, m0, tmpDir,
-          scanTmpTree(spark, fc, m0, tmpDir, produced))
+          scanTmpTree(spark, fs, m0, tmpDir, produced))
         val deltaBlooms = bloomsFor(spark, path, m0, Map.empty,
           srcDir = Some(tmpDir))
         val outcome: Either[String, Boolean] =
@@ -3732,13 +3540,7 @@ object Layout {
             else if (v1 != v0 && invariantsChanged(m0, m1).isDefined)
               Left(invariantsChanged(m0, m1).get)
             else {
-              val newDeltaGens = inParallel(produced) { rel =>
-                val g = nextGenOnDisk(fc, path, m1, rel)
-                val dst = new Path(s"$path/$rel/gen=$g")
-                mkdirsFast(fc, dst.getParent)
-                renameFresh(fc, new Path(s"$tmpDir/$rel"), dst)
-                rel -> g
-              }.toMap
+              val newDeltaGens = publishGens(fs, path, tmpDir, m1, produced)
               // widen against the LIVE stats (which already cover any
               // concurrently-landed deltas); the tiny local widen job
               // is bounded by the touched partition count
@@ -3769,7 +3571,7 @@ object Layout {
             commitConflicts.incrementAndGet()
             lastConflict = reason // retry fresh
         }
-      } finally { fc.delete(new Path(tmpDir), true); () }
+      } finally { fs.delete(new Path(tmpDir), true); () }
     }
     throw new IllegalStateException(
       s"mergeManifestDelta on $path: commit conflicted $maxAttempts " +
@@ -3821,10 +3623,10 @@ object Layout {
         specOfRel(rel) == m.partitionCols)
     if (rels.isEmpty) Nil
     else {
-      val fc = fileContext(spark, path)
+      val fs = TableFs(spark, path)
       val resolved = readResolved(spark, path, m, rels)
       val tmpDir = uniqueTmpDir(path)
-      try withTmpHeartbeat(fc, tmpDir) {
+      try withTmpHeartbeat(fs, tmpDir) {
         val obs = org.apache.spark.sql.Observation()
         val clustered = resolved.observe(obs, count(lit(1)).as("n"))
           .repartition(shufflePartitions(spark), m.partitionCols.map(col): _*)
@@ -3835,7 +3637,7 @@ object Layout {
           .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
           .partitionBy(m.partitionCols: _*).parquet(tmpDir)
         val n0 = obs.get("n").asInstanceOf[Long]
-        val produced = listPartitionRels(fc, new Path(tmpDir))
+        val produced = listPartitionRels(fs, new Path(tmpDir))
         val unexpected = produced.filterNot(rels.toSet)
         require(unexpected.isEmpty,
           s"foldManifestDeltas: writer produced partition dirs " +
@@ -3844,7 +3646,7 @@ object Layout {
         // published metadata from the written footers, before the
         // commit — the row-count verify reads parquet metadata, not
         // the data
-        val scan = scanTmpTree(spark, fc, m, tmpDir, produced)
+        val scan = scanTmpTree(spark, fs, m, tmpDir, produced)
         require(scan.rows == n0,
           s"delta fold would lose rows: $n0 -> ${scan.rows}; aborting")
         val (newStats, newFileStatsRaw) = statsFromScan(spark, m, tmpDir, scan)
@@ -3871,12 +3673,7 @@ object Layout {
           if (committable.isEmpty) Nil
           else {
             val producedCommit = produced.filter(committable.contains)
-            val newGens = inParallel(producedCommit) { rel =>
-              val g = nextGenOnDisk(fc, path, m1, rel)
-              renameFresh(fc, new Path(s"$tmpDir/$rel"),
-                new Path(s"$path/$rel/gen=$g"))
-              rel -> g
-            }.toMap
+            val newGens = publishGens(fs, path, tmpDir, m1, producedCommit)
             // survivors: deltas appended after this fold's snapshot
             val survivors = committable.map(rel =>
               rel -> m1.deltas.getOrElse(rel, Nil)
@@ -3918,7 +3715,7 @@ object Layout {
             producedCommit.sorted
           }
         }
-      } finally { fc.delete(new Path(tmpDir), true); () }
+      } finally { fs.delete(new Path(tmpDir), true); () }
     }
   }
 
@@ -3953,9 +3750,9 @@ object Layout {
     val allRels = (mFrom.entries.keySet ++ mFrom.deltas.keySet ++
       mTo.entries.keySet ++ mTo.deltas.keySet).toSeq.sorted
     val changed = allRels.filter(r => state(mFrom, r) != state(mTo, r))
-    val fc = fileContext(spark, path)
+    val fs = TableFs(spark, path)
     for (m <- Seq(mFrom, mTo); rel <- changed; g <- m.liveGens(rel))
-      require(fc.util.exists(new Path(s"$path/$rel/gen=$g")),
+      require(fs.exists(new Path(s"$path/$rel/gen=$g")),
         s"change feed over v$fromVersion..v$toVersion of $path needs " +
           s"$rel/gen=$g which is not on disk (reaped?); feeds only " +
           "reach retained generations")
@@ -4161,27 +3958,23 @@ object Layout {
     * `path`: the manifest version up to which that consumer has
     * ACKNOWLEDGED the feed. None = never consumed. */
   def readFeedCursor(spark: SparkSession, path: String,
-                     consumer: String): Option[Int] = {
-    val fc = fileContext(spark, path)
-    val p = feedCursorPath(path, consumer)
-    if (!fc.util.exists(p)) None
-    else Some(new String(readBytes(fc, p),
-      java.nio.charset.StandardCharsets.UTF_8).trim.toInt)
-  }
+                     consumer: String): Option[Int] =
+    TableFs(spark, path).readPointer(feedCursorPath(path, consumer))
+      .map(_.toInt)
 
   /** Every change-feed consumer of the table and its acked version
     * (the `_FEED.<name>` cursor files) — what [[reapManifest]] checks
     * before shrinking the retention window. */
   def feedConsumers(spark: SparkSession, path: String): Map[String, Int] = {
-    val fc = fileContext(spark, path)
-    fc.util.listStatus(new Path(path))
+    val fs = TableFs(spark, path)
+    fs.list(new Path(path))
       .filter(st => !st.isDirectory &&
         st.getPath.getName.startsWith("_FEED.") &&
         !st.getPath.getName.endsWith(".tmp"))
-      .map { st =>
-        st.getPath.getName.stripPrefix("_FEED.") ->
-          new String(readBytes(fc, st.getPath),
-            java.nio.charset.StandardCharsets.UTF_8).trim.toInt
+      .flatMap { st =>
+        // a cursor deleted since the listing is no consumer any more
+        fs.readPointer(st.getPath).map(v =>
+          st.getPath.getName.stripPrefix("_FEED.") -> v.toInt)
       }.toMap
   }
 
@@ -4195,12 +3988,8 @@ object Layout {
     require(prev.forall(_ <= version),
       s"feed cursor of '$consumer' on $path is at v${prev.get}; " +
         s"acking v$version would move it backwards")
-    val fc = fileContext(spark, path)
-    val cur = feedCursorPath(path, consumer)
-    val tmp = new Path(path, s"_FEED.$consumer.tmp")
-    writeFile(fc, tmp, version.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    atomicReplace(fc, tmp, cur)
+    TableFs(spark, path).publishPointer(feedCursorPath(path, consumer),
+      version)
   }
 
   /** Remove `consumer`'s cursor — an abandoned consumer, or the
@@ -4209,9 +3998,9 @@ object Layout {
     * Idempotent. */
   def deleteFeedCursor(spark: SparkSession, path: String,
                        consumer: String): Unit = {
-    val fc = fileContext(spark, path)
+    val fs = TableFs(spark, path)
     val p = feedCursorPath(path, consumer)
-    if (fc.util.exists(p)) { fc.delete(p, false); () }
+    if (fs.exists(p)) { fs.delete(p, false); () }
   }
 
   /** The next feed increment for `consumer`: `(frame, ackVersion)` —
@@ -4591,7 +4380,7 @@ object Layout {
     require(keepAgeMs >= 0L, "keepAgeMs must be >= 0 (0 = version-based)")
     val v = manifestVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"$path is not a manifest table"))
-    val fc = fileContext(spark, path)
+    val fs = TableFs(spark, path)
     // keepAgeMs > 0 additionally retains every version needed to
     // time-travel to ANY instant in the last keepAgeMs (the Delta
     // VACUUM retention posture, riding the publishedAtMs stamps): the
@@ -4650,7 +4439,7 @@ object Layout {
     // union of every retained version's referenced generations; a
     // version may already be gone (reaped earlier) — skip it
     val roots = (floor to v).flatMap { ver =>
-      if (!fc.util.exists(new Path(path, s"_MANIFEST.v$ver"))) None
+      if (!fs.exists(new Path(path, s"_MANIFEST.v$ver"))) None
       else Some(readManifestRoot(spark, path, ver))
     }
     val retained = roots.map { case (h, refs) =>
@@ -4659,7 +4448,7 @@ object Layout {
     val liveBucketFiles = roots.flatMap(_._2.map(_.file)).toSet
     val deleted = scala.collection.mutable.ArrayBuffer.empty[String]
     def walk(p: Path, rel: String): Unit = {
-      val kids = fc.util.listStatus(p).filter(_.isDirectory)
+      val kids = fs.list(p).filter(_.isDirectory)
       val genKids = kids.filter(_.getPath.getName.startsWith("gen="))
       val partKids = kids.filter(k => k.getPath.getName.contains("=") &&
         !k.getPath.getName.startsWith("gen="))
@@ -4674,16 +4463,16 @@ object Layout {
         if (live.nonEmpty)
           genKids.filterNot(k => live.contains(k.getPath.getName))
             .foreach { st =>
-              fc.delete(st.getPath, true)
+              fs.delete(st.getPath, true)
               deleted += s"$rel/${st.getPath.getName}"
             }
         else if (partKids.isEmpty) {
           // partition absent from every retained version (fully
           // deleted or never published): the whole chain goes
-          fc.delete(p, true)
+          fs.delete(p, true)
           deleted += rel
         } else genKids.foreach { st =>
-          fc.delete(st.getPath, true)
+          fs.delete(st.getPath, true)
           deleted += s"$rel/${st.getPath.getName}"
         }
       }
@@ -4691,14 +4480,14 @@ object Layout {
         walk(k.getPath, if (rel.isEmpty) k.getPath.getName
           else s"$rel/${k.getPath.getName}"))
     }
-    fc.util.listStatus(new Path(path))
+    fs.list(new Path(path))
       .filter(st => st.isDirectory && st.getPath.getName.contains("="))
       .foreach(st => walk(st.getPath, st.getPath.getName))
-    fc.util.listStatus(new Path(path)).foreach { st =>
+    fs.list(new Path(path)).foreach { st =>
       val n = st.getPath.getName
       if (!st.isDirectory && n.startsWith("_MANIFEST.v") &&
           n.drop(11).forall(_.isDigit) && n.drop(11).toInt < floor) {
-        fc.delete(st.getPath, false)
+        fs.delete(st.getPath, false)
         deleted += n
       }
       // content-addressed bucket children are shared across versions:
@@ -4706,7 +4495,7 @@ object Layout {
       // crashed publishes included)
       if (!st.isDirectory && n.startsWith("_MBUCKET.") &&
           n.endsWith(".json") && !liveBucketFiles.contains(n)) {
-        fc.delete(st.getPath, false)
+        fs.delete(st.getPath, false)
         deleted += n
       }
     }
@@ -4720,13 +4509,13 @@ object Layout {
     // its in-flight heartbeat, not by the root going quiet
     val tblName = new Path(path).getName
     val parent = new Path(path).getParent
-    if (parent != null && fc.util.exists(parent)) {
+    if (parent != null && fs.exists(parent)) {
       val cutoff = System.currentTimeMillis() - 3600L * 1000
-      fc.util.listStatus(parent).foreach { st =>
+      fs.list(parent).foreach { st =>
         val n = st.getPath.getName
         if (st.isDirectory && n.startsWith(s"$tblName.__manifest_tmp") &&
-            tmpTreeMtime(fc, st) < cutoff) {
-          fc.delete(st.getPath, true)
+            tmpTreeMtime(fs, st) < cutoff) {
+          fs.delete(st.getPath, true)
           deleted += n
         }
       }
@@ -4797,9 +4586,9 @@ object Layout {
         manifestSchema(m).fieldNames.contains),
       s"sort/zorder columns ${(sortCols ++ zorderCols).mkString(",")} " +
         "must be table columns")
-    val fc = fileContext(spark, path)
+    val fs = TableFs(spark, path)
     def dataFiles(rel: String, g: Int): Int =
-      fc.util.listStatus(new Path(s"$path/$rel/gen=$g"))
+      fs.list(new Path(s"$path/$rel/gen=$g"))
         .count(st => !st.isDirectory &&
           st.getPath.getName.startsWith("part-"))
     // selection listing on the bounded pool — O(partitions) latency-
@@ -4833,7 +4622,7 @@ object Layout {
       val base = readManifestRels(spark, path, m,
         selected.map(rel => rel -> m.entries(rel)).toMap)
       val tmpDir = uniqueTmpDir(path)
-      try withTmpHeartbeat(fc, tmpDir) {
+      try withTmpHeartbeat(fs, tmpDir) {
         val obs = org.apache.spark.sql.Observation()
         // the z key is computed BEFORE the observation/shuffle (per-row,
         // one boundary pass over the selected partitions only) and
@@ -4852,7 +4641,7 @@ object Layout {
           tmpDir, m.partitionCols, m.dataBucketCols, m.dataBuckets,
           sortTail = sortTail, dropCols = Seq("__z"))
         val n0 = obs.get("n").asInstanceOf[Long]
-        val produced = listPartitionRels(fc, new Path(tmpDir))
+        val produced = listPartitionRels(fs, new Path(tmpDir))
         val unexpected = produced.filterNot(selected.toSet)
         require(unexpected.isEmpty,
           s"compactManifest: writer produced partition dirs " +
@@ -4863,7 +4652,7 @@ object Layout {
         // turn disjoint, so file-granular skipping comes along free
         // (partition-level stats carry forward unchanged — the rewrite
         // is row-identical)
-        val scan = scanTmpTree(spark, fc, m, tmpDir, produced)
+        val scan = scanTmpTree(spark, fs, m, tmpDir, produced)
         require(scan.rows == n0,
           s"manifest compaction would lose rows: $n0 -> ${scan.rows}; " +
             "aborting")
@@ -4883,13 +4672,8 @@ object Layout {
             m1.entries.get(rel) == m.entries.get(rel)).toSet
           if (committable.isEmpty) Nil
           else {
-            val newGens = inParallel(produced.filter(committable)) { rel =>
-              // collision-free above manifest and disk
-              val g = nextGenOnDisk(fc, path, m1, rel)
-              renameFresh(fc, new Path(s"$tmpDir/$rel"),
-                new Path(s"$path/$rel/gen=$g"))
-              rel -> g
-            }.toMap
+            val newGens = publishGens(fs, path, tmpDir, m1,
+              produced.filter(committable))
             // row-identical rewrite: stats carry forward unchanged, but
             // the FILES changed — bytes recompute for rewritten rels,
             // and per-file entries replace the old BASE generation's
@@ -4913,7 +4697,7 @@ object Layout {
             newGens.keys.toSeq.sorted
           }
         }
-      } finally { fc.delete(new Path(tmpDir), true); () }
+      } finally { fs.delete(new Path(tmpDir), true); () }
     }
   }
 
@@ -5049,7 +4833,7 @@ object Layout {
                                 sortCols: Seq[String] = Nil): Seq[String] = {
     require(maxPartitions >= 1,
       "migrateManifestPartitions needs a positive partition budget")
-    val fc = fileContext(spark, path)
+    val fs = TableFs(spark, path)
     val maxAttempts = 3
     var attempt = 0
     var lastConflict = ""
@@ -5104,13 +4888,13 @@ object Layout {
       val src = readResolved(spark, path, m0,
         (pick ++ baseRels).distinct.sorted)
       val tmpDir = uniqueTmpDir(path)
-      try withTmpHeartbeat(fc, tmpDir) {
+      try withTmpHeartbeat(fs, tmpDir) {
         val obs = org.apache.spark.sql.Observation()
         clusteredWrite(spark, src.observe(obs, count(lit(1)).as("n")),
           tmpDir, pcols, m0.dataBucketCols, m0.dataBuckets,
           sortTail = sortCols.map(col))
         val n0 = obs.get("n").asInstanceOf[Long]
-        val produced = listPartitionRels(fc, new Path(tmpDir))
+        val produced = listPartitionRels(fs, new Path(tmpDir))
         val expected = (landing ++ baseRels).toSet
         val unexpected = produced.filterNot(expected.contains)
         require(unexpected.isEmpty,
@@ -5119,7 +4903,7 @@ object Layout {
             "partition rendering mismatch")
         // derive published metadata from the written footers BEFORE the
         // commit; the row-count verify is parquet metadata, no rescan
-        val scan = scanTmpTree(spark, fc, m0, tmpDir, produced)
+        val scan = scanTmpTree(spark, fs, m0, tmpDir, produced)
         require(scan.rows == n0,
           s"migration would lose rows: $n0 -> ${scan.rows}; aborting")
         val (newStats, newFileStats) = statsFromScan(spark, m0, tmpDir, scan)
@@ -5140,13 +4924,7 @@ object Layout {
               Left(s"concurrent commit moved touched partition(s) " +
                 touchedMoved.take(5).mkString(", "))
             else {
-              val newGens = inParallel(produced) { rel =>
-                val g = nextGenOnDisk(fc, path, m1, rel)
-                mkdirsFast(fc, new Path(s"$path/$rel"))
-                renameFresh(fc, new Path(s"$tmpDir/$rel"),
-                  new Path(s"$path/$rel/gen=$g"))
-                rel -> g
-              }.toMap
+              val newGens = publishGens(fs, path, tmpDir, m1, produced)
               // picked old-era partitions leave the manifest wholesale
               // (their rows live in the produced current-spec gens);
               // fully-deleted landing partitions (no output) leave too
@@ -5174,7 +4952,7 @@ object Layout {
             commitConflicts.incrementAndGet()
             lastConflict = reason // retry fresh
         }
-      } finally { fc.delete(new Path(tmpDir), true); () }
+      } finally { fs.delete(new Path(tmpDir), true); () }
     }
     throw new IllegalStateException(
       s"migrateManifestPartitions on $path: commit conflicted " +
@@ -5274,7 +5052,7 @@ object Layout {
         "is directory-encoded, not in the files a bucketed scan " +
         "hashes; change the bucket layout in the same call " +
         "(newBucketCols/newBuckets)")
-    val fc = fileContext(spark, path)
+    val fs = TableFs(spark, path)
     // the full resolved snapshot — a repartition is a whole-table
     // rewrite by definition, so pending deltas fold in for free
     val all = readResolved(spark, path, m, m.allRels)
@@ -5283,34 +5061,26 @@ object Layout {
     val ddl = org.apache.spark.sql.types.StructType(
       dataCols ++ newPartitionCols.map(sch(_))).toDDL
     val tmpDir = s"$path.__manifest_tmp"
-    fc.delete(new Path(tmpDir), true)
+    fs.delete(new Path(tmpDir), true)
     val obs = org.apache.spark.sql.Observation()
     clusteredWrite(spark, all.observe(obs, count(lit(1)).as("n")),
       tmpDir, newPartitionCols, tgtBucketCols, tgtBuckets,
       sortTail = sortCols.map(col))
     val n0 = obs.get("n").asInstanceOf[Long]
-    val produced = listPartitionRels(fc, new Path(tmpDir))
+    val produced = listPartitionRels(fs, new Path(tmpDir))
     // a full rewrite lands every row under the new spec: prior eras are
     // fully migrated, so the spec history clears
     val m2 = m.copy(schemaDdl = ddl, partitionCols = newPartitionCols,
       specHistory = Nil,
       dataBucketCols = tgtBucketCols, dataBuckets = tgtBuckets)
-    val scan = scanTmpTree(spark, fc, m2, tmpDir, produced)
+    val scan = scanTmpTree(spark, fs, m2, tmpDir, produced)
     require(scan.rows == n0,
       s"repartition would lose rows: $n0 -> ${scan.rows}; aborting")
     val (newStats, newFileStats) = statsFromScan(spark, m2, tmpDir, scan)
     val newBlooms = bloomsFor(spark, path, m2, Map.empty,
       srcDir = Some(tmpDir))
     val newBytes = scan.bytes
-    val newGens = inParallel(produced) { rel =>
-      // collision-free above manifest and disk (nextGenOnDisk): a
-      // repartition BACK to a previous scheme lands beside dirs that
-      // retained old versions still reference — never sweep them
-      val g = nextGenOnDisk(fc, path, m, rel)
-      mkdirsFast(fc, new Path(s"$path/$rel"))
-      renameFresh(fc, new Path(s"$tmpDir/$rel"), new Path(s"$path/$rel/gen=$g"))
-      rel -> g
-    }.toMap
+    val newGens = publishGens(fs, path, tmpDir, m, produced)
     // the new manifest references ONLY the new-scheme generations; old
     // snapshots keep referencing theirs until retention drops them
     writeManifestMeta(spark, path, m2.copy(version = v + 1,
@@ -5319,7 +5089,7 @@ object Layout {
       fileStats = genKeyedFileStats(newFileStats, newGens),
       deltas = Map.empty,
       op = "repartition", opDeletes = false))
-    fc.delete(new Path(tmpDir), true)
+    fs.delete(new Path(tmpDir), true)
     newGens.size
   }
 
@@ -5469,12 +5239,8 @@ object Layout {
     else sortedWrite(before, tmp, cols, numFiles = numFiles)
     val n1 = spark.read.parquet(tmp).count()
     require(n1 == n0, s"re-cluster would lose rows: $n0 -> $n1; aborting")
-    val fc = fileContext(spark, path)
-    val aside = new Path(s"$path.__cluster_old")
-    if (fc.util.exists(aside)) fc.delete(aside, true) // crashed prior run
-    renameFresh(fc, new Path(path), aside)
-    renameFresh(fc, new Path(tmp), new Path(path))
-    fc.delete(aside, true)
+    TableFs(spark, path).swapDir(new Path(tmp), new Path(path),
+      new Path(s"$path.__cluster_old"))
     n1
   }
 }

@@ -1,0 +1,184 @@
+package graft.operators
+
+import java.net.URI
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException,
+  Paths, StandardCopyOption, StandardOpenOption}
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileStatus, Path}
+import org.apache.hadoop.fs.Options.{CreateOpts, Rename}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.SparkSession
+
+/** The filesystem under one table: every metadata operation of
+  * [[Layout]], [[AnnIndex]] and [[Ivm]] goes through here, and the
+  * local-or-remote decision is made once, at construction
+  * ([[TableFs.isLocal]]).
+  *
+  * On local disk the mutating primitives go straight to java.nio.
+  * Without the native hadoop library the Hadoop local filesystem forks
+  * a process on exactly the ops a publish runs per partition dir —
+  * mkdir/create-with-permission fork `chmod`, FileContext.rename loads
+  * permissions through a forked `ls -ld` (FsProbe: fc.mkdir 4.5 ms,
+  * fc.rename 13.8 ms, vs 0.03 ms for the same mkdir(2)/rename(2) via
+  * nio) — and its writes leave `.crc` sidecars. Any other scheme keeps
+  * FileContext: on HDFS/object stores the ops are RPCs (no forking)
+  * and FileContext's semantics are required. Listing, existence,
+  * status and delete use FileContext everywhere (they do not fork).
+  *
+  * On top of the primitives sit the three disciplines the table
+  * layouts share: integer pointer files ([[readPointer]] /
+  * [[publishPointer]]), the rename-aside directory swap ([[swapDir]]),
+  * and (in [[Layout]]) the generation publish.
+  */
+private[operators] final class TableFs private (conf: Configuration,
+                                                fc: FileContext,
+                                                val local: Boolean) {
+
+  private def nio(p: Path): java.nio.file.Path = Paths.get(p.toUri.getPath)
+
+  def exists(p: Path): Boolean = fc.util.exists(p)
+  def list(p: Path): Array[FileStatus] = fc.util.listStatus(p)
+  def status(p: Path): FileStatus = fc.getFileStatus(p)
+  def delete(p: Path, recursive: Boolean): Boolean = fc.delete(p, recursive)
+
+  /** Set `p`'s mtime to now (a lease or tmp-tree heartbeat). */
+  def touch(p: Path): Unit = fc.setTimes(p, System.currentTimeMillis(), -1)
+
+  /** Create `p` and any missing parents; an existing dir is fine. */
+  def mkdirs(p: Path): Unit =
+    if (local) { Files.createDirectories(nio(p)); () }
+    else fc.mkdir(p, FsPermission.getDirDefault, true)
+
+  /** Move `src` to `dst`, failing when `dst` exists (nio throws
+    * FileAlreadyExistsException exactly where fc.rename with
+    * Rename.NONE throws). Both paths must lie on this table's
+    * filesystem: the local branch is a plain `Files.move`, which would
+    * silently degrade to copy+delete across filesystems. */
+  def rename(src: Path, dst: Path): Unit =
+    if (local) { Files.move(nio(src), nio(dst)); () }
+    else fc.rename(src, dst)
+
+  /** Atomically replace `dst` with `tmp`. Hadoop's `Rename.OVERWRITE`
+    * is delete-then-rename on several filesystems (RawLocal included),
+    * a reader-visible absence window that ConcStressProbe caught
+    * readers falling into; on local disk nio's ATOMIC_MOVE is one
+    * rename(2), no window at all. Remote filesystems keep the Hadoop
+    * rename (HDFS's is atomic server-side) with the readers' mid-swap
+    * retry as the backstop. */
+  def replace(tmp: Path, dst: Path): Unit =
+    if (local) {
+      Files.move(nio(tmp), nio(dst), StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+      ()
+    } else fc.rename(tmp, dst, Rename.OVERWRITE)
+
+  /** Atomically create `p` (parents included) holding `content`; false
+    * when it already exists or the create fails. Hadoop's local
+    * `create(CREATE)` is check-then-create — NOT exclusive: two racing
+    * acquirers can both "win" (ConcStressProbe at 7 contending threads)
+    * — so local disk uses nio's O_EXCL `CREATE_NEW`. HDFS-like
+    * filesystems get exclusivity from the namenode via CREATE; object
+    * stores without atomic create keep the documented manual-remedy
+    * caveat of the lease. */
+  def createExclusive(p: Path, content: String): Boolean =
+    if (local) {
+      try {
+        val np = nio(p)
+        Option(np.getParent).foreach(Files.createDirectories(_))
+        Files.write(np, content.getBytes(UTF_8),
+          StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+        true
+      } catch {
+        case _: FileAlreadyExistsException => false
+        case _: java.io.IOException => false
+      }
+    } else {
+      try {
+        val out = fc.create(p, java.util.EnumSet.of(CreateFlag.CREATE),
+          CreateOpts.createParent())
+        // the create alone IS the claim; an IO error writing the owner
+        // info must not leak the file and wedge the table
+        try {
+          try out.write(content.getBytes(UTF_8)) finally out.close()
+          true
+        } catch { case _: java.io.IOException =>
+          if (fc.util.exists(p)) fc.delete(p, false); false
+        }
+      } catch { case _: java.io.IOException => false }
+    }
+
+  def readBytes(p: Path): Array[Byte] =
+    if (local) Files.readAllBytes(nio(p))
+    else { val in = fc.open(p); try in.readAllBytes() finally in.close() }
+
+  /** Create-or-truncate `p` (parents included) with `bytes`. */
+  def writeBytes(p: Path, bytes: Array[Byte]): Unit =
+    if (local) {
+      val np = nio(p)
+      Option(np.getParent).foreach(Files.createDirectories(_))
+      Files.write(np, bytes)
+      ()
+    } else {
+      val out = fc.create(p,
+        java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE),
+        CreateOpts.createParent())
+      try out.write(bytes) finally out.close()
+    }
+
+  /** A parquet footer reader's input: nio on local disk skips the
+    * Hadoop stream stack (FsProbe: 9.3 → 6.8 ms per footer open). */
+  def inputFile(p: Path): org.apache.parquet.io.InputFile =
+    if (local) new org.apache.parquet.io.LocalInputFile(nio(p))
+    else org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf)
+
+  /** The integer a pointer file holds, or None when it does not exist. */
+  def readPointer(p: Path): Option[Long] =
+    try Some(new String(readBytes(p), UTF_8).trim.toLong)
+    catch {
+      case _: NoSuchFileException | _: java.io.FileNotFoundException => None
+    }
+
+  /** Publish `v` into pointer file `p`: write `<p>.tmp`, then
+    * [[replace]] — a reader resolves the old value or the new one,
+    * never a torn write. */
+  def publishPointer(p: Path, v: Long): Unit = {
+    val tmp = new Path(p.getParent, s"${p.getName}.tmp")
+    writeBytes(tmp, v.toString.getBytes(UTF_8))
+    replace(tmp, p)
+  }
+
+  /** Rename-aside swap of directory `src` into `dst` (which may not
+    * exist yet): the old `dst` moves to `aside`, `src` moves in, the
+    * aside deletes last. Each rename is atomic; a reader between them
+    * sees `dst` missing (maintenance-window semantics). A prior run
+    * that died between its two renames left `aside` as the only copy
+    * of `dst`: it is restored before anything else, never deleted as
+    * stale. */
+  def swapDir(src: Path, dst: Path, aside: Path): Unit = {
+    if (exists(aside) && !exists(dst)) rename(aside, dst)
+    if (exists(aside)) delete(aside, true)
+    if (exists(dst)) rename(dst, aside)
+    mkdirs(dst.getParent)
+    rename(src, dst)
+    if (exists(aside)) delete(aside, true)
+  }
+}
+
+private[operators] object TableFs {
+
+  def apply(spark: SparkSession, path: String): TableFs = {
+    val conf = spark.sessionState.newHadoopConf()
+    val uri = new Path(path).toUri
+    // a scheme-less path resolves against fs.defaultFS here
+    val fc = FileContext.getFileContext(uri, conf)
+    new TableFs(conf, fc, isLocal(uri, fc.getDefaultFileSystem.getUri))
+  }
+
+  /** THE locality rule: a path is local iff its scheme — or, when it
+    * has none, the default filesystem's — is `file`. A scheme-less
+    * `/x` under an `hdfs://` default FS is remote. */
+  def isLocal(path: URI, defaultFs: URI): Boolean =
+    Option(path.getScheme).getOrElse(defaultFs.getScheme) == "file"
+}

@@ -152,6 +152,26 @@ class OperatorsSpec extends SparkSpec {
     assert(kept.contains(all.min)) // the smallest id can never be dropped
   }
 
+  test("minhash dedup catches a planted one-word-edit near-duplicate pair") {
+    // two 50-word docs differing in word 12: word 3-shingle Jaccard
+    // 45/51 = 0.88, so 16x4 bands miss them with probability ~1e-6.
+    // Hash coefficients linear in the hash index made the 64 hashes
+    // correlated, and this pair shared no band
+    import spark.implicits._
+    val base = ("w19778 w16460 w8052 w6807 w9458 w15080 w18965 w938 " +
+      "w1767 w1358 w5175 w12051 w12791 w82 w15611 w12501 w14024 w14531 " +
+      "w10220 w14457 w12207 w6584 w7610 w14176 w12667 w7259 w11544 w9024 " +
+      "w8678 w10820 w15770 w18647 w14926 w13227 w4455 w16839 w12209 " +
+      "w12338 w934 w7675 w10899 w11479 w578 w12057 w2784 w14924 w17199 " +
+      "w8616 w3166 w15513").split(" ")
+    val dup = base.updated(12, "w14222")
+    val pair = Seq((609L, base.mkString(" ")), (610L, dup.mkString(" ")))
+      .toDF("id", "text")
+    val kept = Dedup.minhashDedup(pair, "id", "text")
+      .collect().map(_.getLong(0)).toSet
+    assert(kept == Set(609L))
+  }
+
   test("TolerantMapper: under-limit errors drop rows; at-limit aborts the step") {
     val schema = StructType(Seq(StructField("doc_id", LongType)))
     val failOdd: Row => Row = r => {
