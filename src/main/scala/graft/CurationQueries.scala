@@ -406,8 +406,8 @@ object CurationQueries {
     // ~k²/2 pairs, so at boilerplate-heavy web density c07's pair input
     // hits a quadratic wall no prefix filter can prune (measured: the
     // exact family stopped at 40 min on the 100x dup-dense config the
-    // banded form finishes in ~21 s — NOTES.md round 5, re-measured by
-    // C08Probe for the intake). Here the banded pre-collapse drops
+    // banded form finishes in ~21 s — NOTES.md round 5, re-measured for
+    // the intake in NOTES.md round 6). Here the banded pre-collapse drops
     // near-identical copies FIRST (verified star edges, O(bucket) per
     // bucket — linear at any density), and the exact closure + the
     // leakage-safe split run on the bounded-density survivors. This is
@@ -457,7 +457,7 @@ object CurationQueries {
     * (doc_id, lang, source, bin) table; calibration thresholds,
     * temperature rates, and the mix filter all read those pinned rows
     * instead of re-deriving the intake (which re-scanned + re-scored
-    * the wide text column per consumer — C07Probe attribution). Wide
+    * the wide text column per consumer — NOTES.md c07 attribution). Wide
     * rows stay UNPINNED, by measurement: the round-8 A/B showed
     * caching full document rows doubled the query; a 4-column bin
     * table is the opposite case. Arithmetic is byte-identical to

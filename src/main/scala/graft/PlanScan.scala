@@ -26,7 +26,7 @@ object PlanScan {
   /** Every FileSourceScanExec in an EXECUTED plan, walking THROUGH the
     * adaptive wrappers (AdaptiveSparkPlanExec / QueryStageExec report
     * no children) — the one traversal every scan-metric assertion
-    * (gates m60/m62/m64, DppProbe) shares. */
+    * (gates m60/m62/m64) shares. */
   def fileScans(p: org.apache.spark.sql.execution.SparkPlan):
       Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {
     case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>

@@ -346,7 +346,7 @@ object RelationalQueries {
     // Skew-salted equi-join; result identical to the plain join (the
     // oracle), each key's rows spread over 8 reducers. The manual fix
     // for hot keys whose compressed bytes evade AQE's skew detection
-    // (the T17Probe finding) when their decompressed row count is the
+    // (the NOTES.md round-6 finding) when their decompressed row count is the
     // real bottleneck.
     "q43_salted_join" -> ((s, dir) => {
       graft.operators.Relational.saltedJoin(

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   *  - WINDOWED AGG (the in-state-store twin of m41/m42's fold; the
   *    m42 lift itself is foreachBatch + Ivm, whose "state" is the
   *    on-disk summary — bounded by |summary| by construction and
-  *    measured by IvmProbe, not the state store): tumbling-window
+  *    measured in NOTES.md, not the state store): tumbling-window
   *    groupBy agg under a watermark. Expected: plateau at ~(windows
   *    open inside the horizon) x keys.
   *

@@ -244,19 +244,22 @@ case class SimHash64(child: Expression)
     copy(child = newChild)
 }
 
-/** MinHash signature over PRE-HASHED shingles (array<long>): same
-  * universal-hash scheme as [[MinHashSignature]] but the base value is
-  * the 64-bit shingle hash folded into [0, p) instead of a murmur3 of
-  * the string — for pipelines that carry 8-byte shingle hashes through
-  * the shuffle instead of the strings (the at-scale layout).
+/** The MinHash core of [[MinHashSignature]] and
+  * [[MinHashSignatureHashed]]: `numHashes` minima of universal hashes
+  * h_i(x) = (a_i*x + b_i) mod p over a base value in [0, p) per
+  * non-null array element ([[base]]). One pass over the array;
+  * O(elements * numHashes) with zero allocation beyond the signature.
   */
-case class MinHashSignatureHashed(child: Expression, numHashes: Int, seed: Long)
-    extends UnaryExpression {
+sealed abstract class MinHashCore extends UnaryExpression {
+  def numHashes: Int
+  def seed: Long
 
-  private val Prime = 2147483647L // 2^31 - 1, Mersenne
+  protected final val Prime = 2147483647L // 2^31 - 1, Mersenne
+
+  /** Element `k` of `xs` (non-null) mapped into [0, p). */
+  protected def base(xs: ArrayData, k: Int): Long
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_signature_hashed"
 
   /** (a_i, b_i) from splitmix64 draws over (seed, i). Coefficients
     * linear in `i` correlate the hash functions, and the LSH bands
@@ -275,18 +278,20 @@ case class MinHashSignatureHashed(child: Expression, numHashes: Int, seed: Long)
     (as, bs)
   }
 
-  def compute(hashes: ArrayData): ArrayData = {
+  def compute(xs: ArrayData): ArrayData = {
     val (as, bs) = coeffs
-    val n = hashes.numElements()
+    val n = xs.numElements()
     val mins = Array.fill(numHashes)(Long.MaxValue)
     var k = 0
     while (k < n) {
-      val base = math.floorMod(hashes.getLong(k), Prime)
-      var i = 0
-      while (i < numHashes) {
-        val v = (base * as(i) + bs(i)) % Prime
-        if (v < mins(i)) mins(i) = v
-        i += 1
+      if (!xs.isNullAt(k)) {
+        val b = base(xs, k)
+        var i = 0
+        while (i < numHashes) {
+          val v = (b * as(i) + bs(i)) % Prime
+          if (v < mins(i)) mins(i) = v
+          i += 1
+        }
       }
       k += 1
     }
@@ -297,10 +302,24 @@ case class MinHashSignatureHashed(child: Expression, numHashes: Int, seed: Long)
     compute(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("mhhExpr", this, classOf[MinHashSignatureHashed].getName)
+    val ref = ctx.addReferenceObj("mhExpr", this, classOf[MinHashCore].getName)
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.compute($c);")
   }
+}
+
+/** MinHash signature over PRE-HASHED shingles (array<long>): the base
+  * value is the 64-bit shingle hash folded into [0, p) — for pipelines
+  * that carry 8-byte shingle hashes through the shuffle instead of the
+  * strings (the at-scale layout).
+  */
+case class MinHashSignatureHashed(child: Expression, numHashes: Int, seed: Long)
+    extends MinHashCore {
+
+  override def prettyName: String = "minhash_signature_hashed"
+
+  override protected def base(xs: ArrayData, k: Int): Long =
+    math.floorMod(xs.getLong(k), Prime)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -397,62 +416,19 @@ case class PolySimHash60(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** MinHash signature over a shingle array: `numHashes` minima of
-  * universal hashes h_i(x) = (a_i*x + b_i) mod p over a murmur3 base hash
-  * of each shingle (identical to `functions.hash`, seed 42). One pass
-  * over the shingles; O(shingles * numHashes) with zero allocation
-  * beyond the signature itself.
+/** MinHash signature over a shingle array: each non-null shingle's
+  * base value is its murmur3 hash (identical to `functions.hash`, seed
+  * 42) shifted into [0, 2^32) — so it equals [[MinHashSignatureHashed]]
+  * over `cast(hash(x) as bigint) + 2147483648`.
   */
 case class MinHashSignature(child: Expression, numHashes: Int, seed: Long)
-    extends UnaryExpression {
+    extends MinHashCore {
 
-  private val Prime = 2147483647L // 2^31 - 1, Mersenne
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_signature"
 
-  @transient private lazy val coeffs: (Array[Long], Array[Long]) = {
-    val as = new Array[Long](numHashes); val bs = new Array[Long](numHashes)
-    var i = 0
-    while (i < numHashes) {
-      as(i) = 1L + 2L * math.floorMod(
-        seed * 0x9E3779B97F4A7C15L + i.toLong * 0xBF58476D1CE4E5B9L, Prime / 2 - 1)
-      bs(i) = math.floorMod(
-        seed * 0x94D049BB133111EBL + i.toLong * 0xD6E8FEB86659FD93L, Prime)
-      i += 1
-    }
-    (as, bs)
-  }
-
-  def compute(shingles: ArrayData): ArrayData = {
-    val (as, bs) = coeffs
-    val n = shingles.numElements()
-    val mins = Array.fill(numHashes)(Long.MaxValue)
-    var k = 0
-    while (k < n) {
-      if (!shingles.isNullAt(k)) {
-        val m = Murmur3HashFunction.hash(shingles.getUTF8String(k), StringType, 42L).toInt
-        val base = (m.toLong + 2147483648L) % Prime
-        var i = 0
-        while (i < numHashes) {
-          val v = (base * as(i) + bs(i)) % Prime
-          if (v < mins(i)) mins(i) = v
-          i += 1
-        }
-      }
-      k += 1
-    }
-    new GenericArrayData(mins)
-  }
-
-  override protected def nullSafeEval(input: Any): Any =
-    compute(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("mhExpr", this, classOf[MinHashSignature].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.compute($c);")
-  }
+  override protected def base(xs: ArrayData, k: Int): Long =
+    (Murmur3HashFunction.hash(xs.getUTF8String(k), StringType, 42L).toInt
+      .toLong + 2147483648L) % Prime
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * deserialization (only the map travels). Eviction choice is
   * identical to a full min scan: smallest count, then smallest key —
   * the heap comparator IS that order, so results are bit-identical to
-  * the previous linear-scan form (SketchProbe measured the scan form
+  * the previous linear-scan form (NOTES.md measured the scan form
   * ~4x slower than the exact groupBy it replaces at 2M cold keys —
   * 2M evictions x a 4096-entry scan; the heap removes that wall).
   */

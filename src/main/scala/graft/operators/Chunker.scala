@@ -51,7 +51,7 @@ object Chunker {
     * Shuffle shape: ownership agg on the 8-byte tile hash (partial agg
     * collapses hot boilerplate tiles map-side), join back on the hash
     * (tile-side skew is AQE-splittable — the t08 rationale; see
-    * T17Probe for the measured skew-split evidence), one reconstruct
+    * NOTES.md round 6 for the measured skew-split evidence), one reconstruct
     * agg on doc id. Tile TEXT never enters the ownership shuffle.
     */
   def removeRepeatedSpans(

@@ -161,7 +161,7 @@ object Dedup {
     * verify joins move 8-byte shingle hashes. No index rows are ever
     * dropped — the operator returns batch survivors only.
     *
-    * Density contract (measured, D14Probe): the index must be
+    * Density contract (measured, NOTES.md): the index must be
     * INTERNALLY deduped — which production guarantees by construction,
     * because the index is exactly the accumulated survivor set. Then
     * bucket sizes are bounded by (batch-local dups + 1 index witness)

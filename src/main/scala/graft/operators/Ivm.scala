@@ -201,7 +201,7 @@ object Ivm {
     * Under it, windows the manifest provenance proves delete- and
     * rewrite-free fold through [[Layout.appendsBetween]] — reading
     * only the appended generation dirs, ~10x cheaper per sync than the
-    * snapshot diff, widening with table size (FeedProbe) — while
+    * snapshot diff, widening with table size (NOTES.md) — while
     * rewrite-bearing windows still take the always-correct
     * [[Layout.manifestChanges]] diff. The assertion is required
     * because a delta that UPDATES a key is indistinguishable from a
@@ -244,7 +244,7 @@ object Ivm {
         // double-count the key (the changes diff retracts the old row;
         // raw delta files cannot). With the assertion AND a provably
         // clean window, the fold reads only the appended generation
-        // dirs — never resolving or diffing snapshots (FeedProbe: ~10x
+        // dirs — never resolving or diffing snapshots (NOTES.md: ~10x
         // per increment, widening with table size); sketch columns are
         // safe there by construction (nothing to retract). Windows
         // with rewrites fall back to the changes diff regardless.

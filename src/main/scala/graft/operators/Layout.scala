@@ -215,6 +215,9 @@ object Layout {
               partitionCols: Seq[String] = Nil): (Long, Long) =
       withMaintenanceLock(spark, path) {
     requireNotManifest(spark, path, "compact")
+    val fs = TableFs(spark, path)
+    val aside = new Path(s"$path.__compact_old")
+    fs.restoreAside(new Path(path), aside)
     val before = spark.read.parquet(path)
     val filesBefore = before.inputFiles.length.toLong
     val tmp = s"$path.__compact_tmp"
@@ -238,8 +241,7 @@ object Layout {
     // via rename-aside; the window between the two renames is the
     // documented maintenance-window semantics (a table format/manifest
     // is the cure where concurrent readers must never miss the listing)
-    TableFs(spark, path).swapDir(new Path(tmp), new Path(path),
-      new Path(s"$path.__compact_old"))
+    fs.swapDir(new Path(tmp), new Path(path), aside)
     val filesAfter = spark.read.parquet(path).inputFiles.length.toLong
     (filesBefore, filesAfter)
   }
@@ -270,8 +272,9 @@ object Layout {
     * partition-moving updates use the unpartitioned full-table merge. The touched-value list
     * is a driver-side collect bounded by the partition count of the
     * BATCH (capped at `maxTouchedPartitions`, not corpus-scale). The
-    * merge itself is one hash shuffle on `keys` (the dedup window),
-    * swapped in via the same rename-aside discipline as [[compact]].
+    * merge itself is one hash shuffle on (partition columns, `keys`)
+    * (the [[latestWins]] window), swapped in via the same rename-aside
+    * discipline as [[compact]].
     *
     * Reference behavior: pydin's `Insert`/HWM ingest appends by window
     * (models.py:1330-1420); merge is the upsert completion of that
@@ -294,11 +297,12 @@ object Layout {
     val fs = TableFs(spark, path)
     if (partitionCols.isEmpty) {
       val tmpDir = s"$path.__merge_tmp"
-      latestWins(spark.read.parquet(path), updates, keys, versionCol,
+      val aside = new Path(s"$path.__merge_old")
+      fs.restoreAside(new Path(path), aside)
+      latestWins(spark.read.parquet(path), updates, Nil, keys, versionCol,
           deleteCol)
         .write.mode(SaveMode.Overwrite).parquet(tmpDir)
-      fs.swapDir(new Path(tmpDir), new Path(path),
-        new Path(s"$path.__merge_old"))
+      fs.swapDir(new Path(tmpDir), new Path(path), aside)
     } else {
       import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
       // touched partition values: bounded by the BATCH's partitions.
@@ -332,8 +336,7 @@ object Layout {
       // of a touched partition — scanning without it would drop its rows
       touchedRels.foreach { rel =>
         val dst = new Path(path, rel)
-        if (!fs.exists(dst) && fs.exists(asideOf(dst)))
-          fs.rename(asideOf(dst), dst)
+        fs.restoreAside(dst, asideOf(dst))
       }
       // prune the base scan to the touched partitions only — this
       // predicate hits the partition directories, not the data
@@ -344,7 +347,7 @@ object Layout {
       }.reduceOption(_ || _).getOrElse(lit(false))
       val tmpDir = s"$path.__merge_tmp"
       latestWins(spark.read.parquet(path).filter(touchedPred), updates,
-          keys, versionCol, deleteCol)
+          partitionCols, keys, versionCol, deleteCol)
         .write.mode(SaveMode.Overwrite)
         .partitionBy(partitionCols: _*).parquet(tmpDir)
       // swap each touched partition dir; untouched dirs are never read
@@ -384,28 +387,30 @@ object Layout {
     }
   }
 
-  /** Latest-wins key resolution shared by [[merge]] and [[mergeGen]]:
-    * version desc, then update-side-wins on ties. The window partitions
-    * on the full key, so this is ONE shuffle that also co-locates
-    * everything the rewrite needs. With `deleteCol` (CDC apply): a
-    * winning row whose flag is true REMOVES the key.
-    */
-  /** `clusterCols`/`clusterParts` (the partitioned-merge fast path):
-    * hash-repartition the tagged union by the table's partition
-    * columns BEFORE the window, and partition the window by
-    * (clusterCols ++ keys). Because a key's partition values are
-    * immutable under the merge contract (the same invariant
-    * [[resolveMor]] already relies on), the per-key groups — and so the
-    * winners — are identical; but HashPartitioning(clusterCols)
-    * satisfies ClusteredDistribution(clusterCols ++ keys), so the
-    * window adds NO second exchange and the caller can write
-    * partition-clustered output directly: ONE shuffle of the merged
-    * data instead of two (optimization guide §2.4). */
-  private def latestWins(b: DataFrame, u: DataFrame, keys: Seq[String],
+  /** Latest-wins key resolution of every copy-on-write merge route
+    * ([[merge]], [[mergeGen]], [[mergeManifest]]) — the same contract
+    * as the merge-on-read [[resolveMor]]. The window partitions by
+    * (`pcols` ++ `keys`), `pcols` being the table's partition columns
+    * (Nil when unpartitioned): a row is the same key only within one
+    * partition, so an update that breaks the "keys never move
+    * partitions" contract yields the same rows on every route. Within
+    * a group: version desc, then update-side-wins on ties. With
+    * `deleteCol` (CDC apply): a winning row whose flag is true REMOVES
+    * the key.
+    *
+    * `clusterParts` > 0 (the partitioned-merge fast path) hash-
+    * repartitions the tagged union by `pcols` into that many partitions
+    * BEFORE the window. HashPartitioning(pcols) satisfies the window's
+    * ClusteredDistribution(pcols ++ keys), so the window adds NO second
+    * exchange and the caller can write partition-clustered output
+    * directly: ONE shuffle of the merged data instead of two
+    * (optimization guide §2.4). That pre-clustering is the only
+    * difference between the routes. */
+  private def latestWins(b: DataFrame, u: DataFrame, pcols: Seq[String],
+                         keys: Seq[String],
                          versionCol: String,
                          deleteCol: Option[String],
                          forceWins: Boolean = false,
-                         clusterCols: Seq[String] = Nil,
                          clusterParts: Int = 0): DataFrame = {
     // loud schema contract (CDC pipelines hit schema drift constantly):
     // the update batch must carry EVERY base column — a missing one
@@ -435,15 +440,15 @@ object Layout {
         .select((cols.map(col) :+ col("__del")): _*)
         .withColumn("__src", lit(1)))
     val tagged =
-      if (clusterCols.isEmpty) union
-      else union.repartition(clusterParts, clusterCols.map(col): _*)
+      if (clusterParts == 0 || pcols.isEmpty) union
+      else union.repartition(clusterParts, pcols.map(col): _*)
     // forceWins: the batch is AUTHORITATIVE — its rows outrank the
     // base regardless of versionCol (a net snapshot diff re-creating a
     // key with a LOWER version must still replace the base row); within
     // the batch versionCol still breaks ties. Default: versionCol
     // dominates, update wins ties (idempotent CDC latest-wins).
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy((clusterCols ++ keys).distinct.map(col): _*)
+      .partitionBy((pcols ++ keys).distinct.map(col): _*)
       .orderBy((if (forceWins) Seq(col("__src").desc, col(versionCol).desc)
                 else Seq(col(versionCol).desc, col("__src").desc)): _*)
     tagged.withColumn("__rn", row_number().over(w))
@@ -590,7 +595,7 @@ object Layout {
     val cur = currentGeneration(spark, path).getOrElse(0)
     dropOrphanGenerations(spark, path, cur)
     val base = spark.read.parquet(generationPath(path, cur))
-    latestWins(base, updates, keys, versionCol, deleteCol)
+    latestWins(base, updates, Nil, keys, versionCol, deleteCol)
       .write.mode(SaveMode.Overwrite).parquet(generationPath(path, cur + 1))
     swapCurrent(spark, path, cur + 1)
   }
@@ -683,7 +688,7 @@ object Layout {
   // front with a hierarchical/manifest-list format (the Iceberg
   // posture); the touched-partition WORK is already batch-bounded —
   // only the manifest serialization is table-wide. Measured
-  // (ManifestProbe, sf0.1, 200 partitions, batch touching 5):
+  // (NOTES.md, sf0.1, 200 partitions, batch touching 5):
   // mergeManifest 1.3 s vs rename-swap merge 3.8 s — the explicit-root
   // base read skips the table-wide listing the pruned predicate scan
   // pays — with reads at parity (0.77 vs 0.80 s) and ~13 B/partition
@@ -1548,10 +1553,11 @@ object Layout {
     * delta rows — the merge-on-read READ path. One window over
     * (partition cols, stored merge keys): highest `versionCol` wins,
     * ties go to the later delta batch (base rows carry seq 0),
-    * tombstone winners drop. Keys never move across partitions
-    * ([[mergeManifestDelta]] contract), so partitioning the window by
-    * the partition columns too is semantics-preserving and keeps the
-    * shuffle spread across (partition × key), not just key. */
+    * tombstone winners drop. The window is [[latestWins]]'s: a key
+    * is one key only within its partition, so merge-on-read and
+    * copy-on-write publish the same rows even for an update that moves
+    * a key across partitions, and the shuffle spreads across
+    * (partition × key), not just key. */
   private def resolveMor(m: ManifestMeta, base: DataFrame,
                          delta: DataFrame): DataFrame = {
     val sch = manifestSchema(m)
@@ -1596,13 +1602,6 @@ object Layout {
     }
   }
 
-  /** Per-partition min/max of `statsCols` over the given generation
-    * dirs — ONE distributed aggregate over exactly the rels' gen roots
-    * (the data just written: merge/seed stats never re-scan the rest
-    * of the table). The driver-side result is bounded by the touched
-    * partition count, the same bound [[mergeManifest]] already
-    * enforces. min/max render through Spark's Cast-to-string so
-    * [[readManifestBetween]] can Cast them back losslessly. */
   /** Data-file bytes of each just-written generation dir — one
     * filesystem listing per TOUCHED partition (the statsFor bound), so
     * planner reads never have to list the table themselves. */
@@ -1667,6 +1666,13 @@ object Layout {
       .select(sch.fields.toSeq.map(f => col(f.name)): _*)
   }
 
+  /** Per-partition min/max of `statsCols` over the given generation
+    * dirs — ONE distributed aggregate over exactly the rels' gen roots
+    * (the data just written: merge/seed stats never re-scan the rest
+    * of the table). The driver-side result is bounded by the touched
+    * partition count, the same bound [[mergeManifest]] already
+    * enforces. min/max render through Spark's Cast-to-string so
+    * [[readManifestBetween]] can Cast them back losslessly. */
   private[graft] def statsFor(spark: SparkSession, path: String, m: ManifestMeta,
                        gens: Map[String, Int],
                        srcDir: Option[String] = None):
@@ -3047,31 +3053,31 @@ object Layout {
         // the partition columns concentrates a hot landing partition's
         // entire latest-wins sort in ONE task (§2.5 skew, §5 spill).
         // The manifest's own per-rel bytes metadata prices that for
-        // free: when the largest touched base rel exceeds
-        // spark.graft.merge.clusteredMergeMaxRelBytes (default 1 GiB —
-        // past it the single sort task dominates the stage against
-        // ~256 MB-sized peers), fall back to the two-exchange path:
-        // window by keys (spread across tasks), then cluster for the
-        // write. Winners are identical on both paths (LayoutSpec pins
-        // result equality); only the exchange count differs.
-        val hotRelBytes = spark.conf.get(
-          "spark.graft.merge.clusteredMergeMaxRelBytes",
-          (1L << 30).toString).toLong
+        // free: when the largest touched base rel exceeds 16 x
+        // spark.sql.adaptive.advisoryPartitionSizeInBytes (1 GiB at
+        // the 64 MB default — past it the single sort task dominates
+        // the stage against advisory-sized peers), fall back to the
+        // two-exchange path: the window's own (pcols ++ keys) exchange
+        // spreads the sort across tasks, then cluster for the write.
+        // Winners are identical on every route (LayoutSpec pins result
+        // equality); only the exchange count differs.
+        val hotRelBytes = 16L * spark.sessionState.conf.getConf(
+          org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
         val maxTouchedRelBytes =
           baseRels.flatMap(m0.bytes.get).foldLeft(0L)(math.max)
         if (m0.dataBuckets > 0)
           clusteredWrite(spark,
-            latestWins(base, updates, keys, versionCol, deleteCol,
+            latestWins(base, updates, pcols, keys, versionCol, deleteCol,
               forceWins),
             tmpDir, pcols, m0.dataBucketCols, m0.dataBuckets)
         else if (maxTouchedRelBytes > hotRelBytes)
           clusteredWrite(spark,
-            latestWins(base, updates, keys, versionCol, deleteCol,
+            latestWins(base, updates, pcols, keys, versionCol, deleteCol,
               forceWins),
             tmpDir, pcols, Nil, 0)
         else
-          latestWins(base, updates, keys, versionCol, deleteCol, forceWins,
-              clusterCols = pcols, clusterParts = shufflePartitions(spark))
+          latestWins(base, updates, pcols, keys, versionCol, deleteCol,
+              forceWins, clusterParts = shufflePartitions(spark))
             .write.mode(SaveMode.Overwrite)
             .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
             .partitionBy(pcols: _*).parquet(tmpDir)
@@ -3216,32 +3222,6 @@ object Layout {
     }
   }
 
-  /** MERGE-ON-READ variant of [[mergeManifest]]: the CDC batch is
-    * appended as a pending DELTA generation for each touched partition
-    * — the base is NEVER read, so a merge costs O(|batch|) regardless
-    * of how many partitions it scatters across (copy-on-write pays a
-    * full read + rewrite of every touched partition: the wrong cost
-    * shape for small scattered updates on a 100 TB table). Every read
-    * path ([[readManifest]], time travel, [[readManifestPruned]])
-    * resolves base + pending deltas latest-wins in-plan, paying one
-    * window shuffle over ONLY the delta-bearing partitions;
-    * [[foldManifestDeltas]] folds deltas back into single base
-    * generations on a maintenance schedule, bounding the read tax.
-    *
-    * The resolution spec (keys, versionCol) is fixed by the first
-    * delta merge and stored in the manifest — readers resolve with no
-    * caller input, and later merges (delta or copy-on-write) must
-    * match it. Same contracts as [[mergeManifest]]: update rows must
-    * not move keys across partitions; apply batches in version order
-    * (within a version, the later delta batch wins ties); schema
-    * drift fails loudly; tombstones via `deleteCol` (persisted
-    * normalized, so batches may pass different flag columns). Stats
-    * widen monotonically (see [[widenStats]]) — pruning stays sound,
-    * a fold re-tightens. `batchId` (>= 0) is the streaming-sink
-    * exactly-once guard (see [[mergeManifest]]): a replayed id returns
-    * false and publishes nothing, so feed consumers never see a
-    * duplicate delta generation. Returns true when the delta applied.
-    */
   /** Pure APPEND onto a DECLARED append-only manifest table (seeded
     * with `appendOnly = true`): the batch lands as spec-less delta
     * generations — O(|batch|), the base never read — and reads union
@@ -3376,6 +3356,32 @@ object Layout {
         s"(last: $lastConflict)")
   }
 
+  /** MERGE-ON-READ variant of [[mergeManifest]]: the CDC batch is
+    * appended as a pending DELTA generation for each touched partition
+    * — the base is NEVER read, so a merge costs O(|batch|) regardless
+    * of how many partitions it scatters across (copy-on-write pays a
+    * full read + rewrite of every touched partition: the wrong cost
+    * shape for small scattered updates on a 100 TB table). Every read
+    * path ([[readManifest]], time travel, [[readManifestPruned]])
+    * resolves base + pending deltas latest-wins in-plan, paying one
+    * window shuffle over ONLY the delta-bearing partitions;
+    * [[foldManifestDeltas]] folds deltas back into single base
+    * generations on a maintenance schedule, bounding the read tax.
+    *
+    * The resolution spec (keys, versionCol) is fixed by the first
+    * delta merge and stored in the manifest — readers resolve with no
+    * caller input, and later merges (delta or copy-on-write) must
+    * match it. Same contracts as [[mergeManifest]]: update rows must
+    * not move keys across partitions; apply batches in version order
+    * (within a version, the later delta batch wins ties); schema
+    * drift fails loudly; tombstones via `deleteCol` (persisted
+    * normalized, so batches may pass different flag columns). Stats
+    * widen monotonically (see [[widenStats]]) — pruning stays sound,
+    * a fold re-tightens. `batchId` (>= 0) is the streaming-sink
+    * exactly-once guard (see [[mergeManifest]]): a replayed id returns
+    * false and publishes nothing, so feed consumers never see a
+    * duplicate delta generation. Returns true when the delta applied.
+    */
   def mergeManifestDelta(spark: SparkSession, path: String,
                          updates: DataFrame, keys: Seq[String],
                          versionCol: String,
@@ -4097,7 +4103,7 @@ object Layout {
 
   /** The widening pairs a METADATA-ONLY type change supports: Spark's
     * parquet reader up-casts these per file natively (probed —
-    * WidenProbe), and their Cast-to-string renderings are IDENTICAL
+    * NOTES.md), and their Cast-to-string renderings are IDENTICAL
     * for every representable value, so stored stats strings, bloom
     * hashes and partition dir fragments all stay exact. float→double
     * is deliberately ABSENT: a float's rendering ("0.1") parses to a
@@ -4727,7 +4733,7 @@ object Layout {
     *    every merge. TOUCH IS BY VALUE, not by key existence: the
     *    merge cannot know a key is fresh without reading, so ANY batch
     *    row whose old-spec column values name an existing old-era
-    *    partition migrates that whole partition (SpecEvoProbe: a
+    *    partition migrates that whole partition (NOTES.md: a
     *    fresh-key batch scattered over every old year migrated the
     *    entire 6M-row era in one merge — correct, but the cost of a
     *    full rewrite; batches of genuinely new data with out-of-range
@@ -5227,6 +5233,9 @@ object Layout {
       withMaintenanceLock(spark, path) {
     requireNotManifest(spark, path, "clusterRewrite")
     require(cols.nonEmpty, "clusterRewrite needs cluster column(s)")
+    val fs = TableFs(spark, path)
+    val aside = new Path(s"$path.__cluster_old")
+    fs.restoreAside(new Path(path), aside)
     val before = spark.read.parquet(path)
     // counted up front, NOT via an Observation riding the rewrite:
     // repartitionByRange's sampling pass re-scans the source inside the
@@ -5239,8 +5248,7 @@ object Layout {
     else sortedWrite(before, tmp, cols, numFiles = numFiles)
     val n1 = spark.read.parquet(tmp).count()
     require(n1 == n0, s"re-cluster would lose rows: $n0 -> $n1; aborting")
-    TableFs(spark, path).swapDir(new Path(tmp), new Path(path),
-      new Path(s"$path.__cluster_old"))
+    fs.swapDir(new Path(tmp), new Path(path), aside)
     n1
   }
 }

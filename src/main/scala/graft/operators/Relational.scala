@@ -56,7 +56,7 @@ object Relational {
     * for inner and left-outer alike.
     *
     * When to reach for this instead of trusting AQE (measured,
-    * T17Probe/NOTES round 6): AQE's skew detection watches COMPRESSED
+    * NOTES.md round 6): AQE's skew detection watches COMPRESSED
     * shuffle-block sizes, so a hot key whose rows compress well
     * (identical boilerplate tiles, stop-word terms) sails past
     * byte-based detection while still funneling its entire row count
@@ -144,7 +144,7 @@ object Relational {
     * at `maxSalt`); otherwise a plain join, zero overhead beyond the
     * bounded sample scan.
     *
-    * This closes the usability gap the T17Probe finding left open: AQE's
+    * This closes the usability gap the NOTES.md round-6 finding left open: AQE's
     * skew detector watches COMPRESSED shuffle bytes, so a well-compressing
     * hot key (boilerplate text, repeated tiles) never trips it — and with
     * only the manual [[saltedJoin]], the caller had to KNOW their key

@@ -29,8 +29,9 @@ import org.apache.spark.sql.SparkSession
   *
   * On top of the primitives sit the three disciplines the table
   * layouts share: integer pointer files ([[readPointer]] /
-  * [[publishPointer]]), the rename-aside directory swap ([[swapDir]]),
-  * and (in [[Layout]]) the generation publish.
+  * [[publishPointer]]), the rename-aside directory swap ([[swapDir]],
+  * with its crash restore [[restoreAside]]) and (in [[Layout]]) the
+  * generation publish.
   */
 private[operators] final class TableFs private (conf: Configuration,
                                                 fc: FileContext,
@@ -149,15 +150,20 @@ private[operators] final class TableFs private (conf: Configuration,
     replace(tmp, p)
   }
 
+  /** Crash restore for [[swapDir]]: a prior swap that died between its
+    * two renames left `aside` as the only copy of `dst`; move it back.
+    * Every swapping writer runs this before its first read of `dst`,
+    * so the read sees the restored rows. */
+  def restoreAside(dst: Path, aside: Path): Unit =
+    if (!exists(dst) && exists(aside)) rename(aside, dst)
+
   /** Rename-aside swap of directory `src` into `dst` (which may not
     * exist yet): the old `dst` moves to `aside`, `src` moves in, the
     * aside deletes last. Each rename is atomic; a reader between them
-    * sees `dst` missing (maintenance-window semantics). A prior run
-    * that died between its two renames left `aside` as the only copy
-    * of `dst`: it is restored before anything else, never deleted as
-    * stale. */
+    * sees `dst` missing (maintenance-window semantics). A crash-left
+    * `aside` must already be restored ([[restoreAside]]); one found
+    * here beside a live `dst` is stale and deletes. */
   def swapDir(src: Path, dst: Path, aside: Path): Unit = {
-    if (exists(aside) && !exists(dst)) rename(aside, dst)
     if (exists(aside)) delete(aside, true)
     if (exists(dst)) rename(dst, aside)
     mkdirs(dst.getParent)

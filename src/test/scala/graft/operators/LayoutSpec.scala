@@ -277,14 +277,56 @@ class LayoutSpec extends SparkSpec {
     val a = tmpDir("skewa")
     seedAndMerge(a) // default threshold: single-shuffle clustered window
     val b = tmpDir("skewb")
-    val key = "spark.graft.merge.clusteredMergeMaxRelBytes"
-    spark.conf.set(key, "1") // every rel is "hot": two-exchange fallback
+    // the hot-rel threshold is 16 x the advisory partition size: at 1
+    // byte every rel is "hot", forcing the two-exchange fallback
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(key, "1")
     try seedAndMerge(b) finally spark.conf.unset(key)
     val ra = Layout.readManifest(spark, a)
     val rb = Layout.readManifest(spark, b)
     assert(ra.count() == rb.count())
     assert(ra.exceptAll(rb).isEmpty && rb.exceptAll(ra).isEmpty,
       "hot-partition fallback must publish byte-identical winners")
+  }
+
+  test("a key moved across touched partitions resolves alike on the " +
+      "fast path, the skew fallback, merge-on-read and plain merge") {
+    import spark.implicits._
+    val base = Seq((1L, "A", 1.0, 1L), (2L, "B", 2.0, 1L))
+      .toDF("k", "p", "v", "ver")
+    // key 1's update row lands in B while its base row sits in A, and
+    // key 3 touches A too: both partitions are read and rewritten
+    val batch = Seq((1L, "B", 10.0, 2L), (3L, "A", 3.0, 2L))
+      .toDF("k", "p", "v", "ver")
+    def publish(tag: String)(merge: String => Unit): Set[(Long, String, Double)] = {
+      val dir = tmpDir(tag)
+      Layout.writeManifestTable(spark, dir, base, Seq("p"))
+      merge(dir)
+      Layout.readManifest(spark, dir).select("k", "p", "v")
+        .as[(Long, String, Double)].collect().toSet
+    }
+    val fast = publish("moved_fast")(
+      Layout.mergeManifest(spark, _, batch, Seq("k"), "ver"))
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(key, "1")
+    val fallback = try publish("moved_fallback")(
+      Layout.mergeManifest(spark, _, batch, Seq("k"), "ver"))
+    finally spark.conf.unset(key)
+    val mor = publish("moved_mor")(
+      Layout.mergeManifestDelta(spark, _, batch, Seq("k"), "ver"))
+    val plainDir = tmpDir("moved_plain")
+    base.write.partitionBy("p").parquet(plainDir)
+    Layout.merge(spark, plainDir, batch, Seq("k"), "ver",
+      partitionCols = Seq("p"))
+    val plain = spark.read.parquet(plainDir).select("k", "p", "v")
+      .as[(Long, String, Double)].collect().toSet
+    // one window by (partition, key): a key is one key per partition
+    val expect = Set((1L, "A", 1.0), (1L, "B", 10.0), (2L, "B", 2.0),
+      (3L, "A", 3.0))
+    assert(fast == expect)
+    assert(fallback == expect)
+    assert(mor == expect)
+    assert(plain == expect)
   }
 
   test("merge: partitioned copy-on-write touches ONLY the batch's partitions") {

@@ -9,7 +9,7 @@ import graft.SparkSpec
 
 /** Schema evolution beyond add-nullable: METADATA-ONLY type widening
   * (old generations up-cast per file through the parquet reader —
-  * WidenProbe pins the reader capability) and column RENAME via alias
+  * NOTES.md records the reader capability) and column RENAME via alias
   * chains (readers coalesce across per-file names), with time travel,
   * the change/append feeds, and the planner-index refusal contract. */
 class ManifestEvolutionSpec extends SparkSpec {

@@ -172,6 +172,22 @@ class OperatorsSpec extends SparkSpec {
     assert(kept == Set(609L))
   }
 
+  test("string minhash signature = hashed signature over murmur3 bases") {
+    // one MinHash core: the string variant only maps each shingle to
+    // its murmur3 base, so it shares the hashed variant's coefficients
+    import spark.implicits._
+    val df = Seq(Seq("a b c", "b c d", "c d e"), Seq("x"), Seq.empty[String])
+      .toDF("sh")
+    for (seed <- Seq(42L, 7L)) {
+      val got = df.select(
+        Dedup.minhashSignature(col("sh"), 64, seed).as("s"),
+        Dedup.minhashSignatureHashed(transform(col("sh"),
+          x => hash(x).cast("bigint") + 2147483648L), 64, seed).as("h"))
+        .collect()
+      got.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1)))
+    }
+  }
+
   test("TolerantMapper: under-limit errors drop rows; at-limit aborts the step") {
     val schema = StructType(Seq(StructField("doc_id", LongType)))
     val failOdd: Row => Row = r => {

@@ -58,4 +58,18 @@ class TableFsSpec extends SparkSpec {
       (3L, "B", 3.0)))
     assert(!Files.exists(java.nio.file.Paths.get(dir, ".p=A.__merge_old")))
   }
+
+  test("compact restores a table a crash left aside before reading it") {
+    import spark.implicits._
+    val dir = tmpDir("restore_whole")
+    val rows = Set((1L, "a"), (2L, "b"), (3L, "c"))
+    rows.toSeq.toDF("k", "s").write.parquet(dir)
+    // a whole-table swap that died between its two renames: the table
+    // sits at the aside name and `dir` itself is missing
+    Files.move(java.nio.file.Paths.get(dir),
+      java.nio.file.Paths.get(s"$dir.__compact_old"))
+    Layout.compact(spark, dir)
+    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSet == rows)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$dir.__compact_old")))
+  }
 }
