@@ -34,13 +34,19 @@ import org.apache.spark.sql.functions._
   */
 object Layout {
 
-  /** Single-writer lease for table maintenance: every mutating entry
-    * point ([[compact]], [[merge]], [[compactGen]], [[mergeGen]],
-    * [[mergeManifest]], the reaps) runs under an atomically-created
-    * sibling lock file `<path>.__maint.lock` — two concurrent writers
-    * on the same table (say a scheduled compaction landing mid
-    * CDC-apply micro-batch) fail LOUDLY at acquisition instead of
-    * racing on tmp dirs and swaps. The lock is a sibling, not a child,
+  /** Single-writer lease for table maintenance: an atomically-created
+    * sibling lock file `<path>.__maint.lock`. The plain-directory and
+    * generational writers ([[compact]], [[merge]], [[compactGen]],
+    * [[mergeGen]]), the manifest seed, the schema/spec evolutions,
+    * [[repartitionManifest]] and the reaps hold it for their whole run;
+    * the optimistic manifest writers ([[mergeManifest]],
+    * [[appendManifest]], [[mergeManifestDelta]],
+    * [[migrateManifestPartitions]] through [[commit]];
+    * [[foldManifestDeltas]] and [[compactManifest]] through
+    * [[underLease]]) stage unlocked and take it only to commit. A
+    * writer that finds it held (manifest writers after queueing up to
+    * [[lockWaitMs]]) fails LOUDLY instead of racing on tmp dirs and
+    * swaps. The lock is a sibling, not a child,
     * so the unpartitioned rename-aside swap (which moves `path` itself)
     * cannot move the lease out from under its holder. A writer that
     * dies hard leaves the lock behind; the error message names the file
@@ -387,6 +393,30 @@ object Layout {
     }
   }
 
+  /** The loud batch-schema contract of every keyed or appending write
+    * (CDC pipelines hit schema drift constantly): the batch must carry
+    * EVERY base column — a missing one would otherwise surface as a raw
+    * resolver error — and must not carry columns the base lacks
+    * (beyond the delete flag): silently projecting them away would
+    * LOSE data on an evolved/typo'd batch. Schema evolution is an
+    * explicit base-table migration, not an implicit write side
+    * effect. */
+  private def requireBatchColumns(op: String, base: Seq[String],
+                                  batch: Seq[String],
+                                  deleteCol: Option[String] = None): Unit = {
+    val missing = base.filterNot(deleteCol.contains).filterNot(batch.contains)
+    require(missing.isEmpty,
+      s"$op: batch is missing base column(s) " +
+      s"${missing.mkString("[", ", ", "]")}; the batch must carry every " +
+      "base column (plus the optional delete flag)")
+    val extra = batch.filterNot(base.contains).filterNot(deleteCol.contains)
+    require(extra.isEmpty,
+      s"$op: batch carries column(s) " +
+      s"${extra.mkString("[", ", ", "]")} absent from the base table — " +
+      "refusing to silently drop them; evolve the base schema first or " +
+      "project the batch explicitly")
+  }
+
   /** Latest-wins key resolution of every copy-on-write merge route
     * ([[merge]], [[mergeGen]], [[mergeManifest]]) — the same contract
     * as the merge-on-read [[resolveMor]]. The window partitions by
@@ -412,26 +442,7 @@ object Layout {
                          deleteCol: Option[String],
                          forceWins: Boolean = false,
                          clusterParts: Int = 0): DataFrame = {
-    // loud schema contract (CDC pipelines hit schema drift constantly):
-    // the update batch must carry EVERY base column — a missing one
-    // would otherwise surface as a raw resolver error — and must not
-    // carry columns the base lacks (beyond the delete flag): silently
-    // projecting them away would LOSE data on an evolved/typo'd batch.
-    // Schema evolution is an explicit base-table migration, not an
-    // implicit merge side effect.
-    val missing = b.columns.filterNot(deleteCol.contains)
-      .filterNot(u.columns.contains)
-    require(missing.isEmpty,
-      s"merge: update batch is missing base column(s) " +
-      s"${missing.mkString("[", ", ", "]")}; the batch must carry every " +
-      "base column (plus the optional delete flag)")
-    val extra = u.columns.filterNot(b.columns.contains)
-      .filterNot(deleteCol.contains)
-    require(extra.isEmpty,
-      s"merge: update batch carries column(s) " +
-      s"${extra.mkString("[", ", ", "]")} absent from the base table — " +
-      "refusing to silently drop them; evolve the base schema first or " +
-      "project the batch explicitly")
+    requireBatchColumns("merge", b.columns.toSeq, u.columns.toSeq, deleteCol)
     val cols = b.columns.filterNot(deleteCol.contains)
     val del = deleteCol.map(col(_).cast("boolean")).getOrElse(lit(false))
     val union = b.select(cols.map(col): _*)
@@ -1602,20 +1613,6 @@ object Layout {
     }
   }
 
-  /** Data-file bytes of each just-written generation dir — one
-    * filesystem listing per TOUCHED partition (the statsFor bound), so
-    * planner reads never have to list the table themselves. */
-  private def bytesFor(spark: SparkSession, path: String,
-                       gens: Map[String, Int]): Map[String, Long] = {
-    val fs = TableFs(spark, path)
-    inParallel(gens.toSeq) { case (rel, g) =>
-      rel -> fs.list(new Path(s"$path/$rel/gen=$g"))
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-        .map(_.getLen).sum
-    }.toMap
-  }
-
   private def shufflePartitions(spark: SparkSession): Int =
     spark.conf.get("spark.sql.shuffle.partitions", "200").toInt
 
@@ -1643,16 +1640,6 @@ object Layout {
       } finally pool.shutdown()
     }
 
-  /** [[bytesFor]] over a writer's tmp tree (before the renames). */
-  private def bytesUnder(fs: TableFs, tmpDir: String,
-                         rels: Seq[String]): Map[String, Long] =
-    inParallel(rels) { rel =>
-      rel -> fs.list(new Path(s"$tmpDir/$rel"))
-        .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith("."))
-        .map(_.getLen).sum
-    }.toMap
-
   /** The just-written rows under `dir` (a writer's tmp tree, BEFORE
     * its renames scatter it into gen dirs): one recursive listing of a
     * single root instead of |touched| explicit gen paths — the cheap
@@ -1664,36 +1651,6 @@ object Layout {
     val sch = manifestSchema(m)
     spark.read.option("basePath", dir).schema(sch).parquet(dir)
       .select(sch.fields.toSeq.map(f => col(f.name)): _*)
-  }
-
-  /** Per-partition min/max of `statsCols` over the given generation
-    * dirs — ONE distributed aggregate over exactly the rels' gen roots
-    * (the data just written: merge/seed stats never re-scan the rest
-    * of the table). The driver-side result is bounded by the touched
-    * partition count, the same bound [[mergeManifest]] already
-    * enforces. min/max render through Spark's Cast-to-string so
-    * [[readManifestBetween]] can Cast them back losslessly. */
-  private[graft] def statsFor(spark: SparkSession, path: String, m: ManifestMeta,
-                       gens: Map[String, Int],
-                       srcDir: Option[String] = None):
-      Map[String, Map[String, (Option[String], Option[String])]] = {
-    if (m.statsCols.isEmpty || (gens.isEmpty && srcDir.isEmpty)) Map.empty
-    else {
-      val df = srcDir.fold(readManifestRels(spark, path, m, gens))(
-        underDir(spark, m, _))
-      val pc = m.partitionCols
-      val aggs = m.statsCols.flatMap(c => Seq(
-        min(col(c)).cast("string").as(s"__mn_$c"),
-        max(col(c)).cast("string").as(s"__mx_$c")))
-      df.groupBy(pc.map(c => col(c).cast("string").as(c)): _*)
-        .agg(aggs.head, aggs.tail: _*)
-        .collect()
-        .map { r =>
-          relOf(pc, r) -> m.statsCols.map(c => c ->
-            (Option(r.getAs[String](s"__mn_$c")),
-             Option(r.getAs[String](s"__mx_$c")))).toMap
-        }.toMap
-    }
   }
 
   /** Per-FILE min/max of `statsCols` over a writer's tmp tree — ONE
@@ -1822,7 +1779,7 @@ object Layout {
 
   /** One walk of a writer's tmp tree in place of the post-write data
     * rescan (optimization guide §6 — metadata, not data): per-rel data
-    * files with sizes (the [[bytesUnder]] listing), the exact total
+    * files with sizes, the exact total
     * row count from parquet footer metadata (replacing the
     * `spark.read.parquet(tmpDir).count()` verify job), and — when
     * every stats column has a sound footer mapping — per-row-group
@@ -2088,21 +2045,18 @@ object Layout {
     }
   }
 
-  /** Per-partition bloom filters of `bloomCols` over the given
-    * generation dirs — ONE distributed aggregate (groupBy partition
-    * values, [[graft.expressions.BloomSketchAgg]] per column), the
-    * [[statsFor]] shape. Values hash through Spark's own
+  /** Per-partition bloom filters of `bloomCols` over a writer's tmp
+    * tree — ONE distributed aggregate (groupBy partition values,
+    * [[graft.expressions.BloomSketchAgg]] per column), the
+    * [[fileStatsUnder]] shape. Values hash through Spark's own
     * Cast-to-string + xxhash64 — the exact pipeline [[readManifestEq]]
     * probes with, so build and probe can never disagree. Driver bytes
     * bounded by touched partitions x ~1.2 x bloomItems per column. */
-  private def bloomsFor(spark: SparkSession, path: String, m: ManifestMeta,
-                        gens: Map[String, Int],
-                        srcDir: Option[String] = None):
-      Map[String, Map[String, String]] = {
-    if (m.bloomCols.isEmpty || (gens.isEmpty && srcDir.isEmpty)) Map.empty
+  private def bloomsUnder(spark: SparkSession, m: ManifestMeta,
+                          tmpDir: String): Map[String, Map[String, String]] = {
+    if (m.bloomCols.isEmpty) Map.empty
     else {
-      val df = srcDir.fold(readManifestRels(spark, path, m, gens))(
-        underDir(spark, m, _))
+      val df = underDir(spark, m, tmpDir)
       val pc = m.partitionCols
       val aggs = m.bloomCols.map(c =>
         graft.expressions.BloomSketch.agg(
@@ -2144,7 +2098,7 @@ object Layout {
 
   /** The probe-side hash of `value` for column type `dt`: rendered and
     * hashed by SPARK (one row-local job), so it is bit-identical to
-    * what [[bloomsFor]]'s build side computed for equal values. */
+    * what [[bloomsUnder]]'s build side computed for equal values. */
   private[graft] def renderedHash(spark: SparkSession,
                            dt: org.apache.spark.sql.types.DataType,
                            value: Any): Long =
@@ -2405,10 +2359,11 @@ object Layout {
     * the clustering key gains the bucket id and the landed files carry
     * Spark's bucket naming + placement contract (see
     * [[flattenBucketDirs]]) — every write path REACHABLE on a bucketed
-    * table routes through here (the direct writers — appendManifest,
-    * mergeManifestDelta and its fold — are unreachable by refusal:
-    * bucketed tables cannot be appendOnly and refuse MoR deltas), so
-    * the contract survives merges, DML, compaction and migration.
+    * table routes through here (appendManifest, mergeManifestDelta and
+    * its fold pass no bucketing: they are unreachable on a bucketed
+    * table by refusal — bucketed tables cannot be appendOnly and
+    * refuse MoR deltas), so the contract survives merges, DML,
+    * compaction and migration.
     * `sortTail` appends an in-task sort under the directory grouping
     * (the sorted-compaction discipline); `dropCols` drop after the
     * sort, before the write (transient sort keys like `__z`).
@@ -2510,61 +2465,47 @@ object Layout {
     }
     require(manifestVersion(spark, path).isEmpty,
       s"$path is already a manifest table; use mergeManifest")
-    val fs = TableFs(spark, path)
-    val tmpDir = s"$path.__manifest_tmp"
-    fs.delete(new Path(tmpDir), true)
-    // cluster on the partition columns into shuffle.partitions tasks:
-    // each partition dir's rows land in exactly ONE task (one file per
-    // dir — not |tasks| tiny files in every dir, the small-files
-    // problem the compactor would then have to cure) while task count
-    // stays at the session's parallelism instead of |partitions| (525
-    // single-file tasks measured 11 s; 32 tasks writing ~16 dirs each
-    // measured 2.5 s). Oversized partitions still split via
-    // maxRecordsPerFile. Committer v2 (direct task commit) is safe
-    // here: atomicity comes from the manifest pointer swap, and the
-    // tmp tree is deleted before every attempt.
-    clusteredWrite(spark, df, tmpDir, partitionCols, bucketCols, buckets)
-    val rels = listPartitionRels(fs, new Path(tmpDir))
     val dataCols = df.schema.fields.filterNot(f =>
       partitionCols.contains(f.name))
     val parts = partitionCols.map(c => df.schema(c))
     val ddl = org.apache.spark.sql.types.StructType(dataCols ++ parts).toDDL
-    val gens = rels.map(_ -> 1).toMap
-    // hierarchical bounds: even rel-name split points, FIXED for the
-    // table's lifetime (future rels join their name-ordered bucket; a
-    // value distribution that grows one-sided skews bucket sizes —
-    // acceptable: correctness never depends on balance)
-    val sortedRels = rels.sorted
-    val nB = math.min(manifestBuckets, sortedRels.size)
-    val bounds =
-      if (nB <= 1) Nil
-      else (1 until nB).map(i => sortedRels(i * sortedRels.size / nB))
-        .distinct
-    val meta0 = ManifestMeta(1, ddl, partitionCols, gens,
+    // the rels (and so the entries and hierarchy bounds) are known only
+    // after the write; staging reads just the schema and stats/bloom
+    // config
+    val meta0 = ManifestMeta(1, ddl, partitionCols, Map.empty,
       statsCols = statsCols, bloomCols = bloomCols,
       bloomItems = bloomItems, bloomFpp = bloomFpp,
-      bucketBounds = bounds, appendOnly = appendOnly,
+      appendOnly = appendOnly,
       morKeys = keys, morVersionCol = versionCol,
       dataBucketCols = bucketCols, dataBuckets = buckets)
-    // derive the published metadata from the tmp tree BEFORE the
-    // renames scatter it: one footer walk of one root — file list,
-    // bytes and stats without re-reading the data just written
-    val scan = scanTmpTree(spark, fs, meta0, tmpDir, rels)
-    val (seedStats, seedFileStats) = statsFromScan(spark, meta0, tmpDir, scan)
-    val meta1 = meta0.copy(
-      stats = seedStats,
-      fileStats = genKeyedFileStats(seedFileStats, gens),
-      blooms = bloomsFor(spark, path, meta0, gens, srcDir = Some(tmpDir)),
-      bytes = scan.bytes,
-      op = "seed")
-    inParallel(rels) { rel =>
-      val dst = new Path(s"$path/$rel/gen=1")
-      fs.mkdirs(dst.getParent)
-      if (fs.exists(dst)) fs.delete(dst, true) // crashed prior seed
-      fs.rename(new Path(s"$tmpDir/$rel"), dst)
+    // clustered into shuffle.partitions tasks, not |partitions| (525
+    // single-file tasks measured 11 s; 32 tasks writing ~16 dirs each
+    // measured 2.5 s); oversized partitions still split via
+    // maxRecordsPerFile
+    stage(spark, path, meta0, "writeManifestTable", df, expected = None)(
+        clusteredWrite(spark, _, _, partitionCols, bucketCols, buckets)) { st =>
+      val gens = st.produced.map(_ -> 1).toMap
+      // hierarchical bounds: even rel-name split points, FIXED for the
+      // table's lifetime (future rels join their name-ordered bucket; a
+      // value distribution that grows one-sided skews bucket sizes —
+      // acceptable: correctness never depends on balance)
+      val sortedRels = st.produced.sorted
+      val nB = math.min(manifestBuckets, sortedRels.size)
+      val bounds =
+        if (nB <= 1) Nil
+        else (1 until nB).map(i => sortedRels(i * sortedRels.size / nB))
+          .distinct
+      inParallel(st.produced) { rel =>
+        val dst = new Path(s"$path/$rel/gen=1")
+        st.fs.mkdirs(dst.getParent)
+        if (st.fs.exists(dst)) st.fs.delete(dst, true) // crashed prior seed
+        st.fs.rename(new Path(s"${st.tmpDir}/$rel"), dst)
+      }
+      writeManifestMeta(spark, path, meta0.copy(entries = gens,
+        bucketBounds = bounds, stats = st.stats,
+        fileStats = genKeyedFileStats(st.fileStats, gens),
+        blooms = st.blooms, bytes = st.bytes, op = "seed"))
     }
-    writeManifestMeta(spark, path, meta1)
-    fs.delete(new Path(tmpDir), true)
   }
 
   /** Every RETAINED manifest version number on disk, ascending — the
@@ -2726,20 +2667,24 @@ object Layout {
 
   // ---- Optimistic concurrent commits ----------------------------------
   //
-  // Partition-scoped publishes (mergeManifest, mergeManifestDelta,
-  // foldManifestDeltas, compactManifest) do their expensive work — the
-  // data write into a writer-unique tmp tree — WITHOUT the maintenance
-  // lease, against a snapshot of the manifest (m0). Only the COMMIT
-  // (gen-numbering, renames, one JSON publish — metadata-fast) takes
-  // the lease, re-reads the live manifest (m1), and either
+  // Every manifest data write stages through [[stage]]: the write into
+  // a writer-unique tmp tree, and the published metadata derived from
+  // it. Partition-scoped publishes (mergeManifest, appendManifest,
+  // mergeManifestDelta, migrateManifestPartitions through [[commit]];
+  // foldManifestDeltas and compactManifest directly) stage WITHOUT the
+  // maintenance lease, against a snapshot of the manifest (m0). Only
+  // the COMMIT (gen-numbering, renames, one JSON publish — metadata-
+  // fast) takes the lease and re-reads the live manifest (m1) —
+  // [[underLease]] — and either
   //   - publishes directly (nothing moved),
   //   - REBASES onto m1 when the concurrently-published versions did
   //     not touch what this writer depends on (delta merges depend only
   //     on table invariants; CoW merges also on their touched
   //     partitions' state; folds/compactions skip just the partitions
   //     that moved), or
-  //   - signals a CONFLICT, and the operation retries from a fresh
-  //     snapshot a bounded number of times before failing loudly.
+  //   - signals a CONFLICT, and [[commit]] retries the operation from
+  //     a fresh snapshot a bounded number of times before failing
+  //     loudly (folds/compactions never retry).
   // The net effect: CDC ingest and compaction overlap instead of
   // serializing on one lease — at 100 TB a compaction runs long enough
   // that ingest cannot stop for it — with the final state always equal
@@ -2835,14 +2780,264 @@ object Layout {
       s"v${b.version}: ${hit.mkString(", ")}")
   }
 
-  /** The rels whose state (base generation or pending-delta list)
-    * differs between two manifest snapshots — a CoW merge conflicts on
-    * any of its touched rels appearing here. */
-  private def relStateChanged(a: ManifestMeta, b: ManifestMeta,
-                              rels: Iterable[String]): Seq[String] =
-    rels.toSeq.sorted.filter(r =>
-      a.entries.get(r) != b.entries.get(r) ||
-        a.deltas.getOrElse(r, Nil) != b.deltas.getOrElse(r, Nil))
+  /** A copy-on-write rewrite's conflict rule: a rel it read or
+    * replaces changed state (base generation or pending-delta list)
+    * between snapshot `m0` and the live `m1`. A rel absent from the
+    * snapshot counts too — one a concurrent commit CREATED would
+    * otherwise be silently replaced at publish. */
+  private def movedRels(m0: ManifestMeta, m1: ManifestMeta,
+                        rels: Seq[String]): Option[String] = {
+    val moved = rels.sorted.filter(r =>
+      m0.entries.get(r) != m1.entries.get(r) ||
+        m0.deltas.getOrElse(r, Nil) != m1.deltas.getOrElse(r, Nil))
+    if (moved.isEmpty) None
+    else Some("concurrent commit moved touched partition(s) " +
+      moved.take(5).mkString(", "))
+  }
+
+  /** What [[stage]] derived from a writer's tmp tree before any rename:
+    * the produced partition rels and their published metadata. */
+  private final case class Staged(
+      fs: TableFs, tmpDir: String, produced: Seq[String],
+      stats: Map[String, Map[String, (Option[String], Option[String])]],
+      fileStats: Map[String, Map[String, Map[String, (Option[String], Option[String])]]],
+      blooms: Map[String, Map[String, String]],
+      bytes: Map[String, Long])
+
+  /** THE staging step of every manifest data write: `write` lands
+    * `data` in a writer-unique tmp tree (heartbeat while it lives — see
+    * [[withTmpHeartbeat]] — and deleted on every exit), then the
+    * published metadata derives from the tree BEFORE any rename
+    * scatters it: the produced rels (one outside `expected` means the
+    * Cast rendering and the writer disagreed — fail before
+    * publishing), one footer walk for bytes and stats (no data rescan;
+    * see [[scanTmpTree]]), the bloom aggregate unless `blooms` is off,
+    * and with `verifyRows` the row count observed on the write itself
+    * checked against the footers. `use` runs while the tree exists —
+    * the publish renames out of it. `m` supplies only the schema and
+    * the stats/bloom config. */
+  private def stage[T](spark: SparkSession, path: String, m: ManifestMeta,
+                       op: String, data: DataFrame,
+                       expected: Option[Set[String]],
+                       verifyRows: Boolean = false,
+                       blooms: Boolean = true)
+                      (write: (DataFrame, String) => Unit)
+                      (use: Staged => T): T = {
+    val fs = TableFs(spark, path)
+    val tmpDir = uniqueTmpDir(path)
+    try withTmpHeartbeat(fs, tmpDir) {
+      lazy val obs = org.apache.spark.sql.Observation()
+      write(if (verifyRows) data.observe(obs, count(lit(1)).as("n")) else data,
+        tmpDir)
+      val produced = listPartitionRels(fs, new Path(tmpDir))
+      val unexpected = expected.fold(Seq.empty[String])(produced.filterNot)
+      require(unexpected.isEmpty,
+        s"$op: writer produced partition dirs ${unexpected.mkString(",")} " +
+          "outside the expected set — partition rendering mismatch")
+      val scan = scanTmpTree(spark, fs, m, tmpDir, produced)
+      if (verifyRows) {
+        val n0 = obs.get("n").asInstanceOf[Long]
+        require(scan.rows == n0,
+          s"$op would lose rows: $n0 -> ${scan.rows}; aborting")
+      }
+      val (stats, fileStats) = statsFromScan(spark, m, tmpDir, scan)
+      use(Staged(fs, tmpDir, produced, stats, fileStats,
+        if (blooms) bloomsUnder(spark, m, tmpDir) else Map.empty,
+        scan.bytes))
+    } finally { fs.delete(new Path(tmpDir), true); () }
+  }
+
+  /** Runs between staging and the commit lease with the table path — a
+    * no-op. Tests set it to land a concurrent commit at exactly that
+    * point, deterministically. */
+  @volatile private[operators] var beforeCommitLease: String => Unit =
+    _ => ()
+
+  /** The commit step's lease: take the maintenance lease, re-read the
+    * live manifest (`m0` itself when no version landed since) and run
+    * `body` against it. */
+  private def underLease[T](spark: SparkSession, path: String,
+                            m0: ManifestMeta)(body: ManifestMeta => T): T = {
+    beforeCommitLease(path)
+    withMaintenanceLock(spark, path, lockWaitMs(spark)) {
+      val v1 = manifestVersion(spark, path).get
+      body(if (v1 == m0.version) m0 else readManifestMeta(spark, path, v1))
+    }
+  }
+
+  /** A writer's side of one [[commit]] attempt: what to [[stage]], its
+    * own conflict rule against the live manifest (beyond the table
+    * invariants every commit checks), its publish body (the next
+    * manifest from the live one; [[commit]] numbers it and records the
+    * sink marker), and the writer's result once published. */
+  private final case class Plan[T](
+      data: DataFrame, expected: Set[String],
+      write: (DataFrame, String) => Unit,
+      publish: (ManifestMeta, Staged) => ManifestMeta,
+      result: T,
+      conflict: ManifestMeta => Option[String] = (_: ManifestMeta) => None,
+      verifyRows: Boolean = false)
+
+  private val MaxCommitAttempts = 3
+
+  /** THE optimistic commit of the partition-scoped manifest writers
+    * (see the section note above). Each attempt reads snapshot m0 and
+    * applies the writer's STRUCTURAL refusals (`refuse`) BEFORE the
+    * replay short-circuit — a write that is never valid on the table
+    * must not silently no-op because a legitimate writer left a marker
+    * under the same `sinkId` — then returns None for a replayed
+    * `batchId`. `plan` validates against m0 and describes the write
+    * (Left: done, nothing to write). The staged write commits under
+    * [[underLease]]: a replay that landed meanwhile returns None; a
+    * changed table invariant or the writer's conflict rule counts in
+    * [[commitConflicts]] and retries from a fresh snapshot; anything
+    * else publishes. Fails loudly after [[MaxCommitAttempts]]
+    * conflicts, naming `op`. */
+  private def commit[T](spark: SparkSession, path: String, op: String,
+                        refuse: ManifestMeta => Unit = _ => (),
+                        batchId: Long = -1L, sinkId: String = "",
+                        checkMorSpec: Boolean = true)
+                       (plan: ManifestMeta => Either[T, Plan[T]]): Option[T] = {
+    var attempt = 0
+    var lastConflict = ""
+    while (attempt < MaxCommitAttempts) {
+      attempt += 1
+      val m0 = readManifestMeta(spark, path,
+        manifestVersion(spark, path).getOrElse(
+          throw new IllegalArgumentException(
+            s"$path is not a manifest table; seed it with writeManifestTable")))
+      refuse(m0)
+      if (replayedSinkBatch(path, m0, batchId, sinkId)) return None
+      plan(m0) match {
+        case Left(done) => return Some(done)
+        case Right(p) =>
+          def publish(m1: ManifestMeta, st: Staged): Option[T] = {
+            val next = p.publish(m1, st)
+            writeManifestMeta(spark, path, next.copy(version = m1.version + 1,
+              sinkBatches =
+                if (batchId >= 0) next.sinkBatches + (sinkId -> batchId)
+                else next.sinkBatches))
+            Some(p.result)
+          }
+          val outcome: Either[String, Option[T]] = stage(spark, path, m0, op,
+              p.data, Some(p.expected), p.verifyRows)(p.write) { st =>
+            underLease(spark, path, m0) { m1 =>
+              if (m1.version == m0.version) Right(publish(m1, st))
+              else if (replayedSinkBatch(path, m1, batchId, sinkId)) Right(None)
+              else invariantsChanged(m0, m1, checkMorSpec)
+                .orElse(p.conflict(m1)).toLeft(publish(m1, st))
+            }
+          }
+          outcome match {
+            case Right(result) => return result
+            case Left(reason) =>
+              commitConflicts.incrementAndGet()
+              lastConflict = reason // retry fresh
+          }
+      }
+    }
+    throw new IllegalStateException(
+      s"$op on $path: commit conflicted $MaxCommitAttempts times " +
+        s"(last: $lastConflict) — concurrent writers keep changing what " +
+        "it depends on; serialize them, split the batch by partition, " +
+        "or run it off the write peak")
+  }
+
+  /** Publish body of the copy-on-write rewrites ([[mergeManifest]],
+    * [[migrateManifestPartitions]]): the produced rels land as fresh
+    * generations and REPLACE every rel in `touched` — a touched rel
+    * that produced nothing (fully deleted, or an old-era rel whose rows
+    * migrated into current-spec gens) leaves the manifest, and pending
+    * deltas are gone (the rewrite folded them in). `specHistory`
+    * prunes to the eras that still hold live rels, so draining an
+    * era's LAST partition leaves a clean single-spec table (the spec-
+    * debt dashboard, the budgeted drain's convergence check and
+    * repartitionManifest's "nothing left" guard all read it). Sound
+    * only when no touched rel moved since the snapshot
+    * ([[movedRels]]). */
+  private def replaceRels(path: String, touched: Seq[String], op: String)
+                         (m1: ManifestMeta, st: Staged): ManifestMeta = {
+    val newGens = publishGens(st.fs, path, st.tmpDir, m1, st.produced)
+    val removed = touched.filterNot(newGens.contains)
+    val entries = m1.entries -- removed ++ newGens
+    val deltas = m1.deltas -- touched
+    val liveOld = (entries.keySet ++ deltas.keySet).map(specOfRel)
+      .filterNot(_ == m1.partitionCols)
+    m1.copy(entries = entries, deltas = deltas,
+      stats = m1.stats -- removed ++ st.stats,
+      blooms = m1.blooms -- removed ++ st.blooms,
+      bytes = m1.bytes -- removed ++ st.bytes,
+      // every touched rel's files were rewritten wholesale: replace
+      // their per-file entries, drop the vanished
+      fileStats = m1.fileStats -- touched ++
+        genKeyedFileStats(st.fileStats, newGens),
+      specHistory = m1.specHistory.filter(liveOld.contains),
+      op = op, opDeletes = false)
+  }
+
+  /** Publish body of the delta writers ([[appendManifest]],
+    * [[mergeManifestDelta]]): each produced rel lands as a new delta
+    * generation appended to its LIVE delta list (deltas that landed
+    * concurrently stay ahead of it); stats and blooms widen
+    * monotonically against the live ones (which already cover those
+    * deltas — the tiny local widen job is bounded by the touched
+    * partition count), and the delta files ADD to the rel's per-file
+    * entries (the base generation's stay valid — nothing rewrote
+    * it). */
+  private def appendDeltas(spark: SparkSession, path: String)
+                          (m1: ManifestMeta, st: Staged): ManifestMeta = {
+    val newGens = publishGens(st.fs, path, st.tmpDir, m1, st.produced)
+    m1.copy(
+      deltas = m1.deltas ++ newGens.map { case (rel, g) =>
+        rel -> (m1.deltas.getOrElse(rel, Nil) :+ g) },
+      stats = widenStats(spark, m1, st.stats),
+      blooms = widenBlooms(m1.blooms, st.blooms),
+      fileStats = m1.fileStats ++
+        genKeyedFileStats(st.fileStats, newGens).map { case (rel, files) =>
+          rel -> (m1.fileStats.getOrElse(rel, Map.empty) ++ files) },
+      op = "delta", opDeletes = false)
+  }
+
+  /** The distinct partition rels `df`'s rows name under `spec`,
+    * rendered through Spark's own Cast (writer-exact dir fragments) —
+    * one collect bounded at `max`: past it the write refuses with
+    * `tooMany` (a truncated set could let rows escape the produced-
+    * dirs guard and the conflict check). */
+  private def batchRels(df: DataFrame, spec: Seq[String], max: Int,
+                        tooMany: => String): Set[String] = {
+    val rows = df.select(spec.map(c => col(c).cast("string").as(c)): _*)
+      .distinct().limit(max + 1).collect()
+    require(rows.length <= max, tooMany)
+    rows.map(relOf(spec, _)).toSet
+  }
+
+  /** The old-era rels (partitions still under a PRIOR partition spec —
+    * [[changeManifestPartitionSpec]]) that a keyed batch's rows name:
+    * each prior spec renders from the batch's own values (a key's
+    * partition values are immutable — the standing merge contract,
+    * spanning eras). Only specs with LIVE rels: a fully-migrated era may
+    * reference a column since dropped/renamed — selecting it from the
+    * batch would throw on every merge even though no partition needs
+    * it. */
+  private def priorSpecRels(m0: ManifestMeta, updates: DataFrame,
+                            max: Int): Seq[String] = {
+    val eraRels = m0.allRels.filter(specOfRel(_) != m0.partitionCols).toSet
+    val eraSpecs = eraRels.map(specOfRel)
+    m0.specHistory.distinct.filter(eraSpecs.contains).flatMap { spec =>
+      batchRels(updates, spec, max,
+        s"update batch touches > $max prior-spec (${spec.mkString(",")}) " +
+          "partitions; split the batch or repartitionManifest to finish " +
+          "the migration").filter(eraRels.contains)
+    }.distinct.sorted
+  }
+
+  /** The structural refusal of keyed writes on a DECLARED append-only
+    * table. */
+  private def requireKeyed(path: String, m: ManifestMeta): Unit =
+    require(!m.appendOnly,
+      s"$path is a DECLARED append-only table: keyed merges (updates/" +
+        "deletes) are structurally inexpressible on it — appendManifest " +
+        "is the only write path")
 
   /** The streaming-sink exactly-once guard shared by [[mergeManifest]]
     * and [[mergeManifestDelta]]: true = this batch id equals the
@@ -2945,38 +3140,20 @@ object Layout {
                     forceWins: Boolean = false): Boolean = {
     require(keys.nonEmpty, "mergeManifest needs at least one key column")
     require(!keys.contains(versionCol), "versionCol cannot be a key")
-    val fs = TableFs(spark, path)
-    val maxAttempts = 3
-    var attempt = 0
-    var lastConflict = ""
-    while (attempt < maxAttempts) {
-      attempt += 1
-      // OPTIMISTIC: all reads, validation and the data write run
-      // against snapshot m0 WITHOUT the lease; only the commit takes it
-      val v0 = manifestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(
-          s"$path is not a manifest table; seed it with writeManifestTable"))
-      val m0 = readManifestMeta(spark, path, v0)
-      if (replayedSinkBatch(path, m0, batchId, sinkId)) return false
-      require(!m0.appendOnly,
-        s"$path is a DECLARED append-only table: keyed merges (updates/" +
-          "deletes) are structurally inexpressible on it — appendManifest " +
-          "is the only write path")
+    // OPTIMISTIC: all reads, validation and the data write run against
+    // snapshot m0 WITHOUT the lease; only the commit takes it
+    commit(spark, path, "mergeManifest", refuse = requireKeyed(path, _),
+        batchId = batchId, sinkId = sinkId) { m0 =>
       val pcols = m0.partitionCols
       require(pcols.forall(updates.columns.contains),
         "update batch must carry the partition columns " +
           pcols.mkString(","))
       deleteCol.foreach(d => require(updates.columns.contains(d),
         s"update batch must carry the delete flag column '$d'"))
-      // touched partitions, rendered through Spark's own Cast (writer-
-      // exact dir fragments); bounded by the BATCH's partition count
-      val touchedRows = updates
-        .select(pcols.map(c => col(c).cast("string").as(c)): _*)
-        .distinct().limit(maxTouchedPartitions + 1).collect()
-      require(touchedRows.length <= maxTouchedPartitions,
+      // touched partitions: bounded by the BATCH's partition count
+      val touchedRels = batchRels(updates, pcols, maxTouchedPartitions,
         s"update batch touches > $maxTouchedPartitions partitions; " +
           "split the batch or raise maxTouchedPartitions")
-      val touchedRels = touchedRows.map(relOf(pcols, _)).toSet
       if (m0.morKeys.nonEmpty)
         require(m0.morKeys == keys && m0.morVersionCol.contains(versionCol),
           s"merge spec mismatch: this table resolves merge-on-read deltas " +
@@ -2986,185 +3163,70 @@ object Layout {
             "different semantics to the same table")
       // METADATA-ONLY SPEC EVOLUTION ([[changeManifestPartitionSpec]]):
       // a key whose row predates the current spec lives in an OLD-ERA
-      // partition, whose rel renders under that era's spec from the
-      // update row's own column values (a key's partition values are
-      // immutable — the standing merge contract, now spanning eras).
-      // Those partitions fold into this rewrite and MIGRATE to the
-      // current spec: the merge was rewriting them anyway, so the
-      // mixed-spec debt shrinks with every batch. The rows they
+      // partition. Those partitions fold into this rewrite and MIGRATE
+      // to the current spec: the merge was rewriting them anyway, so
+      // the mixed-spec debt shrinks with every batch. The rows they
       // contribute can land OUTSIDE the batch's own partitions — one
       // narrow pre-scan over just the old-era touched partitions
       // derives the landing set, keeping the produced-dirs guard and
       // conflict detection exact.
-      val oldEraTouched: Seq[String] = {
-        // only specs with LIVE rels: a fully-migrated era may reference
-        // a column since dropped/renamed — selecting it from the batch
-        // would throw on every merge even though no partition needs it
-        val liveSpecs = m0.allRels.map(specOfRel).toSet
-        val priorSpecs = m0.specHistory.distinct
-          .filterNot(_ == pcols).filter(liveSpecs.contains)
-        if (priorSpecs.isEmpty) Nil
-        else {
-          val eraRels = m0.allRels.filter(specOfRel(_) != pcols).toSet
-          if (eraRels.isEmpty) Nil
-          else priorSpecs.flatMap { spec =>
-            val rows = updates
-              .select(spec.map(c => col(c).cast("string").as(c)): _*)
-              .distinct().limit(maxTouchedPartitions + 1).collect()
-            require(rows.length <= maxTouchedPartitions,
-              s"update batch touches > $maxTouchedPartitions prior-spec " +
-                s"(${spec.mkString(",")}) partitions; split the batch " +
-                "or repartitionManifest to finish the migration")
-            rows.map(relOf(spec, _)).filter(eraRels.contains)
-          }.distinct.sorted
-        }
-      }
+      val oldEraTouched = priorSpecRels(m0, updates, maxTouchedPartitions)
       val landingRels: Set[String] =
         if (oldEraTouched.isEmpty) Set.empty
-        else {
-          val landing = readResolved(spark, path, m0, oldEraTouched)
-            .select(pcols.map(c => col(c).cast("string").as(c)): _*)
-            .distinct().limit(maxTouchedPartitions + 1).collect()
-          require(landing.length <= maxTouchedPartitions,
-            s"migrating old-era partition(s) ${oldEraTouched.take(3)
-              .mkString(", ")} would land in > $maxTouchedPartitions " +
-              "current-spec partitions; repartitionManifest is the " +
-              "right tool for this migration")
-          landing.map(relOf(pcols, _)).toSet
-        }
+        else batchRels(readResolved(spark, path, m0, oldEraTouched), pcols,
+          maxTouchedPartitions,
+          s"migrating old-era partition(s) ${oldEraTouched.take(3)
+            .mkString(", ")} would land in > $maxTouchedPartitions " +
+            "current-spec partitions; repartitionManifest is the " +
+            "right tool for this migration")
       val expectedProduced = touchedRels ++ landingRels
-      val allTouched = expectedProduced ++ oldEraTouched
+      val allTouched = (expectedProduced ++ oldEraTouched).toSeq.sorted
       val baseRels = allTouched.filter(r =>
-        m0.entries.contains(r) || m0.deltas.contains(r)).toSeq.sorted
+        m0.entries.contains(r) || m0.deltas.contains(r))
       // stored-schema-aligned window read with any pending merge-on-read
       // deltas resolved in-plan — a copy-on-write merge FOLDS the
       // touched partitions' deltas into the generation it writes
       val base = readResolved(spark, path, m0, baseRels)
-      val tmpDir = uniqueTmpDir(path)
-      try withTmpHeartbeat(fs, tmpDir) {
-        // ONE shuffle for resolve + layout on unbucketed tables: the
-        // tagged union pre-partitions by the partition columns, the
-        // latest-wins window rides that clustering (see latestWins),
-        // and the partitioned write needs no second repartition.
-        // Bucketed tables keep the two-step path — the bucket-id dir
-        // column is not a function of the window keys.
-        //
-        // SKEW GUARD (r17 verdict item 7): clustering the window by
-        // the partition columns concentrates a hot landing partition's
-        // entire latest-wins sort in ONE task (§2.5 skew, §5 spill).
-        // The manifest's own per-rel bytes metadata prices that for
-        // free: when the largest touched base rel exceeds 16 x
-        // spark.sql.adaptive.advisoryPartitionSizeInBytes (1 GiB at
-        // the 64 MB default — past it the single sort task dominates
-        // the stage against advisory-sized peers), fall back to the
-        // two-exchange path: the window's own (pcols ++ keys) exchange
-        // spreads the sort across tasks, then cluster for the write.
-        // Winners are identical on every route (LayoutSpec pins result
-        // equality); only the exchange count differs.
-        val hotRelBytes = 16L * spark.sessionState.conf.getConf(
-          org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-        val maxTouchedRelBytes =
-          baseRels.flatMap(m0.bytes.get).foldLeft(0L)(math.max)
-        if (m0.dataBuckets > 0)
-          clusteredWrite(spark,
-            latestWins(base, updates, pcols, keys, versionCol, deleteCol,
-              forceWins),
-            tmpDir, pcols, m0.dataBucketCols, m0.dataBuckets)
-        else if (maxTouchedRelBytes > hotRelBytes)
-          clusteredWrite(spark,
-            latestWins(base, updates, pcols, keys, versionCol, deleteCol,
-              forceWins),
-            tmpDir, pcols, Nil, 0)
-        else
-          latestWins(base, updates, pcols, keys, versionCol, deleteCol,
-              forceWins, clusterParts = shufflePartitions(spark))
-            .write.mode(SaveMode.Overwrite)
-            .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-            .partitionBy(pcols: _*).parquet(tmpDir)
-        val produced = listPartitionRels(fs, new Path(tmpDir))
-        // a produced rel outside the touched+landing set means the Cast
-        // rendering and the writer disagreed — fail BEFORE publishing
-        val unexpected = produced.filterNot(expectedProduced.contains)
-        require(unexpected.isEmpty,
-          s"mergeManifest: writer produced partition dirs " +
-            s"${unexpected.mkString(",")} outside the touched set " +
-            s"${expectedProduced.mkString(",")} — partition rendering " +
-            "mismatch")
-        // derive published metadata from the tmp tree BEFORE the commit
-        // (one footer walk, no data rescan — and outside the lease, so
-        // the critical section stays renames + one JSON)
-        val scan = scanTmpTree(spark, fs, m0, tmpDir, produced)
-        val (newStats, newFileStats) = statsFromScan(spark, m0, tmpDir, scan)
-        val newBlooms = bloomsFor(spark, path, m0, Map.empty,
-          srcDir = Some(tmpDir))
-        val newBytes = scan.bytes
-        // COMMIT: short lease — re-read the live manifest, rebase or
-        // conflict, rename the tmp tree into gen dirs, one publish
-        val outcome: Either[String, Boolean] =
-          withMaintenanceLock(spark, path, lockWaitMs(spark)) {
-            val v1 = manifestVersion(spark, path).get
-            val m1 = if (v1 == v0) m0 else readManifestMeta(spark, path, v1)
-            lazy val touchedMoved = relStateChanged(m0, m1, allTouched)
-            if (v1 != v0 && replayedSinkBatch(path, m1, batchId, sinkId))
-              Right(false)
-            else if (v1 != v0 && invariantsChanged(m0, m1).isDefined)
-              Left(invariantsChanged(m0, m1).get)
-            else if (v1 != v0 && touchedMoved.nonEmpty)
-              // a concurrent commit rewrote a partition this merge read:
-              // the latest-wins result is stale — retry from fresh
-              Left(s"concurrent commit moved touched partition(s) " +
-                touchedMoved.take(5).mkString(", "))
-            else {
-              val newGens = publishGens(fs, path, tmpDir, m1, produced)
-              // touched partitions that produced no output were fully
-              // deleted: they leave the manifest (dirs reap after
-              // readers drain); touched partitions' pending deltas were
-              // folded into the written gens; old-era touched
-              // partitions migrated wholesale into the produced
-              // current-spec gens, so their entries drop too
-              val removed = baseRels.filterNot(newGens.contains)
-              val entries2 = m1.entries -- removed ++ newGens
-              val deltas2 = m1.deltas -- baseRels
-              // migrate-on-touch can drain an era's LAST partition:
-              // prune specHistory to eras with live rels, so the
-              // spec-debt dashboard, the budgeted drain's convergence
-              // check, and repartitionManifest's "nothing left" guard
-              // all see a clean single-spec table (the same pruning
-              // migrateManifestPartitions does)
-              val liveOld = (entries2.keySet ++ deltas2.keySet)
-                .map(specOfRel).filterNot(_ == pcols)
-              writeManifestMeta(spark, path, m1.copy(version = v1 + 1,
-                entries = entries2,
-                stats = m1.stats -- removed ++ newStats,
-                blooms = m1.blooms -- removed ++ newBlooms,
-                bytes = m1.bytes -- removed ++ newBytes,
-                // every touched rel's files were rewritten wholesale:
-                // replace their per-file entries, drop the vanished
-                fileStats = m1.fileStats -- baseRels --
-                  expectedProduced ++
-                  genKeyedFileStats(newFileStats, newGens),
-                deltas = deltas2,
-                specHistory = m1.specHistory.filter(liveOld.contains),
-                op = "merge", opDeletes = false,
-                sinkBatches =
-                  if (batchId >= 0) m1.sinkBatches + (sinkId -> batchId)
-                  else m1.sinkBatches))
-              Right(true)
-            }
-          }
-        outcome match {
-          case Right(applied) => return applied
-          case Left(reason) =>
-            commitConflicts.incrementAndGet()
-            lastConflict = reason // retry fresh
-        }
-      } finally { fs.delete(new Path(tmpDir), true); () }
-    }
-    throw new IllegalStateException(
-      s"mergeManifest on $path: commit conflicted $maxAttempts times " +
-        s"(last: $lastConflict) — a concurrent writer keeps touching " +
-        "the same partitions; serialize these writers or split the " +
-        "batch by partition")
+      // ONE shuffle for resolve + layout on unbucketed tables: the
+      // tagged union pre-partitions by the partition columns, the
+      // latest-wins window rides that clustering (see latestWins),
+      // and the partitioned write needs no second repartition.
+      // Bucketed tables keep the two-step path — the bucket-id dir
+      // column is not a function of the window keys.
+      //
+      // SKEW GUARD (r17 verdict item 7): clustering the window by
+      // the partition columns concentrates a hot landing partition's
+      // entire latest-wins sort in ONE task (§2.5 skew, §5 spill).
+      // The manifest's own per-rel bytes metadata prices that for
+      // free: when the largest touched base rel exceeds 16 x
+      // spark.sql.adaptive.advisoryPartitionSizeInBytes (1 GiB at
+      // the 64 MB default — past it the single sort task dominates
+      // the stage against advisory-sized peers), fall back to the
+      // two-exchange path: the window's own (pcols ++ keys) exchange
+      // spreads the sort across tasks, then cluster for the write.
+      // Winners are identical on every route (LayoutSpec pins result
+      // equality); only the exchange count differs.
+      val hotRelBytes = 16L * spark.sessionState.conf.getConf(
+        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      val oneShuffle = m0.dataBuckets == 0 &&
+        baseRels.flatMap(m0.bytes.get).foldLeft(0L)(math.max) <= hotRelBytes
+      Right(Plan(
+        latestWins(base, updates, pcols, keys, versionCol, deleteCol,
+          forceWins, clusterParts = if (oneShuffle) shufflePartitions(spark) else 0),
+        expectedProduced,
+        write = (merged, tmpDir) =>
+          if (oneShuffle)
+            merged.write.mode(SaveMode.Overwrite)
+              .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+              .partitionBy(pcols: _*).parquet(tmpDir)
+          else clusteredWrite(spark, merged, tmpDir, pcols,
+            m0.dataBucketCols, m0.dataBuckets),
+        publish = replaceRels(path, allTouched, "merge"),
+        result = true,
+        // a concurrent commit that rewrote a partition this merge read
+        // makes the latest-wins result stale — retry from fresh
+        conflict = movedRels(m0, _, allTouched)))
+    }.getOrElse(false)
   }
 
   /** Widen existing per-partition stats with `add` (the stats of a
@@ -3237,22 +3299,12 @@ object Layout {
                      rows: DataFrame,
                      maxTouchedPartitions: Int = 10000,
                      batchId: Long = -1L,
-                     sinkId: String = ""): Boolean = {
-    val fs = TableFs(spark, path)
-    val maxAttempts = 3
-    var attempt = 0
-    var lastConflict = ""
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val v0 = manifestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(
-          s"$path is not a manifest table; seed it with writeManifestTable"))
-      val m0 = readManifestMeta(spark, path, v0)
-      require(m0.appendOnly,
-        s"$path is not a declared append-only table: appends without a " +
-          "merge spec would bypass latest-wins resolution — seed with " +
-          "appendOnly = true, or use mergeManifestDelta with keys")
-      if (replayedSinkBatch(path, m0, batchId, sinkId)) return false
+                     sinkId: String = ""): Boolean =
+    commit(spark, path, "appendManifest", batchId = batchId, sinkId = sinkId,
+        refuse = m0 => require(m0.appendOnly,
+          s"$path is not a declared append-only table: appends without a " +
+            "merge spec would bypass latest-wins resolution — seed with " +
+            "appendOnly = true, or use mergeManifestDelta with keys")) { m0 =>
       val pcols = m0.partitionCols
       require(pcols.forall(rows.columns.contains),
         "append batch must carry the partition columns " +
@@ -3260,16 +3312,9 @@ object Layout {
       Seq("gen", MorDel, MorSeq).foreach(c =>
         require(!rows.columns.contains(c),
           s"'$c' is reserved by the manifest layout; rename the column"))
-      val baseCols = manifestSchema(m0).fieldNames.toSeq
-      val missing = baseCols.filterNot(rows.columns.contains)
-      require(missing.isEmpty,
-        s"appendManifest: batch is missing base column(s) " +
-          s"${missing.mkString("[", ", ", "]")}")
-      val extra = rows.columns.filterNot(baseCols.contains)
-      require(extra.isEmpty,
-        s"appendManifest: batch carries column(s) " +
-          s"${extra.mkString("[", ", ", "]")} absent from the base " +
-          "table — evolve the base schema first")
+      val sch = manifestSchema(m0)
+      requireBatchColumns("appendManifest", sch.fieldNames.toSeq,
+        rows.columns.toSeq)
       // TYPES, not just names: writing the batch's own types would
       // publish a generation every subsequent read (which requests the
       // stored schema) fails to decode — a deferred failure poisoning
@@ -3277,7 +3322,7 @@ object Layout {
       // provably-lossless up-casts are written AS the stored type;
       // anything else fails loudly NOW (the other write paths' loud
       // schema contract).
-      val badTypes = manifestSchema(m0).fields.toSeq.flatMap { f =>
+      val badTypes = sch.fields.toSeq.flatMap { f =>
         val got = rows.schema(f.name).dataType
         if (got == f.dataType ||
             org.apache.spark.sql.catalyst.expressions.Cast
@@ -3288,73 +3333,19 @@ object Layout {
         s"appendManifest: batch column type(s) do not match the stored " +
           s"schema — ${badTypes.mkString("; ")}; cast the batch " +
           "explicitly (only lossless up-casts are applied implicitly)")
-      val touchedRows = rows
-        .select(pcols.map(c => col(c).cast("string").as(c)): _*)
-        .distinct().limit(maxTouchedPartitions + 1).collect()
-      require(touchedRows.length <= maxTouchedPartitions,
+      val touchedRels = batchRels(rows, pcols, maxTouchedPartitions,
         s"append batch touches > $maxTouchedPartitions partitions; " +
           "split the batch or raise maxTouchedPartitions")
-      val touchedRels = touchedRows.map(relOf(pcols, _)).toSet
-      val tmpDir = uniqueTmpDir(path)
-      try withTmpHeartbeat(fs, tmpDir) {
-        val sch = manifestSchema(m0)
+      Right(Plan(
         // cast (validated lossless above) so the landed files carry
         // exactly the stored types
         rows.select(sch.fields.toSeq.map(f =>
-            col(f.name).cast(f.dataType).as(f.name)): _*)
-          .repartition(shufflePartitions(spark), pcols.map(col): _*)
-          .write.mode(SaveMode.Overwrite)
-          .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-          .partitionBy(pcols: _*).parquet(tmpDir)
-        val produced = listPartitionRels(fs, new Path(tmpDir))
-        val unexpected = produced.filterNot(touchedRels.contains)
-        require(unexpected.isEmpty,
-          s"appendManifest: writer produced partition dirs " +
-            s"${unexpected.mkString(",")} outside the touched set — " +
-            "partition rendering mismatch")
-        val (deltaStats, deltaFileStats) = statsFromScan(spark, m0, tmpDir,
-          scanTmpTree(spark, fs, m0, tmpDir, produced))
-        val deltaBlooms = bloomsFor(spark, path, m0, Map.empty,
-          srcDir = Some(tmpDir))
-        val outcome: Either[String, Boolean] =
-          withMaintenanceLock(spark, path, lockWaitMs(spark)) {
-            val v1 = manifestVersion(spark, path).get
-            val m1 = if (v1 == v0) m0 else readManifestMeta(spark, path, v1)
-            if (v1 != v0 && replayedSinkBatch(path, m1, batchId, sinkId))
-              Right(false)
-            else if (v1 != v0 && invariantsChanged(m0, m1).isDefined)
-              Left(invariantsChanged(m0, m1).get)
-            else {
-              val newGens = publishGens(fs, path, tmpDir, m1, produced)
-              writeManifestMeta(spark, path, m1.copy(version = v1 + 1,
-                deltas = m1.deltas ++ newGens.map { case (rel, g) =>
-                  rel -> (m1.deltas.getOrElse(rel, Nil) :+ g) },
-                stats = widenStats(spark, m1, deltaStats),
-                blooms = widenBlooms(m1.blooms, deltaBlooms),
-                fileStats = m1.fileStats ++
-                  genKeyedFileStats(deltaFileStats, newGens)
-                    .map { case (rel, files) =>
-                      rel -> (m1.fileStats.getOrElse(rel, Map.empty) ++
-                        files) },
-                op = "delta", opDeletes = false,
-                sinkBatches =
-                  if (batchId >= 0) m1.sinkBatches + (sinkId -> batchId)
-                  else m1.sinkBatches))
-              Right(true)
-            }
-          }
-        outcome match {
-          case Right(applied) => return applied
-          case Left(reason) =>
-            commitConflicts.incrementAndGet()
-            lastConflict = reason
-        }
-      } finally { fs.delete(new Path(tmpDir), true); () }
-    }
-    throw new IllegalStateException(
-      s"appendManifest on $path: commit conflicted $maxAttempts times " +
-        s"(last: $lastConflict)")
-  }
+          col(f.name).cast(f.dataType).as(f.name)): _*),
+        touchedRels,
+        write = clusteredWrite(spark, _, _, pcols, Nil, 0),
+        publish = appendDeltas(spark, path),
+        result = true))
+    }.getOrElse(false)
 
   /** MERGE-ON-READ variant of [[mergeManifest]]: the CDC batch is
     * appended as a pending DELTA generation for each touched partition
@@ -3391,36 +3382,21 @@ object Layout {
                          sinkId: String = ""): Boolean = {
     require(keys.nonEmpty, "mergeManifestDelta needs at least one key")
     require(!keys.contains(versionCol), "versionCol cannot be a key")
-    val fs = TableFs(spark, path)
-    val maxAttempts = 3
-    var attempt = 0
-    var lastConflict = ""
-    while (attempt < maxAttempts) {
-      attempt += 1
-      // OPTIMISTIC, and maximally rebase-friendly: a delta publish
-      // depends only on TABLE invariants (schema, partitioning, the
-      // resolution spec) — its data never reads the base, so commits
-      // that landed concurrently on the SAME partitions rebase cleanly
-      // (our delta gens simply append to the live delta lists)
-      val v0 = manifestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(
-          s"$path is not a manifest table; seed it with writeManifestTable"))
-      val m0 = readManifestMeta(spark, path, v0)
-      // STRUCTURAL refusals fire before the replay short-circuit: a
-      // delta write is NEVER valid on these tables, and a sinkBatch
-      // marker left by a different (legitimate) writer under the same
-      // sinkId must not silently no-op the misuse
-      require(!m0.appendOnly,
-        s"$path is a DECLARED append-only table: keyed merges (updates/" +
-          "deletes) are structurally inexpressible on it — appendManifest " +
-          "is the only write path")
+    // OPTIMISTIC, and maximally rebase-friendly: a delta publish
+    // depends only on TABLE invariants (schema, partitioning, the
+    // resolution spec) — its data never reads the base, so commits
+    // that landed concurrently on the SAME partitions rebase cleanly
+    // (our delta gens simply append to the live delta lists)
+    commit(spark, path, "mergeManifestDelta", batchId = batchId,
+        sinkId = sinkId, refuse = { m0 =>
+      requireKeyed(path, m0)
       require(m0.dataBuckets == 0,
         s"$path is a data-bucketed manifest table: merge-on-read delta " +
           "generations would land files outside the bucket naming + " +
           "placement contract every bucketed scan assumes — bucketed " +
           "tables are copy-on-write; use mergeManifest (SQL DML routes " +
           "there; streaming sinks: set .option(\"mor\", \"false\"))")
-      if (replayedSinkBatch(path, m0, batchId, sinkId)) return false
+    }) { m0 =>
       if (m0.morKeys.nonEmpty)
         require(m0.morKeys == keys && m0.morVersionCol.contains(versionCol),
           s"merge spec mismatch: this table resolves merge-on-read deltas " +
@@ -3435,154 +3411,53 @@ object Layout {
       Seq("gen", MorDel, MorSeq).foreach(c =>
         require(!updates.columns.contains(c),
           s"'$c' is reserved by the manifest layout; rename the column"))
-      // the same loud schema contract as latestWins: every base column
-      // present, nothing extra beyond the delete flag
-      val baseCols = manifestSchema(m0).fieldNames.toSeq
-      val missing = baseCols.filterNot(deleteCol.contains)
-        .filterNot(updates.columns.contains)
-      require(missing.isEmpty,
-        s"mergeManifestDelta: update batch is missing base column(s) " +
-          s"${missing.mkString("[", ", ", "]")}")
-      val extra = updates.columns.filterNot(baseCols.contains)
-        .filterNot(deleteCol.contains)
-      require(extra.isEmpty,
-        s"mergeManifestDelta: update batch carries column(s) " +
-          s"${extra.mkString("[", ", ", "]")} absent from the base table — " +
-          "evolve the base schema first or project the batch explicitly")
+      val sch = manifestSchema(m0)
+      val baseCols = sch.fieldNames.toSeq
+      requireBatchColumns("mergeManifestDelta", baseCols,
+        updates.columns.toSeq, deleteCol)
       require(keys.forall(baseCols.contains) && baseCols.contains(versionCol),
         "keys and versionCol must be base table columns")
-      val touchedRows = updates
-        .select(pcols.map(c => col(c).cast("string").as(c)): _*)
-        .distinct().limit(maxTouchedPartitions + 1).collect()
-      require(touchedRows.length <= maxTouchedPartitions,
+      val touchedRels = batchRels(updates, pcols, maxTouchedPartitions,
         s"update batch touches > $maxTouchedPartitions partitions; " +
           "split the batch or raise maxTouchedPartitions")
-      val touchedRels = touchedRows.map(relOf(pcols, _)).toSet
       // METADATA-ONLY SPEC EVOLUTION: merge-on-read resolution is
       // per-partition (the window spans one rel's base + deltas), so a
       // delta whose key still lives in an UNMIGRATED old-era partition
       // would never meet its base row — the key would duplicate.
-      // Refuse exactly those batches (the old-era candidate rel renders
-      // from the batch's own values — keys never move partitions);
-      // batches entirely over new/migrated keys keep the O(batch) path.
-      locally {
-        // only specs with LIVE rels: a fully-migrated era may reference
-        // a column since dropped/renamed — selecting it from the batch
-        // would throw on every merge even though no partition needs it
-        val liveSpecs = m0.allRels.map(specOfRel).toSet
-        val priorSpecs = m0.specHistory.distinct
-          .filterNot(_ == pcols).filter(liveSpecs.contains)
-        if (priorSpecs.nonEmpty) {
-          val eraRels = m0.allRels.filter(specOfRel(_) != pcols).toSet
-          if (eraRels.nonEmpty) {
-            val overlap = priorSpecs.flatMap { spec =>
-              val rows = updates.select(spec.map(c =>
-                  col(c).cast("string").as(c)): _*)
-                .distinct().limit(maxTouchedPartitions + 1).collect()
-              // the limit above caps the COLLECT, not the check: a batch
-              // spanning more prior-spec tuples than the cap would get an
-              // arbitrarily truncated candidate set here, and an overlap
-              // with an unmigrated old-era partition could escape —
-              // silently duplicating keys on every read. Same posture as
-              // mergeManifest's pre-scan: refuse loudly instead.
-              require(rows.length <= maxTouchedPartitions,
-                s"update batch touches > $maxTouchedPartitions prior-spec " +
-                  s"(${spec.mkString(",")}) partitions; split the batch " +
-                  "or repartitionManifest to finish the migration")
-              rows.map(relOf(spec, _)).filter(eraRels.contains)
-            }.distinct.sorted
-            require(overlap.isEmpty,
-              s"mergeManifestDelta on $path: the batch overlaps " +
-                s"prior-spec partition(s) ${overlap.take(5).mkString(", ")}" +
-                s"${if (overlap.size > 5) ", …" else ""} not yet migrated " +
-                "to the current partition spec — per-partition " +
-                "resolution cannot span spec eras. Apply this batch with " +
-                "mergeManifest (copy-on-write migrates those partitions " +
-                "on touch), or run repartitionManifest to finish the " +
-                "migration")
-          }
-        }
-      }
-      val tmpDir = uniqueTmpDir(path)
-      try withTmpHeartbeat(fs, tmpDir) {
-        val del = deleteCol.map(col(_).cast("boolean")).getOrElse(lit(false))
-        val sch = manifestSchema(m0)
-        // record whether this batch carries ANY delete row — observed on
-        // the write job itself (zero extra passes), published as the
-        // version's `opDeletes` flag so append-only feed consumers can
-        // refuse delete-bearing versions without re-reading the files
-        val delObs = org.apache.spark.sql.Observation()
-        val flagged = updates.withColumn(MorDel, coalesce(del, lit(false)))
-          .select((sch.fields.map(f => col(f.name)) :+ col(MorDel)).toSeq: _*)
-        (if (deleteCol.isEmpty) flagged
-         else flagged.observe(delObs, max(col(MorDel)).as("anydel")))
-          // one delta file per touched partition (the whole point of a
-          // delta is to be small; 32 shards of a 15k-row batch are not)
-          .repartition(shufflePartitions(spark), pcols.map(col): _*)
-          .write.mode(SaveMode.Overwrite)
-          .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-          .partitionBy(pcols: _*).parquet(tmpDir)
-        val hasDeletes = deleteCol.nonEmpty &&
-          Option(delObs.get("anydel")).contains(true)
-        val produced = listPartitionRels(fs, new Path(tmpDir))
-        val unexpected = produced.filterNot(touchedRels.contains)
-        require(unexpected.isEmpty,
-          s"mergeManifestDelta: writer produced partition dirs " +
-            s"${unexpected.mkString(",")} outside the touched set — " +
-            "partition rendering mismatch")
-        // delta stats from the written footers (blooms stay the one
-        // aggregate) — widened monotonically into the standing ones at
-        // commit time
-        val (deltaStats, deltaFileStats) = statsFromScan(spark, m0, tmpDir,
-          scanTmpTree(spark, fs, m0, tmpDir, produced))
-        val deltaBlooms = bloomsFor(spark, path, m0, Map.empty,
-          srcDir = Some(tmpDir))
-        val outcome: Either[String, Boolean] =
-          withMaintenanceLock(spark, path, lockWaitMs(spark)) {
-            val v1 = manifestVersion(spark, path).get
-            val m1 = if (v1 == v0) m0 else readManifestMeta(spark, path, v1)
-            if (v1 != v0 && replayedSinkBatch(path, m1, batchId, sinkId))
-              Right(false)
-            else if (v1 != v0 && invariantsChanged(m0, m1).isDefined)
-              Left(invariantsChanged(m0, m1).get)
-            else {
-              val newDeltaGens = publishGens(fs, path, tmpDir, m1, produced)
-              // widen against the LIVE stats (which already cover any
-              // concurrently-landed deltas); the tiny local widen job
-              // is bounded by the touched partition count
-              writeManifestMeta(spark, path, m1.copy(version = v1 + 1,
-                deltas = m1.deltas ++ newDeltaGens.map { case (rel, g) =>
-                  rel -> (m1.deltas.getOrElse(rel, Nil) :+ g) },
-                stats = widenStats(spark, m1, deltaStats),
-                blooms = widenBlooms(m1.blooms, deltaBlooms),
-                // delta files ADD to their rel's per-file entries (the
-                // base generation's stay valid — nothing rewrote it)
-                fileStats = m1.fileStats ++
-                  genKeyedFileStats(deltaFileStats, newDeltaGens)
-                    .map { case (rel, files) =>
-                      rel -> (m1.fileStats.getOrElse(rel, Map.empty) ++
-                        files) },
-                morKeys = keys, morVersionCol = Some(versionCol),
-                morDeleteCol = m1.morDeleteCol.orElse(deleteCol),
-                op = "delta", opDeletes = hasDeletes,
-                sinkBatches =
-                  if (batchId >= 0) m1.sinkBatches + (sinkId -> batchId)
-                  else m1.sinkBatches))
-              Right(true)
-            }
-          }
-        outcome match {
-          case Right(applied) => return applied
-          case Left(reason) =>
-            commitConflicts.incrementAndGet()
-            lastConflict = reason // retry fresh
-        }
-      } finally { fs.delete(new Path(tmpDir), true); () }
-    }
-    throw new IllegalStateException(
-      s"mergeManifestDelta on $path: commit conflicted $maxAttempts " +
-        s"times (last: $lastConflict) — concurrent table-level changes " +
-        "(schema/partitioning/spec) keep landing; quiesce them")
+      // Refuse exactly those batches; batches entirely over new/
+      // migrated keys keep the O(batch) path.
+      val overlap = priorSpecRels(m0, updates, maxTouchedPartitions)
+      require(overlap.isEmpty,
+        s"mergeManifestDelta on $path: the batch overlaps " +
+          s"prior-spec partition(s) ${overlap.take(5).mkString(", ")}" +
+          s"${if (overlap.size > 5) ", …" else ""} not yet migrated " +
+          "to the current partition spec — per-partition " +
+          "resolution cannot span spec eras. Apply this batch with " +
+          "mergeManifest (copy-on-write migrates those partitions " +
+          "on touch), or run repartitionManifest to finish the " +
+          "migration")
+      val del = deleteCol.map(col(_).cast("boolean")).getOrElse(lit(false))
+      // record whether this batch carries ANY delete row — observed on
+      // the write job itself (zero extra passes), published as the
+      // version's `opDeletes` flag so append-only feed consumers can
+      // refuse delete-bearing versions without re-reading the files
+      val delObs = org.apache.spark.sql.Observation()
+      val flagged = updates.withColumn(MorDel, coalesce(del, lit(false)))
+        .select((sch.fields.map(f => col(f.name)) :+ col(MorDel)).toSeq: _*)
+      Right(Plan(
+        if (deleteCol.isEmpty) flagged
+        else flagged.observe(delObs, max(col(MorDel)).as("anydel")),
+        touchedRels,
+        // one delta file per touched partition (the whole point of a
+        // delta is to be small; 32 shards of a 15k-row batch are not)
+        write = clusteredWrite(spark, _, _, pcols, Nil, 0),
+        publish = (m1, st) => appendDeltas(spark, path)(m1, st).copy(
+          morKeys = keys, morVersionCol = Some(versionCol),
+          morDeleteCol = m1.morDeleteCol.orElse(deleteCol),
+          opDeletes = deleteCol.nonEmpty &&
+            Option(delObs.get("anydel")).contains(true)),
+        result = true))
+    }.getOrElse(false)
   }
 
   /** Fold every pending merge-on-read delta into its partition's base:
@@ -3628,100 +3503,70 @@ object Layout {
       .filter(rel => m.specHistory.isEmpty ||
         specOfRel(rel) == m.partitionCols)
     if (rels.isEmpty) Nil
-    else {
-      val fs = TableFs(spark, path)
-      val resolved = readResolved(spark, path, m, rels)
-      val tmpDir = uniqueTmpDir(path)
-      try withTmpHeartbeat(fs, tmpDir) {
-        val obs = org.apache.spark.sql.Observation()
-        val clustered = resolved.observe(obs, count(lit(1)).as("n"))
-          .repartition(shufflePartitions(spark), m.partitionCols.map(col): _*)
-        (if (sortCols.isEmpty) clustered
-         else clustered.sortWithinPartitions(
-           (m.partitionCols ++ sortCols).map(col): _*))
-          .write.mode(SaveMode.Overwrite)
-          .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-          .partitionBy(m.partitionCols: _*).parquet(tmpDir)
-        val n0 = obs.get("n").asInstanceOf[Long]
-        val produced = listPartitionRels(fs, new Path(tmpDir))
-        val unexpected = produced.filterNot(rels.toSet)
-        require(unexpected.isEmpty,
-          s"foldManifestDeltas: writer produced partition dirs " +
-            s"${unexpected.mkString(",")} outside the delta-bearing set — " +
-            "partition rendering mismatch")
-        // published metadata from the written footers, before the
-        // commit — the row-count verify reads parquet metadata, not
-        // the data
-        val scan = scanTmpTree(spark, fs, m, tmpDir, produced)
-        require(scan.rows == n0,
-          s"delta fold would lose rows: $n0 -> ${scan.rows}; aborting")
-        val (newStats, newFileStatsRaw) = statsFromScan(spark, m, tmpDir, scan)
-        val newBlooms = bloomsFor(spark, path, m, Map.empty,
-          srcDir = Some(tmpDir))
-        val newBytes = scan.bytes
-        withMaintenanceLock(spark, path, lockWaitMs(spark)) {
-          val v1 = manifestVersion(spark, path).get
-          val m1 = if (v1 == v) m else readManifestMeta(spark, path, v1)
-          if (v1 != v) invariantsChanged(m, m1).foreach(reason =>
-            throw new IllegalStateException(
-              s"foldManifestDeltas on $path: $reason landed mid-fold; " +
-                "re-run after the table-level change settles"))
-          // a rel commits iff its base entry did not move AND its delta
-          // list still starts with exactly what this fold resolved —
-          // deltas a concurrent writer APPENDED survive as pending on
-          // top of the folded base (that equals fold-then-delta);
-          // anything else (another fold/merge/compact won the race)
-          // skips: its tmp output is simply never renamed
-          val committable = rels.filter { rel =>
-            m1.entries.get(rel) == m.entries.get(rel) &&
-              m1.deltas.getOrElse(rel, Nil).startsWith(m.deltas(rel))
-          }
-          if (committable.isEmpty) Nil
-          else {
-            val producedCommit = produced.filter(committable.contains)
-            val newGens = publishGens(fs, path, tmpDir, m1, producedCommit)
-            // survivors: deltas appended after this fold's snapshot
-            val survivors = committable.map(rel =>
-              rel -> m1.deltas.getOrElse(rel, Nil)
-                .drop(m.deltas(rel).size)).toMap
-            // a rel whose fold produced no base output drops its base
-            // entry (the folded window resolved to zero rows) — fully
-            // removed when nothing survived, survivors-only otherwise
-            val entriesRemoved = committable.filterNot(newGens.contains)
-            val fullyRemoved = entriesRemoved
-              .filter(rel => survivors(rel).isEmpty)
-            // exact recomputed stats/blooms apply only where NO deltas
-            // survived — a survivor's rows are covered by the standing
-            // widened stats (kept), never by this fold's exact ones
-            val exactRels = committable.filter(rel =>
-              survivors(rel).isEmpty && newGens.contains(rel)).toSet
-            // per-file entries: the folded base's files replace the
-            // rel's old base+folded-delta entries; a surviving delta's
-            // entries (added when it landed) carry over untouched
-            val newFileStats = genKeyedFileStats(newFileStatsRaw, newGens)
-            val foldedFileStats = committable.flatMap { rel =>
-              val merged =
-                fileStatsOfGens(m1.fileStats.getOrElse(rel, Map.empty),
-                  survivors(rel).toSet) ++
-                newFileStats.getOrElse(rel, Map.empty)
-              if (merged.isEmpty) None else Some(rel -> merged)
-            }.toMap
-            writeManifestMeta(spark, path, m1.copy(version = v1 + 1,
-              entries = m1.entries -- entriesRemoved ++ newGens,
-              deltas = (m1.deltas -- committable) ++
-                survivors.filter(_._2.nonEmpty),
-              stats = m1.stats -- fullyRemoved ++
-                newStats.view.filterKeys(exactRels).toMap,
-              blooms = m1.blooms -- fullyRemoved ++
-                newBlooms.view.filterKeys(exactRels).toMap,
-              bytes = m1.bytes -- entriesRemoved ++
-                newBytes.view.filterKeys(newGens.keySet).toMap,
-              fileStats = (m1.fileStats -- committable) ++ foldedFileStats,
-              op = "fold", opDeletes = false))
-            producedCommit.sorted
-          }
+    else stage(spark, path, m, "foldManifestDeltas",
+        readResolved(spark, path, m, rels), Some(rels.toSet),
+        verifyRows = true)(clusteredWrite(spark, _, _, m.partitionCols, Nil, 0,
+          sortTail = sortCols.map(col))) { st =>
+      underLease(spark, path, m) { m1 =>
+        if (m1.version != m.version) invariantsChanged(m, m1).foreach(reason =>
+          throw new IllegalStateException(
+            s"foldManifestDeltas on $path: $reason landed mid-fold; " +
+              "re-run after the table-level change settles"))
+        // a rel commits iff its base entry did not move AND its delta
+        // list still starts with exactly what this fold resolved —
+        // deltas a concurrent writer APPENDED survive as pending on
+        // top of the folded base (that equals fold-then-delta);
+        // anything else (another fold/merge/compact won the race)
+        // skips: its tmp output is simply never renamed
+        val committable = rels.filter { rel =>
+          m1.entries.get(rel) == m.entries.get(rel) &&
+            m1.deltas.getOrElse(rel, Nil).startsWith(m.deltas(rel))
         }
-      } finally { fs.delete(new Path(tmpDir), true); () }
+        if (committable.isEmpty) Nil
+        else {
+          val producedCommit = st.produced.filter(committable.contains)
+          val newGens = publishGens(st.fs, path, st.tmpDir, m1, producedCommit)
+          // survivors: deltas appended after this fold's snapshot
+          val survivors = committable.map(rel =>
+            rel -> m1.deltas.getOrElse(rel, Nil)
+              .drop(m.deltas(rel).size)).toMap
+          // a rel whose fold produced no base output drops its base
+          // entry (the folded window resolved to zero rows) — fully
+          // removed when nothing survived, survivors-only otherwise
+          val entriesRemoved = committable.filterNot(newGens.contains)
+          val fullyRemoved = entriesRemoved
+            .filter(rel => survivors(rel).isEmpty)
+          // exact recomputed stats/blooms apply only where NO deltas
+          // survived — a survivor's rows are covered by the standing
+          // widened stats (kept), never by this fold's exact ones
+          val exactRels = committable.filter(rel =>
+            survivors(rel).isEmpty && newGens.contains(rel)).toSet
+          // per-file entries: the folded base's files replace the
+          // rel's old base+folded-delta entries; a surviving delta's
+          // entries (added when it landed) carry over untouched
+          val newFileStats = genKeyedFileStats(st.fileStats, newGens)
+          val foldedFileStats = committable.flatMap { rel =>
+            val merged =
+              fileStatsOfGens(m1.fileStats.getOrElse(rel, Map.empty),
+                survivors(rel).toSet) ++
+              newFileStats.getOrElse(rel, Map.empty)
+            if (merged.isEmpty) None else Some(rel -> merged)
+          }.toMap
+          writeManifestMeta(spark, path, m1.copy(version = m1.version + 1,
+            entries = m1.entries -- entriesRemoved ++ newGens,
+            deltas = (m1.deltas -- committable) ++
+              survivors.filter(_._2.nonEmpty),
+            stats = m1.stats -- fullyRemoved ++
+              st.stats.view.filterKeys(exactRels).toMap,
+            blooms = m1.blooms -- fullyRemoved ++
+              st.blooms.view.filterKeys(exactRels).toMap,
+            bytes = m1.bytes -- entriesRemoved ++
+              st.bytes.view.filterKeys(newGens.keySet).toMap,
+            fileStats = (m1.fileStats -- committable) ++ foldedFileStats,
+            op = "fold", opDeletes = false))
+          producedCommit.sorted
+        }
+      }
     }
   }
 
@@ -4627,46 +4472,29 @@ object Layout {
       // skipping always sound — the next compaction catches up).
       val base = readManifestRels(spark, path, m,
         selected.map(rel => rel -> m.entries(rel)).toMap)
-      val tmpDir = uniqueTmpDir(path)
-      try withTmpHeartbeat(fs, tmpDir) {
-        val obs = org.apache.spark.sql.Observation()
-        // the z key is computed BEFORE the observation/shuffle (per-row,
-        // one boundary pass over the selected partitions only) and
-        // dropped after the in-task sort, never written
-        val keyed =
-          if (zorderCols.isEmpty) base
-          else withZ(base, zorderCols, zorderBits, 0.001)
-        // partition cols (and, on a bucketed table, the bucket id —
-        // compaction preserves the contract, one file per bucket per
-        // dir) lead the in-task sort so each task's rows stay grouped
-        // by output dir; within a dir the file is sortCols- or
-        // z-ordered
-        val sortTail =
-          if (zorderCols.nonEmpty) Seq(col("__z")) else sortCols.map(col)
-        clusteredWrite(spark, keyed.observe(obs, count(lit(1)).as("n")),
-          tmpDir, m.partitionCols, m.dataBucketCols, m.dataBuckets,
-          sortTail = sortTail, dropCols = Seq("__z"))
-        val n0 = obs.get("n").asInstanceOf[Long]
-        val produced = listPartitionRels(fs, new Path(tmpDir))
-        val unexpected = produced.filterNot(selected.toSet)
-        require(unexpected.isEmpty,
-          s"compactManifest: writer produced partition dirs " +
-            s"${unexpected.mkString(",")} outside the selected set — " +
-            "partition rendering mismatch")
-        // row-count verify + per-FILE stats from the written footers: a
-        // sorted/z-ordered compaction is exactly where per-file ranges
-        // turn disjoint, so file-granular skipping comes along free
-        // (partition-level stats carry forward unchanged — the rewrite
-        // is row-identical)
-        val scan = scanTmpTree(spark, fs, m, tmpDir, produced)
-        require(scan.rows == n0,
-          s"manifest compaction would lose rows: $n0 -> ${scan.rows}; " +
-            "aborting")
-        val (_, compactFileStats) = statsFromScan(spark, m, tmpDir, scan)
-        withMaintenanceLock(spark, path, lockWaitMs(spark)) {
-          val v1 = manifestVersion(spark, path).get
-          val m1 = if (v1 == v) m else readManifestMeta(spark, path, v1)
-          if (v1 != v)
+      // the z key is computed per row BEFORE the shuffle (one boundary
+      // pass over the selected partitions only) and dropped after the
+      // in-task sort, never written
+      val keyed =
+        if (zorderCols.isEmpty) base
+        else withZ(base, zorderCols, zorderBits, 0.001)
+      // partition cols (and, on a bucketed table, the bucket id —
+      // compaction preserves the contract, one file per bucket per
+      // dir) lead the in-task sort so each task's rows stay grouped
+      // by output dir; within a dir the file is sortCols- or z-ordered
+      val sortTail =
+        if (zorderCols.nonEmpty) Seq(col("__z")) else sortCols.map(col)
+      // row-count verify + per-FILE stats from the written footers: a
+      // sorted/z-ordered compaction is exactly where per-file ranges
+      // turn disjoint, so file-granular skipping comes along free; no
+      // blooms, and partition-level stats carry forward unchanged —
+      // the rewrite is row-identical
+      stage(spark, path, m, "compactManifest", keyed, Some(selected.toSet),
+          verifyRows = true, blooms = false)(clusteredWrite(spark, _, _,
+            m.partitionCols, m.dataBucketCols, m.dataBuckets,
+            sortTail = sortTail, dropCols = Seq("__z"))) { st =>
+        underLease(spark, path, m) { m1 =>
+          if (m1.version != m.version)
             invariantsChanged(m, m1, checkMorSpec = false).foreach(reason =>
               throw new IllegalStateException(
                 s"compactManifest on $path: $reason landed " +
@@ -4674,36 +4502,35 @@ object Layout {
           // a rel commits iff its BASE entry did not move (pending
           // deltas — existing or concurrently landed — are irrelevant:
           // the compacted base is row-identical, resolution unchanged)
-          val committable = produced.filter(rel =>
+          val committable = st.produced.filter(rel =>
             m1.entries.get(rel) == m.entries.get(rel)).toSet
           if (committable.isEmpty) Nil
           else {
-            val newGens = publishGens(fs, path, tmpDir, m1,
-              produced.filter(committable))
-            // row-identical rewrite: stats carry forward unchanged, but
-            // the FILES changed — bytes recompute for rewritten rels,
-            // and per-file entries replace the old BASE generation's
+            val newGens = publishGens(st.fs, path, st.tmpDir, m1,
+              st.produced.filter(committable))
+            // the FILES changed: bytes recompute for rewritten rels, and
+            // per-file entries replace the old BASE generation's
             // (pending deltas' file entries stay: compaction never
             // touches them)
-            val newFs = genKeyedFileStats(compactFileStats, newGens)
+            val newFs = genKeyedFileStats(st.fileStats, newGens)
             val compactedFs = newGens.keys.map { rel =>
               rel -> (fileStatsOfGens(
                 m1.fileStats.getOrElse(rel, Map.empty),
                 m1.deltas.getOrElse(rel, Nil).toSet) ++
                 newFs.getOrElse(rel, Map.empty))
             }.toMap
-            writeManifestMeta(spark, path, m1.copy(version = v1 + 1,
+            writeManifestMeta(spark, path, m1.copy(version = m1.version + 1,
               entries = m1.entries ++ newGens.toMap,
               // bytes from the pre-rename footer walk (same files, just
               // renamed) — no second listing of the published gen dirs
               bytes = m1.bytes ++
-                scan.bytes.filter { case (rel, _) => newGens.contains(rel) },
+                st.bytes.filter { case (rel, _) => newGens.contains(rel) },
               fileStats = m1.fileStats ++ compactedFs,
               op = "compact", opDeletes = false))
             newGens.keys.toSeq.sorted
           }
         }
-      } finally { fs.delete(new Path(tmpDir), true); () }
+      }
     }
   }
 
@@ -4839,18 +4666,9 @@ object Layout {
                                 sortCols: Seq[String] = Nil): Seq[String] = {
     require(maxPartitions >= 1,
       "migrateManifestPartitions needs a positive partition budget")
-    val fs = TableFs(spark, path)
-    val maxAttempts = 3
-    var attempt = 0
-    var lastConflict = ""
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val v0 = manifestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(
-          s"$path is not a manifest table; seed it with writeManifestTable"))
-      val m0 = readManifestMeta(spark, path, v0)
-      val sch = manifestSchema(m0)
-      require(sortCols.forall(sch.fieldNames.contains),
+    commit(spark, path, "migrateManifestPartitions",
+        checkMorSpec = false) { m0 =>
+      require(sortCols.forall(manifestSchema(m0).fieldNames.contains),
         s"sortCols ${sortCols.mkString(",")} must be table columns")
       val old = m0.oldEraRels
       if (old.isEmpty) {
@@ -4861,110 +4679,49 @@ object Layout {
         // under it) so the debt dashboard reads zero and
         // repartitionManifest's "nothing left" refusal holds
         if (m0.specHistory.nonEmpty)
-          withMaintenanceLock(spark, path, lockWaitMs(spark)) {
-            val v1 = manifestVersion(spark, path).get
-            val m1 = if (v1 == v0) m0 else readManifestMeta(spark, path, v1)
+          underLease(spark, path, m0) { m1 =>
             if (m1.oldEraRels.isEmpty && m1.specHistory.nonEmpty)
-              writeManifestMeta(spark, path, m1.copy(version = v1 + 1,
+              writeManifestMeta(spark, path, m1.copy(version = m1.version + 1,
                 specHistory = Nil, op = "repartition", opDeletes = false))
           }
-        return Nil
+        Left(Nil)
+      } else {
+        val pcols = m0.partitionCols
+        // oldest era first (specHistory is chronological), stable order
+        // within an era — successive budgeted runs drain deterministically
+        val eraOrder = m0.specHistory.zipWithIndex.toMap
+        val pick = old.sortBy(r =>
+          (eraOrder.getOrElse(specOfRel(r), Int.MaxValue), r))
+          .take(maxPartitions)
+        // landing set: bounded by the table's partition count — the same
+        // cardinality class the manifest root already holds in memory
+        val landing = readResolved(spark, path, m0, pick)
+          .select(pcols.map(c => col(c).cast("string").as(c)): _*)
+          .distinct().collect().map(relOf(pcols, _)).toSeq.distinct
+        val baseRels = landing.filter(r =>
+          m0.entries.contains(r) || m0.deltas.contains(r))
+        // the conflict/commit set is the FULL landing set, existing in
+        // the snapshot or not (mergeManifest's discipline): a landing
+        // rel CREATED by a concurrent commit mid-rewrite would otherwise
+        // be silently REPLACED at publish. The read covers only rels
+        // that exist.
+        val allTouched = (pick ++ landing).distinct.sorted
+        Right(Plan(
+          readResolved(spark, path, m0, (pick ++ baseRels).distinct.sorted),
+          landing.toSet,
+          write = clusteredWrite(spark, _, _, pcols, m0.dataBucketCols,
+            m0.dataBuckets, sortTail = sortCols.map(col)),
+          // picked old-era partitions leave the manifest wholesale
+          // (their rows live in the produced current-spec gens)
+          publish = replaceRels(path, allTouched, "repartition"),
+          result = pick,
+          // unlike compaction (row-identical per rel, movers
+          // skippable), a migration moves rows ACROSS partitions: a
+          // concurrent commit touching ANY read rel invalidates it
+          conflict = movedRels(m0, _, allTouched),
+          verifyRows = true))
       }
-      val pcols = m0.partitionCols
-      // oldest era first (specHistory is chronological), stable order
-      // within an era — successive budgeted runs drain deterministically
-      val eraOrder = m0.specHistory.zipWithIndex.toMap
-      val pick = old.sortBy(r =>
-        (eraOrder.getOrElse(specOfRel(r), Int.MaxValue), r))
-        .take(maxPartitions)
-      // landing set: bounded by the table's partition count — the same
-      // cardinality class the manifest root already holds in memory
-      val landing = readResolved(spark, path, m0, pick)
-        .select(pcols.map(c => col(c).cast("string").as(c)): _*)
-        .distinct().collect().map(relOf(pcols, _)).toSeq.distinct
-      val baseRels = landing.filter(r =>
-        m0.entries.contains(r) || m0.deltas.contains(r))
-      // the conflict/commit set is the FULL landing set, existing in
-      // the snapshot or not (mergeManifest's expectedProduced
-      // discipline): a landing rel CREATED by a concurrent commit
-      // mid-rewrite would otherwise be silently REPLACED at publish —
-      // relStateChanged's None-vs-Some comparison is exactly what
-      // catches it. The read below still covers only rels that exist.
-      val allTouched = (pick ++ landing).distinct.sorted
-      val src = readResolved(spark, path, m0,
-        (pick ++ baseRels).distinct.sorted)
-      val tmpDir = uniqueTmpDir(path)
-      try withTmpHeartbeat(fs, tmpDir) {
-        val obs = org.apache.spark.sql.Observation()
-        clusteredWrite(spark, src.observe(obs, count(lit(1)).as("n")),
-          tmpDir, pcols, m0.dataBucketCols, m0.dataBuckets,
-          sortTail = sortCols.map(col))
-        val n0 = obs.get("n").asInstanceOf[Long]
-        val produced = listPartitionRels(fs, new Path(tmpDir))
-        val expected = (landing ++ baseRels).toSet
-        val unexpected = produced.filterNot(expected.contains)
-        require(unexpected.isEmpty,
-          s"migrateManifestPartitions: writer produced partition dirs " +
-            s"${unexpected.mkString(",")} outside the landing set — " +
-            "partition rendering mismatch")
-        // derive published metadata from the written footers BEFORE the
-        // commit; the row-count verify is parquet metadata, no rescan
-        val scan = scanTmpTree(spark, fs, m0, tmpDir, produced)
-        require(scan.rows == n0,
-          s"migration would lose rows: $n0 -> ${scan.rows}; aborting")
-        val (newStats, newFileStats) = statsFromScan(spark, m0, tmpDir, scan)
-        val newBlooms = bloomsFor(spark, path, m0, Map.empty,
-          srcDir = Some(tmpDir))
-        val newBytes = scan.bytes
-        // COMMIT: short lease — re-read the live manifest, rebase or
-        // conflict, rename the tmp tree into gen dirs, one publish
-        val outcome: Either[String, Seq[String]] =
-          withMaintenanceLock(spark, path, lockWaitMs(spark)) {
-            val v1 = manifestVersion(spark, path).get
-            val m1 = if (v1 == v0) m0 else readManifestMeta(spark, path, v1)
-            lazy val touchedMoved = relStateChanged(m0, m1, allTouched)
-            if (v1 != v0 && invariantsChanged(m0, m1,
-                checkMorSpec = false).isDefined)
-              Left(invariantsChanged(m0, m1, checkMorSpec = false).get)
-            else if (v1 != v0 && touchedMoved.nonEmpty)
-              Left(s"concurrent commit moved touched partition(s) " +
-                touchedMoved.take(5).mkString(", "))
-            else {
-              val newGens = publishGens(fs, path, tmpDir, m1, produced)
-              // picked old-era partitions leave the manifest wholesale
-              // (their rows live in the produced current-spec gens);
-              // fully-deleted landing partitions (no output) leave too
-              val removed = allTouched.filterNot(newGens.contains)
-              val entries2 = m1.entries -- removed ++ newGens
-              val deltas2 = m1.deltas -- allTouched
-              val liveOld = (entries2.keySet ++ deltas2.keySet)
-                .map(specOfRel).filterNot(_ == pcols)
-              writeManifestMeta(spark, path, m1.copy(version = v1 + 1,
-                entries = entries2,
-                stats = m1.stats -- removed ++ newStats,
-                blooms = m1.blooms -- removed ++ newBlooms,
-                bytes = m1.bytes -- removed ++ newBytes,
-                fileStats = m1.fileStats -- allTouched -- produced ++
-                  genKeyedFileStats(newFileStats, newGens),
-                deltas = deltas2,
-                specHistory = m1.specHistory.filter(liveOld.contains),
-                op = "repartition", opDeletes = false))
-              Right(pick)
-            }
-          }
-        outcome match {
-          case Right(migrated) => return migrated
-          case Left(reason) =>
-            commitConflicts.incrementAndGet()
-            lastConflict = reason // retry fresh
-        }
-      } finally { fs.delete(new Path(tmpDir), true); () }
-    }
-    throw new IllegalStateException(
-      s"migrateManifestPartitions on $path: commit conflicted " +
-        s"$maxAttempts times (last: $lastConflict) — concurrent writers " +
-        "keep touching the partitions this drain reads; lower the " +
-        "budget or schedule the drain off the write peak")
+    }.getOrElse(Nil)
   }
 
   /** Change the PARTITIONING of a manifest table — the maintenance
@@ -5058,7 +4815,6 @@ object Layout {
         "is directory-encoded, not in the files a bucketed scan " +
         "hashes; change the bucket layout in the same call " +
         "(newBucketCols/newBuckets)")
-    val fs = TableFs(spark, path)
     // the full resolved snapshot — a repartition is a whole-table
     // rewrite by definition, so pending deltas fold in for free
     val all = readResolved(spark, path, m, m.allRels)
@@ -5066,37 +4822,25 @@ object Layout {
       newPartitionCols.contains(f.name))
     val ddl = org.apache.spark.sql.types.StructType(
       dataCols ++ newPartitionCols.map(sch(_))).toDDL
-    val tmpDir = s"$path.__manifest_tmp"
-    fs.delete(new Path(tmpDir), true)
-    val obs = org.apache.spark.sql.Observation()
-    clusteredWrite(spark, all.observe(obs, count(lit(1)).as("n")),
-      tmpDir, newPartitionCols, tgtBucketCols, tgtBuckets,
-      sortTail = sortCols.map(col))
-    val n0 = obs.get("n").asInstanceOf[Long]
-    val produced = listPartitionRels(fs, new Path(tmpDir))
     // a full rewrite lands every row under the new spec: prior eras are
     // fully migrated, so the spec history clears
     val m2 = m.copy(schemaDdl = ddl, partitionCols = newPartitionCols,
       specHistory = Nil,
       dataBucketCols = tgtBucketCols, dataBuckets = tgtBuckets)
-    val scan = scanTmpTree(spark, fs, m2, tmpDir, produced)
-    require(scan.rows == n0,
-      s"repartition would lose rows: $n0 -> ${scan.rows}; aborting")
-    val (newStats, newFileStats) = statsFromScan(spark, m2, tmpDir, scan)
-    val newBlooms = bloomsFor(spark, path, m2, Map.empty,
-      srcDir = Some(tmpDir))
-    val newBytes = scan.bytes
-    val newGens = publishGens(fs, path, tmpDir, m, produced)
-    // the new manifest references ONLY the new-scheme generations; old
-    // snapshots keep referencing theirs until retention drops them
-    writeManifestMeta(spark, path, m2.copy(version = v + 1,
-      entries = newGens,
-      stats = newStats, blooms = newBlooms, bytes = newBytes,
-      fileStats = genKeyedFileStats(newFileStats, newGens),
-      deltas = Map.empty,
-      op = "repartition", opDeletes = false))
-    fs.delete(new Path(tmpDir), true)
-    newGens.size
+    stage(spark, path, m2, "repartitionManifest", all, expected = None,
+        verifyRows = true)(clusteredWrite(spark, _, _, newPartitionCols,
+          tgtBucketCols, tgtBuckets, sortTail = sortCols.map(col))) { st =>
+      val newGens = publishGens(st.fs, path, st.tmpDir, m, st.produced)
+      // the new manifest references ONLY the new-scheme generations; old
+      // snapshots keep referencing theirs until retention drops them
+      writeManifestMeta(spark, path, m2.copy(version = v + 1,
+        entries = newGens,
+        stats = st.stats, blooms = st.blooms, bytes = st.bytes,
+        fileStats = genKeyedFileStats(st.fileStats, newGens),
+        deltas = Map.empty,
+        op = "repartition", opDeletes = false))
+      newGens.size
+    }
   }
 
   /** Write `df` to `path` range-clustered and sorted by `sortCols`:

@@ -439,4 +439,75 @@ class LayoutConcurrencySpec extends SparkSpec {
       "a heartbeat-stale tmp tree must be swept")
     assert(inflight.delete() || { hb.delete(); inflight.delete() })
   }
+
+  /** Run `body` with `inject` landing on `dir` between staging and the
+    * commit lease of each of the next `times` commits there — not
+    * re-entrantly, so the injected writer's own commit runs plain. */
+  private def withInjected[A](dir: String, times: Int)(inject: () => Unit)
+                             (body: => A): A = {
+    var left = times
+    var inHook = false
+    Layout.beforeCommitLease = p =>
+      if (p == dir && left > 0 && !inHook) {
+        left -= 1
+        inHook = true
+        try inject() finally inHook = false
+      }
+    try body finally Layout.beforeCommitLease = _ => ()
+  }
+
+  private def merge1(dir: String, k: Long, v: Double, ver: Long): Boolean =
+    Layout.mergeManifest(spark, dir,
+      Seq((k, "p0", v, ver)).toDF("k", "part", "v", "ver"), Seq("k"), "ver")
+
+  test("commit retry: one concurrent same-partition merge costs exactly " +
+      "one retry and loses neither update") {
+    val dir = tmpDir("retry_once")
+    seed(dir, Seq((1L, "p0", 1.0, 1L), (2L, "p0", 2.0, 1L),
+      (3L, "p1", 3.0, 1L)))
+    val c0 = Layout.commitConflicts.get()
+    assert(withInjected(dir, 1)(() => merge1(dir, 2L, 20.0, 2L)) {
+      merge1(dir, 1L, 10.0, 2L)
+    })
+    assert(Layout.commitConflicts.get() - c0 == 1)
+    assert(snap(Layout.readManifest(spark, dir)) ==
+      Map(1L -> 10.0, 2L -> 20.0, 3L -> 3.0))
+  }
+
+  test("commit exhaustion: a concurrent merge before every attempt " +
+      "fails loudly after 3 conflicts, naming the op") {
+    val dir = tmpDir("retry_exhaust")
+    seed(dir, Seq((1L, "p0", 1.0, 1L), (2L, "p0", 2.0, 1L)))
+    val c0 = Layout.commitConflicts.get()
+    var ver = 1L
+    val e = intercept[IllegalStateException] {
+      withInjected(dir, Int.MaxValue) { () =>
+        ver += 1
+        merge1(dir, 2L, ver * 10.0, ver)
+      } {
+        merge1(dir, 1L, 10.0, 9L)
+      }
+    }
+    assert(e.getMessage.contains("commit conflicted 3 times") &&
+      e.getMessage.contains("mergeManifest"), e.getMessage)
+    assert(Layout.commitConflicts.get() - c0 == 3)
+    // the three injected merges committed; the exhausted one did not
+    assert(snap(Layout.readManifest(spark, dir)) ==
+      Map(1L -> 1.0, 2L -> 40.0))
+  }
+
+  test("commit rebase: a concurrent append to the same partition " +
+      "rebases without a conflict and keeps both batches") {
+    val dir = tmpDir("append_rebase")
+    Layout.writeManifestTable(spark, dir,
+      Seq((1L, "p0", 1.0)).toDF("k", "part", "v"), Seq("part"),
+      appendOnly = true)
+    def append1(k: Long): Boolean = Layout.appendManifest(spark, dir,
+      Seq((k, "p0", k * 1.0)).toDF("k", "part", "v"))
+    val c0 = Layout.commitConflicts.get()
+    assert(withInjected(dir, 1)(() => append1(11L)) { append1(10L) })
+    assert(Layout.commitConflicts.get() == c0)
+    assert(snap(Layout.readManifest(spark, dir)) ==
+      Map(1L -> 1.0, 10L -> 10.0, 11L -> 11.0))
+  }
 }

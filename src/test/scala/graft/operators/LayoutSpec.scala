@@ -941,6 +941,38 @@ class LayoutSpec extends SparkSpec {
     assert(lock.delete())
   }
 
+  test("a seed that fails leaves no tmp tree beside the table") {
+    def noTmpTree(dir: String): Unit = {
+      val parent = new java.io.File(dir).getParentFile
+      val tblName = new java.io.File(dir).getName
+      assert(!parent.listFiles().exists(
+        _.getName.startsWith(s"$tblName.__manifest_tmp")),
+        "a failed seed must not leave its tmp tree behind")
+      assert(Layout.manifestVersion(spark, dir).isEmpty)
+    }
+    def rows(boom: Long => Long): DataFrame =
+      spark.range(1, 7).select(udf(boom).apply(col("id")).as("k"),
+        concat(lit("p"), (col("id") % 2).cast("string")).as("part"))
+    // a task failure mid-write (spark.range, not a local relation the
+    // optimizer would evaluate before the write starts)
+    val dir = tmpDir("seedfail")
+    intercept[Exception] {
+      Layout.writeManifestTable(spark, dir, rows(k =>
+        if (k == 3L) throw new IllegalStateException("boom") else k),
+        Seq("part"))
+    }
+    noTmpTree(dir)
+    // a failure AFTER the write landed: a file squats on a partition
+    // dir the publish must create
+    val dir2 = tmpDir("seedfail_publish")
+    new java.io.File(dir2).mkdirs()
+    Files.createFile(new java.io.File(dir2, "part=p1").toPath)
+    intercept[Exception] {
+      Layout.writeManifestTable(spark, dir2, rows(identity), Seq("part"))
+    }
+    noTmpTree(dir2)
+  }
+
   test("FILE-level skipping: after a sorted multi-file compaction a " +
       "selective predicate scans fewer files than the partition holds; " +
       "rows stay exact; delta files prune independently") {

@@ -237,4 +237,20 @@ class ManifestAppendOnlySpec extends SparkSpec {
     assert(rows(Layout.readManifest(spark, dir)) ==
       Set(1L -> 1.0, 2L -> 2.0))
   }
+
+  test("a keyed merge refuses an append-only table even when its batch " +
+      "id matches the sink marker (structural refusal before replay)") {
+    val dir = tmpDir("refusal_order")
+    Layout.writeManifestTable(spark, dir,
+      Seq((1L, "a", 1.0)).toDF("k", "part", "v"), Seq("part"),
+      appendOnly = true)
+    assert(Layout.appendManifest(spark, dir,
+      Seq((2L, "a", 2.0)).toDF("k", "part", "v"), batchId = 3L, sinkId = "s"))
+    val e = intercept[IllegalArgumentException] {
+      Layout.mergeManifest(spark, dir,
+        Seq((1L, "a", 9.0, 2L)).toDF("k", "part", "v", "ver"),
+        Seq("k"), "ver", batchId = 3L, sinkId = "s")
+    }
+    assert(e.getMessage.contains("append-only"), e.getMessage)
+  }
 }
