@@ -2,7 +2,9 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** Physical-layout maintenance for parquet table directories — the two
   * levers that keep a 100 TB table scannable after months of ingest:
@@ -730,6 +732,12 @@ object Layout {
       bloomItems: Long = 10000,
       bloomFpp: Double = 0.01,
       blooms: Map[String, Map[String, String]] = Map.empty,
+      // the session time zone the seed ran in: a timestamp's Cast to
+      // and from string depends on the zone, so every later stats/bloom
+      // build and every probe renders and parses in this one zone,
+      // whatever zone its own session has. None on manifests written
+      // before the field existed — they use the session zone.
+      statsZone: Option[String] = None,
       // FILE-level data-skipping stats: per-partition, per data FILE
       // (keyed "gen=G/part-….parquet") min/max of `statsCols` — after
       // compaction a partition can be one large sorted file, but
@@ -962,6 +970,11 @@ object Layout {
     }
   }
 
+  /** [[manifestVersion]] of a path that must be a manifest table. */
+  private def liveVersion(spark: SparkSession, path: String): Int =
+    manifestVersion(spark, path).getOrElse(throw new IllegalArgumentException(
+      s"$path is not a manifest table; seed it with writeManifestTable"))
+
   import com.fasterxml.jackson.databind.JsonNode
   import com.fasterxml.jackson.databind.node.ObjectNode
 
@@ -1120,6 +1133,7 @@ object Layout {
         else node.get("bloomItems").asLong(),
       bloomFpp =
         if (!node.has("bloomFpp")) 0.01 else node.get("bloomFpp").asDouble(),
+      statsZone = optText(node, "statsZone"),
       morKeys =
         if (!node.has("morKeys")) Nil
         else node.get("morKeys").elements().asScala.map(_.asText()).toSeq,
@@ -1216,6 +1230,7 @@ object Layout {
       Map[Int, (Map[String, (Option[String], Option[String])],
                 Map[String, String])] = {
     val sch = manifestSchema(m)
+    val z = zoned(spark, m)
     val statsRollup: Map[Int, Map[String, (Option[String], Option[String])]] =
       if (m.statsCols.isEmpty) Map.empty
       else {
@@ -1238,8 +1253,8 @@ object Layout {
           }
         val aggs = m.statsCols.zipWithIndex.flatMap { case (c, i) =>
           val dt = sch(c).dataType
-          Seq(min(col(s"__mn_$i").cast(dt)).cast("string").as(s"__mn_$i"),
-            max(col(s"__mx_$i").cast(dt)).cast("string").as(s"__mx_$i"))
+          Seq(z(min(z(col(s"__mn_$i"), dt))).as(s"__mn_$i"),
+            z(max(z(col(s"__mx_$i"), dt))).as(s"__mx_$i"))
         }
         spark.createDataFrame(
             new java.util.ArrayList[org.apache.spark.sql.Row](
@@ -1302,6 +1317,7 @@ object Layout {
       root.put("bloomItems", m.bloomItems)
       root.put("bloomFpp", m.bloomFpp)
     }
+    m.statsZone.foreach(root.put("statsZone", _))
     if (m.morKeys.nonEmpty) {
       val mk = root.putArray("morKeys")
       m.morKeys.foreach(mk.add)
@@ -1460,14 +1476,28 @@ object Layout {
       org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType.fromDDL(m.schemaDdl)
 
-  /** Read the given (rel → gen) dirs aligned to the STORED schema. The
-    * schema is passed explicitly, so (a) partition values parse to
-    * their stored types instead of what directory-string inference
-    * re-derives, and (b) generations written BEFORE a schema evolution
-    * ([[evolveManifest]]) resolve per file: columns a file lacks read
-    * as typed NULLs, columns it has keep their values — the only read
-    * shape that is correct over mixed-schema generations (first-footer
-    * inference would silently null a column for every file). */
+  /** The zone `m`'s stats and bloom keys render in: the one recorded at
+    * seed, else (older manifests) the session's. */
+  private[graft] def statsZone(spark: SparkSession, m: ManifestMeta): String =
+    m.statsZone.getOrElse(spark.sessionState.conf.sessionLocalTimeZone)
+
+  /** Casts in one fixed zone: `apply(c, dt)` is `c.cast(dt)` evaluated
+    * in `zone` rather than the session's. */
+  private final class Zoned(zone: String) {
+    import org.apache.spark.sql.graftbridge.GraftSqlBridge
+    def apply(c: org.apache.spark.sql.Column,
+              dt: org.apache.spark.sql.types.DataType = StringType):
+        org.apache.spark.sql.Column =
+      GraftSqlBridge.column(
+        org.apache.spark.sql.catalyst.expressions.Cast(
+          GraftSqlBridge.expression(c), dt, Some(zone)))
+  }
+
+  /** Casts in `m`'s [[statsZone]] — every stats/bloom render and every
+    * parse of a stored stats string goes through one. */
+  private def zoned(spark: SparkSession, m: ManifestMeta): Zoned =
+    new Zoned(statsZone(spark, m))
+
   /** The read schema for files that may predate renames: the stored
     * fields plus one extra field per PRIOR name (same type as its
     * current column) — a file carries exactly one of the names, the
@@ -1500,6 +1530,13 @@ object Layout {
 
   /** Plain stored-schema read of explicit generation dirs (several per
     * rel allowed — the spec-less delta shape of append-only tables).
+    * The schema is passed explicitly, so (a) partition values parse to
+    * their stored types instead of what directory-string inference
+    * re-derives, and (b) generations written BEFORE a schema evolution
+    * ([[evolveManifest]]) resolve per file: columns a file lacks read
+    * as typed NULLs, columns it has keep their values — the only read
+    * shape that is correct over mixed-schema generations (first-footer
+    * inference would silently null a column for every file).
     * Generations written under DIFFERENT partition specs (a
     * metadata-only [[changeManifestPartitionSpec]] happened) read as
     * one parquet scan PER ERA and union: within an era the directory
@@ -1668,9 +1705,10 @@ object Layout {
     else {
       val df = underDir(spark, m, tmpDir)
       val pc = m.partitionCols
+      val z = zoned(spark, m)
       val aggs = m.statsCols.flatMap(c => Seq(
-        min(col(c)).cast("string").as(s"__mn_$c"),
-        max(col(c)).cast("string").as(s"__mx_$c")))
+        z(min(col(c))).as(s"__mn_$c"),
+        z(max(col(c))).as(s"__mx_$c")))
       df.groupBy((pc.map(c => col(c).cast("string").as(c)) :+
           input_file_name().as("__file")): _*)
         .agg(aggs.head, aggs.tail: _*)
@@ -1715,6 +1753,7 @@ object Layout {
       Map[String, Map[String, (Option[String], Option[String])]] = {
     {
       val sch = manifestSchema(m)
+      val z = zoned(spark, m)
       val rows = perFile.toSeq.sortBy(_._1).flatMap { case (rel, files) =>
         files.values.map { cols =>
           org.apache.spark.sql.Row.fromSeq(rel +: m.statsCols.flatMap { c =>
@@ -1733,8 +1772,8 @@ object Layout {
         }
       val aggs = m.statsCols.zipWithIndex.flatMap { case (c, i) =>
         val dt = sch(c).dataType
-        Seq(min(col(s"__mn_$i").cast(dt)).cast("string").as(s"__mn_$i"),
-          max(col(s"__mx_$i").cast(dt)).cast("string").as(s"__mx_$i"))
+        Seq(z(min(z(col(s"__mn_$i"), dt))).as(s"__mn_$i"),
+          z(max(z(col(s"__mx_$i"), dt))).as(s"__mx_$i"))
       }
       if (rows.isEmpty) Map.empty[String,
           Map[String, (Option[String], Option[String])]]
@@ -2007,6 +2046,7 @@ object Layout {
       case Some(blocks) if blocks.isEmpty => (Map.empty, Map.empty)
       case Some(blocks) =>
         val sch = manifestSchema(m)
+        val z = zoned(spark, m)
         val fields = Seq(
           org.apache.spark.sql.types.StructField("rel",
             org.apache.spark.sql.types.StringType),
@@ -2023,8 +2063,8 @@ object Layout {
             bounds.flatMap { case (mn, mx) => Seq(mn.orNull, mx.orNull) })
         }
         val aggs = m.statsCols.zipWithIndex.flatMap { case (_, i) =>
-          Seq(min(col(s"__mn_$i")).cast("string").as(s"__mn_$i"),
-            max(col(s"__mx_$i")).cast("string").as(s"__mx_$i"))
+          Seq(z(min(col(s"__mn_$i"))).as(s"__mn_$i"),
+            z(max(col(s"__mx_$i"))).as(s"__mx_$i"))
         }
         val perFile = spark.createDataFrame(
             new java.util.ArrayList[org.apache.spark.sql.Row](
@@ -2049,8 +2089,9 @@ object Layout {
     * tree — ONE distributed aggregate (groupBy partition values,
     * [[graft.expressions.BloomSketchAgg]] per column), the
     * [[fileStatsUnder]] shape. Values hash through Spark's own
-    * Cast-to-string + xxhash64 — the exact pipeline [[readManifestEq]]
-    * probes with, so build and probe can never disagree. Driver bytes
+    * Cast-to-string (in the table's [[statsZone]]) + xxhash64 — the
+    * exact pipeline [[Skipping]] probes with, so build and probe can
+    * never disagree. Driver bytes
     * bounded by touched partitions x ~1.2 x bloomItems per column. */
   private def bloomsUnder(spark: SparkSession, m: ManifestMeta,
                           tmpDir: String): Map[String, Map[String, String]] = {
@@ -2058,9 +2099,10 @@ object Layout {
     else {
       val df = underDir(spark, m, tmpDir)
       val pc = m.partitionCols
+      val z = zoned(spark, m)
       val aggs = m.bloomCols.map(c =>
         graft.expressions.BloomSketch.agg(
-          xxhash64(col(c).cast("string")), m.bloomItems, m.bloomFpp)
+          xxhash64(z(col(c))), m.bloomItems, m.bloomFpp)
           .as(s"__bl_$c"))
       val enc = java.util.Base64.getEncoder
       df.groupBy(pc.map(c => col(c).cast("string").as(c)): _*)
@@ -2096,16 +2138,6 @@ object Layout {
     }
   }
 
-  /** The probe-side hash of `value` for column type `dt`: rendered and
-    * hashed by SPARK (one row-local job), so it is bit-identical to
-    * what [[bloomsUnder]]'s build side computed for equal values. */
-  private[graft] def renderedHash(spark: SparkSession,
-                           dt: org.apache.spark.sql.types.DataType,
-                           value: Any): Long =
-    spark.range(1)
-      .select(xxhash64(lit(value).cast(dt).cast("string")).as("h"))
-      .head().getLong(0)
-
   /** EQUALITY data-skipping read: the rows of the LIVE snapshot with
     * `c1 = v1 AND c2 = v2 AND ...`, scanning ONLY the partitions whose
     * bloom filters might contain every value — the point-lookup
@@ -2126,44 +2158,11 @@ object Layout {
     require(eqs.map(_._1).distinct.size == eqs.size,
       "one value per column (two different values on one column can " +
         "never both hold)")
-    val v = manifestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path is not a manifest table; seed it with writeManifestTable"))
-    val (header, refs) = readManifestRoot(spark, path, v)
-    eqs.foreach { case (c, _) =>
-      require(header.bloomCols.contains(c),
-        s"manifest table $path keeps no bloom for '$c' " +
-          s"(bloomCols: ${header.bloomCols.mkString(",")}); reseed with " +
-          "it in bloomCols to enable equality-skipping reads")
-    }
-    val schema = manifestSchema(header)
-    val hashes = eqs.map { case (c, value) =>
-      c -> renderedHash(spark, schema(c).dataType, value)
-    }
-    val dec = java.util.Base64.getDecoder
-    // hierarchical: the root's per-bucket UNION blooms prune whole
-    // buckets driver-side before any child file is read
-    val m =
-      if (refs.isEmpty) header
-      else readBuckets(spark, path, header, refs.filter { r =>
-        hashes.forall { case (c, h) =>
-          r.bloomRollup.get(c).forall(b64 =>
-            graft.expressions.BloomSketch.mightContain(dec.decode(b64), h))
-        }
-      })
-    val kept = m.allRels
-      .filter { rel =>
-        val bl = m.blooms.getOrElse(rel, Map.empty)
-        hashes.forall { case (c, h) =>
-          // a partition with no bloom recorded must stay (soundness)
-          bl.get(c).forall(b64 =>
-            graft.expressions.BloomSketch.mightContain(dec.decode(b64), h))
-        }
-      }
-    val residual = eqs.map { case (c, value) =>
-      col(c) === lit(value).cast(schema(c).dataType)
-    }.reduce(_ && _)
-    readResolved(spark, path, m, kept).filter(residual)
+    skippingRead(spark, path,
+      eqs.map { case (c, v) => Skipping.AnyOf(c, Seq(Literal(v))) },
+      schema => eqs.map { case (c, value) =>
+        col(c) === lit(value).cast(schema(c).dataType)
+      }.reduce(_ && _))
   }
 
   /** Data-skipping read: the rows of the LIVE manifest snapshot with
@@ -2192,122 +2191,61 @@ object Layout {
     * the scan set. Same soundness argument as the single-column form
     * (each column's stats are independently exact over the immutable
     * generation, and a conjunction holds only where all conjuncts do);
-    * the overlap test and the in-plan residual filter both run through
-    * Spark's own Cast + ordering, so pruning can never disagree with
-    * the result.
+    * the overlap test ([[Skipping]]) and the in-plan residual filter
+    * both run through Spark's own Cast + ordering, so pruning can never
+    * disagree with the result.
     */
-  /** Ids from `items` whose [min, max] stats intersect EVERY range —
-    * the overlap test runs through Spark's own Cast + ordering (the
-    * exact semantics the residual filter uses, so pruning can never
-    * disagree with it); one tiny local job bounded by `items.size`.
-    * A missing/None bound means no non-null value — which a range can
-    * never match, so it prunes. */
-  private def statsOverlap(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      ranges: Seq[(String, Any, Any)],
-      items: Seq[(String, Map[String, (Option[String], Option[String])])]):
-      Set[String] =
-    statsOverlapOpt(spark, schema,
-      ranges.map { case (c, lo, hi) => (c, Some(lo), Some(hi)) }, items)
-
-  /** [[statsOverlap]] with OPTIONAL bounds — `None` leaves that side
-    * open (`x >= lo` alone, `x <= hi` alone), so pushed-down one-sided
-    * comparisons can prune too ([[graft.plans.ManifestFileIndex]]).
-    * A column may repeat (each window tests independently; the
-    * conjunction of all windows keeps). An item survives a window only
-    * if its stats exist (a partition with no non-null value can never
-    * match a comparison) and every given bound intersects. */
-  private[graft] def statsOverlapOpt(spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      ranges: Seq[(String, Option[Any], Option[Any])],
-      items: Seq[(String, Map[String, (Option[String], Option[String])])]):
-      Set[String] = {
-    val boundRows = items.map { case (id, st) =>
-      org.apache.spark.sql.Row.fromSeq(id +: ranges.flatMap {
-        case (c, _, _) =>
-          val b = st.getOrElse(c, (None, None))
-          Seq(b._1.orNull, b._2.orNull)
-      })
-    }
-    val boundSchema = org.apache.spark.sql.types.StructType(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.StringType) +:
-        ranges.zipWithIndex.flatMap { case (_, i) => Seq(
-          org.apache.spark.sql.types.StructField(s"__mn_$i",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField(s"__mx_$i",
-            org.apache.spark.sql.types.StringType)) })
-    val overlap = ranges.zipWithIndex.map { case ((c, lo, hi), i) =>
-      val dt = schema(c).dataType
-      (Seq(col(s"__mn_$i").isNotNull && col(s"__mx_$i").isNotNull) ++
-        lo.map(v => col(s"__mx_$i").cast(dt) >= lit(v).cast(dt)) ++
-        hi.map(v => col(s"__mn_$i").cast(dt) <= lit(v).cast(dt)))
-        .reduce(_ && _)
-    }.reduce(_ && _)
-    spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(boundRows).asJava),
-        boundSchema)
-      .filter(overlap)
-      .select("id").collect().map(_.getString(0)).toSet
-  }
-
   def readManifestPruned(spark: SparkSession, path: String,
                          ranges: Seq[(String, Any, Any)]): DataFrame = {
     require(ranges.nonEmpty, "readManifestPruned needs >= 1 range")
     require(ranges.map(_._1).distinct.size == ranges.size,
       "one range per column; AND two windows on the same column into " +
         "their intersection first")
-    val v = manifestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path is not a manifest table; seed it with writeManifestTable"))
-    val (header, refs) = readManifestRoot(spark, path, v)
-    ranges.foreach { case (c, _, _) =>
-      require(header.statsCols.contains(c),
-        s"manifest table $path keeps no stats for '$c' " +
-          s"(statsCols: ${header.statsCols.mkString(",")}); reseed with " +
-          "it in statsCols to enable data-skipping reads")
-    }
-    val schema = manifestSchema(header)
-    // hierarchical: prune whole BUCKETS by their stats rollups first —
-    // only matching children are ever read (meta bytes scale with the
-    // match, not the table), then rels prune within them
-    val m =
-      if (refs.isEmpty) header
-      else {
-        val keptIdx = statsOverlap(spark, schema, ranges,
-          refs.map(r => r.idx.toString -> r.statsRollup))
-        readBuckets(spark, path, header,
-          refs.filter(r => keptIdx.contains(r.idx.toString)))
-      }
-    val kept = statsOverlap(spark, schema, ranges,
-      m.allRels.map(rel => rel -> m.stats.getOrElse(rel, Map.empty)))
-    // resolution BEFORE the residual: a pending delta may have moved a
-    // row's stats-column value, and the filter must see the resolved
-    // row. Pruning stays sound because delta merges WIDEN stats
-    // monotonically (see mergeManifestDelta) until a fold re-tightens.
-    val base = readResolved(spark, path, m, kept.toSeq.sorted)
-    val residual = ranges.map { case (c, lo, hi) =>
-      val dt = schema(c).dataType
-      col(c) >= lit(lo).cast(dt) && col(c) <= lit(hi).cast(dt)
-    }.reduce(_ && _)
-    base.filter(residual)
+    skippingRead(spark, path,
+      ranges.map { case (c, lo, hi) =>
+        Skipping.Window(c, Some(Literal(lo)), Some(Literal(hi))) },
+      schema => ranges.map { case (c, lo, hi) =>
+        val dt = schema(c).dataType
+        col(c) >= lit(lo).cast(dt) && col(c) <= lit(hi).cast(dt)
+      }.reduce(_ && _))
   }
 
-  /** Seed a MANIFEST table at `path` from `df`, partitioned by
-    * `partitionCols`: every partition lands at generation 1 and
-    * manifest v1 publishes the snapshot. One-time — a table is either
-    * manifest-disciplined or rename-swap ([[merge]]), never both.
-    *
-    * `keys` + `versionCol` DECLARE the table's merge spec at seed time
-    * (stored as `morKeys`/`morVersionCol`): every later merge — Scala,
-    * the manifest sink, SQL INSERT/UPDATE/DELETE/MERGE through a
-    * catalog registration — resolves the spec from the manifest with
-    * no per-statement OPTIONS, and a caller passing a DIFFERENT spec
-    * fails loudly (the existing morKeys contract, previously fixed
-    * only by the first merge-on-read delta). Mutually exclusive with
-    * `appendOnly` (which declares that no merge spec can ever exist).
-    */
+  /** The shared body of the explicit skipping readers: the live
+    * snapshot's generations that [[Skipping]] admits for `preds` (whole
+    * hierarchical buckets prune by their rollups first, so only
+    * matching children are ever read), resolved, then filtered by
+    * `residual` (given the stored schema). Resolution runs BEFORE the
+    * residual: a pending delta may have moved a row's column value, and
+    * the filter must see the resolved row. Pruning stays sound because
+    * delta merges WIDEN stats and union blooms monotonically (see
+    * [[mergeManifestDelta]]) until a fold re-tightens them. */
+  private def skippingRead(spark: SparkSession, path: String,
+      preds: Seq[Skipping.Pred],
+      residual: org.apache.spark.sql.types.StructType =>
+        org.apache.spark.sql.Column): DataFrame = {
+    val (header, refs) = readManifestRoot(spark, path, liveVersion(spark, path))
+    preds.foreach {
+      case Skipping.AnyOf(c, _) =>
+        require(header.bloomCols.contains(c),
+          s"manifest table $path keeps no bloom for '$c' " +
+            s"(bloomCols: ${header.bloomCols.mkString(",")}); reseed with " +
+            "it in bloomCols to enable equality-skipping reads")
+      case p =>
+        require(header.statsCols.contains(p.col),
+          s"manifest table $path keeps no stats for '${p.col}' " +
+            s"(statsCols: ${header.statsCols.mkString(",")}); reseed with " +
+            "it in statsCols to enable data-skipping reads")
+    }
+    val skip = Skipping(spark, header, preds)
+    val m =
+      if (refs.isEmpty) header
+      else readBuckets(spark, path, header,
+        refs.filter(r => skip.admits(r.statsRollup, r.bloomRollup)))
+    val kept = m.allRels.filter(rel => skip.admits(
+      m.stats.getOrElse(rel, Map.empty), m.blooms.getOrElse(rel, Map.empty)))
+    readResolved(spark, path, m, kept).filter(residual(manifestSchema(m)))
+  }
+
   /** Transient directory column a bucketized write routes bucket ids
     * through (never lands in data files — `partitionBy` strips it). */
   private[graft] val BucketDir = "__gbucket"
@@ -2391,6 +2329,20 @@ object Layout {
     if (nBuckets > 0) flattenBucketDirs(spark, tmpDir)
   }
 
+  /** Seed a MANIFEST table at `path` from `df`, partitioned by
+    * `partitionCols`: every partition lands at generation 1 and
+    * manifest v1 publishes the snapshot. One-time — a table is either
+    * manifest-disciplined or rename-swap ([[merge]]), never both.
+    *
+    * `keys` + `versionCol` DECLARE the table's merge spec at seed time
+    * (stored as `morKeys`/`morVersionCol`): every later merge — Scala,
+    * the manifest sink, SQL INSERT/UPDATE/DELETE/MERGE through a
+    * catalog registration — resolves the spec from the manifest with
+    * no per-statement OPTIONS, and a caller passing a DIFFERENT spec
+    * fails loudly (the existing morKeys contract, previously fixed
+    * only by the first merge-on-read delta). Mutually exclusive with
+    * `appendOnly` (which declares that no merge spec can ever exist).
+    */
   def writeManifestTable(spark: SparkSession, path: String, df: DataFrame,
                          partitionCols: Seq[String],
                          statsCols: Seq[String] = Nil,
@@ -2475,6 +2427,7 @@ object Layout {
     val meta0 = ManifestMeta(1, ddl, partitionCols, Map.empty,
       statsCols = statsCols, bloomCols = bloomCols,
       bloomItems = bloomItems, bloomFpp = bloomFpp,
+      statsZone = Some(spark.sessionState.conf.sessionLocalTimeZone),
       appendOnly = appendOnly,
       morKeys = keys, morVersionCol = versionCol,
       dataBucketCols = bucketCols, dataBuckets = buckets)
@@ -2590,18 +2543,16 @@ object Layout {
     * `manifest = true`).
     */
   def readManifest(spark: SparkSession, path: String): DataFrame =
-    readManifestVersion(spark, path,
-      manifestVersion(spark, path).getOrElse(
-        throw new IllegalArgumentException(
-          s"$path is not a manifest table (no $ManifestPointer); " +
-            "seed it with writeManifestTable")))
+    readManifestVersion(spark, path, liveVersion(spark, path))
 
   /** The manifest table as a PLANNER-INTEGRATED relation
     * ([[graft.plans.ManifestFileIndex]]): register it as a view and
     * every plain `spark.sql` / DataFrame filter auto-prunes — partition
     * filters exactly, statsCols/bloomCols predicates via the
-    * manifest's min/max stats and blooms — with Catalyst's column
-    * pruning and parquet row-group skipping still applying underneath.
+    * manifest's min/max stats and blooms, judged by the same
+    * [[Skipping]] evaluator the explicit readers use — with Catalyst's
+    * column pruning and parquet row-group skipping still applying
+    * underneath.
     * Use this for the ad-hoc SQL surface; [[readManifest]] /
     * [[readManifestPruned]] stay the explicit-API reads (and the only
     * ones that resolve pending merge-on-read deltas — this one fails
@@ -2631,9 +2582,7 @@ object Layout {
         // order is data cols first, partition cols appended)
         .select(idx.fullSchema.fields.toSeq.map(f => col(f.name)): _*)
     }
-    val v = version.orElse(manifestVersion(spark, path)).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path is not a manifest table; seed it with writeManifestTable"))
+    val v = version.getOrElse(liveVersion(spark, path))
     val m = readManifestMeta(spark, path, v)
     val eras = m.liveSpecs
     if (eras.size == 1)
@@ -2902,10 +2851,7 @@ object Layout {
     var lastConflict = ""
     while (attempt < MaxCommitAttempts) {
       attempt += 1
-      val m0 = readManifestMeta(spark, path,
-        manifestVersion(spark, path).getOrElse(
-          throw new IllegalArgumentException(
-            s"$path is not a manifest table; seed it with writeManifestTable")))
+      val m0 = readManifestMeta(spark, path, liveVersion(spark, path))
       refuse(m0)
       if (replayedSinkBatch(path, m0, batchId, sinkId)) return None
       plan(m0) match {
@@ -3075,8 +3021,7 @@ object Layout {
                                        sinkId: String,
                                        marker: Long): Unit =
       withMaintenanceLock(spark, path, lockWaitMs(spark)) {
-    val v = manifestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"$path is not a manifest table"))
+    val v = liveVersion(spark, path)
     val m = readManifestMeta(spark, path, v)
     writeManifestMeta(spark, path, m.copy(version = v + 1,
       sinkBatches =
@@ -3245,6 +3190,7 @@ object Layout {
     if (m.statsCols.isEmpty || add.isEmpty) m.stats
     else {
       val sch = manifestSchema(m)
+      val z = zoned(spark, m)
       val rows = add.keys.toSeq.sorted.map { rel =>
         val old = m.stats.getOrElse(rel, Map.empty)
         val nw = add(rel)
@@ -3265,10 +3211,10 @@ object Layout {
         case (c, i) =>
           val dt = sch(c).dataType
           Seq(
-            least(col(s"__omn_$i").cast(dt), col(s"__amn_$i").cast(dt))
-              .cast("string").as(s"__mn_$i"),
-            greatest(col(s"__omx_$i").cast(dt), col(s"__amx_$i").cast(dt))
-              .cast("string").as(s"__mx_$i"))
+            z(least(z(col(s"__omn_$i"), dt), z(col(s"__amn_$i"), dt)))
+              .as(s"__mn_$i"),
+            z(greatest(z(col(s"__omx_$i"), dt), z(col(s"__amx_$i"), dt)))
+              .as(s"__mx_$i"))
       }
       val widened = spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](
@@ -3485,9 +3431,7 @@ object Layout {
   def foldManifestDeltas(spark: SparkSession, path: String,
                          sortCols: Seq[String] = Nil,
                          only: Seq[String] = Nil): Seq[String] = {
-    val v = manifestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path is not a manifest table"))
+    val v = liveVersion(spark, path)
     val m = readManifestMeta(spark, path, v)
     require(sortCols.forall(manifestSchema(m).fieldNames.contains),
       s"sortCols ${sortCols.mkString(",")} must be table columns")
@@ -3870,9 +3814,7 @@ object Layout {
     * change feed fails loudly naming the reaped generation otherwise. */
   def feedSince(spark: SparkSession, path: String,
                 consumer: String): (DataFrame, Int) = {
-    val live = manifestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path is not a manifest table; seed it with writeManifestTable"))
+    val live = liveVersion(spark, path)
     readFeedCursor(spark, path, consumer) match {
       case None =>
         (readManifest(spark, path)
@@ -3907,9 +3849,7 @@ object Layout {
   def evolveManifest(spark: SparkSession, path: String,
                      addDdl: String): Unit =
       withMaintenanceLock(spark, path, lockWaitMs(spark)) {
-    val v = manifestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path is not a manifest table; seed it with writeManifestTable"))
+    val v = liveVersion(spark, path)
     val m = readManifestMeta(spark, path, v)
     val add = org.apache.spark.sql.types.StructType.fromDDL(addDdl)
     require(add.nonEmpty, "evolveManifest: no columns to add")
@@ -3978,9 +3918,7 @@ object Layout {
   def widenManifestColumn(spark: SparkSession, path: String,
                           column: String, newType: String): Unit =
       withMaintenanceLock(spark, path, lockWaitMs(spark)) {
-    val v = manifestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path is not a manifest table; seed it with writeManifestTable"))
+    val v = liveVersion(spark, path)
     val m = readManifestMeta(spark, path, v)
     val sch = manifestSchema(m)
     require(sch.fieldNames.contains(column),
@@ -4034,9 +3972,7 @@ object Layout {
                            from: String, to: String,
                            requireSingleSpec: Boolean = false): Unit =
       withMaintenanceLock(spark, path, lockWaitMs(spark)) {
-    val v = manifestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path is not a manifest table; seed it with writeManifestTable"))
+    val v = liveVersion(spark, path)
     val m = readManifestMeta(spark, path, v)
     // for callers that must retire the alias chain IMMEDIATELY after
     // (the SQL-surface rename's default): the single-spec check runs
@@ -4121,9 +4057,7 @@ object Layout {
   def dropManifestColumn(spark: SparkSession, path: String,
                          column: String): Unit =
       withMaintenanceLock(spark, path, lockWaitMs(spark)) {
-    val v = manifestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path is not a manifest table; seed it with writeManifestTable"))
+    val v = liveVersion(spark, path)
     val m = readManifestMeta(spark, path, v)
     val sch = manifestSchema(m)
     require(sch.fieldNames.contains(column),
@@ -4173,8 +4107,7 @@ object Layout {
     * re-use (drops). */
   def clearManifestAliases(spark: SparkSession, path: String): Unit =
       withMaintenanceLock(spark, path, lockWaitMs(spark)) {
-    val v = manifestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"$path is not a manifest table"))
+    val v = liveVersion(spark, path)
     val m = readManifestMeta(spark, path, v)
     if (m.colAliases.nonEmpty || m.droppedCols.nonEmpty) {
       // compactManifest skips FROZEN old-era generations on a
@@ -4229,8 +4162,7 @@ object Layout {
       withMaintenanceLock(spark, path, lockWaitMs(spark)) {
     require(keepVersions >= 1, "keepVersions must be >= 1")
     require(keepAgeMs >= 0L, "keepAgeMs must be >= 0 (0 = version-based)")
-    val v = manifestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(s"$path is not a manifest table"))
+    val v = liveVersion(spark, path)
     val fs = TableFs(spark, path)
     // keepAgeMs > 0 additionally retains every version needed to
     // time-travel to ANY instant in the last keepAgeMs (the Delta
@@ -4583,9 +4515,7 @@ object Layout {
   def changeManifestPartitionSpec(spark: SparkSession, path: String,
                                   newCols: Seq[String]): Unit =
       withMaintenanceLock(spark, path, lockWaitMs(spark)) {
-    val v = manifestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path is not a manifest table; seed it with writeManifestTable"))
+    val v = liveVersion(spark, path)
     val m = readManifestMeta(spark, path, v)
     val sch = manifestSchema(m)
     require(newCols.nonEmpty,
@@ -4767,9 +4697,7 @@ object Layout {
                           newBucketCols: Option[Seq[String]] = None,
                           newBuckets: Option[Int] = None): Int =
       withMaintenanceLock(spark, path, lockWaitMs(spark)) {
-    val v = manifestVersion(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$path is not a manifest table; seed it with writeManifestTable"))
+    val v = liveVersion(spark, path)
     val m = readManifestMeta(spark, path, v)
     val sch = manifestSchema(m)
     require(newPartitionCols.nonEmpty,

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.operators.Layout
+import graft.operators.{Layout, Skipping}
 
 /** Automatic data skipping through Spark's OWN scan planning: a
   * [[FileIndex]] over a manifest table (the seam Spark hands every
@@ -30,9 +30,10 @@ import graft.operators.Layout
   *  - data filters prune BEST-EFFORT (Spark re-applies them in-plan,
   *    so skipping only has to be sound): recognized conjuncts —
   *    `=`, `<`, `<=`, `>`, `>=`, `IN`, `IS NOT NULL` on a bare
-  *    column — consult the manifest's per-partition min/max stats
-  *    (`statsCols`) and bloom filters (`bloomCols`) through the same
-  *    Cast + ordering the residual uses; anything unrecognized is
+  *    column — become [[Skipping]] predicates over the manifest's
+  *    per-partition and per-file min/max stats (`statsCols`) and
+  *    per-partition bloom filters (`bloomCols`), the one driver-side
+  *    evaluator the explicit readers use too; anything unrecognized is
   *    ignored. Strict bounds prune with their closed window (at most
   *    one extra generation scanned — sound, never wrong);
   *  - what survives is a real parquet scan, so Catalyst's column
@@ -283,12 +284,6 @@ final class ManifestFileIndex(spark: SparkSession, tablePath: String,
     }
   }
 
-  /** Render a pushed literal through Spark's Cast-to-string — the only
-    * form the stored stats/bloom hashes round-trip with. */
-  private def rendered(l: Literal): Option[String] =
-    Option(org.apache.spark.sql.catalyst.expressions.Cast(
-      l, StringType, Some(zone)).eval()).map(_.toString)
-
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]):
       Seq[PartitionDirectory] = {
@@ -328,110 +323,32 @@ final class ManifestFileIndex(spark: SparkSession, tablePath: String,
         Some(a.name)
       case _ => None
     }
-    // (col, lo, hi) windows against min/max stats; None = open side
-    val windows = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Option[Any], Option[Any])]
-    // (col, renderedValues): keep a gen if its bloom might contain ANY
-    val probes = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Seq[String])]
-    // stats-backed IS NOT NULL: a gen whose stats are (None, None)
-    // holds no non-null value at all
-    val notNulls = scala.collection.mutable.ArrayBuffer.empty[String]
-    dataFilters.foreach {
-      case EqualTo(e, l: Literal) =>
-        statCol(e).foreach(c => rendered(l).foreach(s =>
-          windows += ((c, Some(s), Some(s)))))
-        bloomCol(e).foreach(c => rendered(l).foreach(s =>
-          probes += ((c, Seq(s)))))
-      case EqualTo(l: Literal, e) =>
-        statCol(e).foreach(c => rendered(l).foreach(s =>
-          windows += ((c, Some(s), Some(s)))))
-        bloomCol(e).foreach(c => rendered(l).foreach(s =>
-          probes += ((c, Seq(s)))))
-      case GreaterThan(e, l: Literal) =>
-        statCol(e).foreach(c => windows += ((c, rendered(l), None)))
-      case GreaterThanOrEqual(e, l: Literal) =>
-        statCol(e).foreach(c => windows += ((c, rendered(l), None)))
-      case LessThan(e, l: Literal) =>
-        statCol(e).foreach(c => windows += ((c, None, rendered(l))))
-      case LessThanOrEqual(e, l: Literal) =>
-        statCol(e).foreach(c => windows += ((c, None, rendered(l))))
-      case GreaterThan(l: Literal, e) => // lit > x  ==  x < lit
-        statCol(e).foreach(c => windows += ((c, None, rendered(l))))
-      case GreaterThanOrEqual(l: Literal, e) =>
-        statCol(e).foreach(c => windows += ((c, None, rendered(l))))
-      case LessThan(l: Literal, e) =>
-        statCol(e).foreach(c => windows += ((c, rendered(l), None)))
-      case LessThanOrEqual(l: Literal, e) =>
-        statCol(e).foreach(c => windows += ((c, rendered(l), None)))
+    def atLeast(e: Expression, l: Literal) =
+      statCol(e).map(Skipping.Window(_, Some(l), None))
+    def atMost(e: Expression, l: Literal) =
+      statCol(e).map(Skipping.Window(_, None, Some(l)))
+    def equal(e: Expression, l: Literal) =
+      statCol(e).map(Skipping.Window(_, Some(l), Some(l))) ++
+        bloomCol(e).map(Skipping.AnyOf(_, Seq(l)))
+    val preds: Seq[Skipping.Pred] = dataFilters.flatMap {
+      case EqualTo(e, l: Literal) => equal(e, l)
+      case EqualTo(l: Literal, e) => equal(e, l)
+      case GreaterThan(e, l: Literal) => atLeast(e, l)
+      case GreaterThanOrEqual(e, l: Literal) => atLeast(e, l)
+      case LessThan(e, l: Literal) => atMost(e, l)
+      case LessThanOrEqual(e, l: Literal) => atMost(e, l)
+      case GreaterThan(l: Literal, e) => atMost(e, l) // lit > x == x < lit
+      case GreaterThanOrEqual(l: Literal, e) => atMost(e, l)
+      case LessThan(l: Literal, e) => atLeast(e, l)
+      case LessThanOrEqual(l: Literal, e) => atLeast(e, l)
       case In(e, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
-        val rs = vs.collect { case l: Literal => rendered(l) }.flatten
-        if (rs.nonEmpty)
-          bloomCol(e).foreach(c => probes += ((c, rs)))
-      case IsNotNull(e) => statCol(e).foreach(c => notNulls += c)
-      case _ => () // unrecognized: residual handles it
+        bloomCol(e).map(Skipping.AnyOf(_, vs))
+      case IsNotNull(e) => statCol(e).map(Skipping.NotNull)
+      case _ => None // unrecognized: residual handles it
     }
-
-    // all pruning below evaluates ON THE DRIVER — listFiles runs in
-    // every query's planning, so it must not launch Spark jobs. The
-    // comparisons go through the SAME Cast the stats were rendered
-    // with and the SAME interpreted ordering BinaryComparison uses, so
-    // pruning can never disagree with the in-plan residual.
-    var kept = afterPart
-    if (notNulls.nonEmpty)
-      kept = kept.filter(g => notNulls.forall(c =>
-        meta.stats.getOrElse(g.rel, Map.empty)
-          .getOrElse(c, (None, None))._1.isDefined))
-    val evals = windows.toSeq.map { case (c, lo, hi) =>
-      val dt = fullSchema(c).dataType
-      val ord = org.apache.spark.sql.catalyst.util.TypeUtils
-        .getInterpretedOrdering(dt)
-      (c, dt, ord, lo.map(v => castString(v.toString, dt)),
-        hi.map(v => castString(v.toString, dt)))
-    }
-    // a (min,max) bounds map admits the windows iff every window
-    // overlaps [min,max]; (None,None) = no non-null value, which no
-    // comparison can match
-    def admits(bounds: Map[String, (Option[String], Option[String])]):
-        Boolean =
-      evals.forall { case (c, dt, ord, lo, hi) =>
-        bounds.getOrElse(c, (None, None)) match {
-          case (Some(mn), Some(mx)) =>
-            val mnV = castString(mn, dt)
-            val mxV = castString(mx, dt)
-            lo.forall(l => ord.gteq(mxV, l)) &&
-              hi.forall(h => ord.lteq(mnV, h))
-          case _ => false
-        }
-      }
-    if (windows.nonEmpty)
-      kept = kept.filter(g => admits(meta.stats.getOrElse(g.rel, Map.empty)))
-    if (probes.nonEmpty) {
-      val dec = java.util.Base64.getDecoder
-      // the build side hashed xxhash64(Cast(v, dt) cast string); probe
-      // identically, evaluated locally (foldable expression tree)
-      def localHash(c: String, rendered: String): Long = {
-        val dt = fullSchema(c).dataType
-        val e = org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(
-          org.apache.spark.sql.catalyst.expressions.Cast(
-            org.apache.spark.sql.catalyst.expressions.Cast(
-              Literal(UTF8String.fromString(rendered), StringType),
-              dt, Some(zone)),
-            StringType, Some(zone))), 42L) // xxhash64()'s default seed
-        e.eval(InternalRow.empty).asInstanceOf[Long]
-      }
-      val hashed = probes.toSeq.map { case (c, vs) =>
-        c -> vs.map(v => localHash(c, v))
-      }
-      kept = kept.filter { g =>
-        val bl = meta.blooms.getOrElse(g.rel, Map.empty)
-        hashed.forall { case (c, hs) =>
-          // absent bloom must stay (soundness); present must hit ≥ 1
-          bl.get(c).forall(b64 => hs.exists(h =>
-            graft.expressions.BloomSketch.mightContain(dec.decode(b64), h)))
-        }
-      }
-    }
+    // evaluated ON THE DRIVER — listFiles runs in every query's
+    // planning, so it must not launch Spark jobs
+    val skip = Skipping(spark, meta, preds)
     // only what SURVIVED pruning is ever listed — and within a
     // surviving generation, FILE-level min/max (recorded per data file
     // at publish time, keyed "gen=G/name") drop the files the windows
@@ -440,20 +357,14 @@ final class ManifestFileIndex(spark: SparkSession, tablePath: String,
     // partition-level stats alone would scan them all. A file with no
     // recorded entry is always kept (sound); the in-plan residual
     // keeps the result exact either way.
-    kept.map { g =>
-      val all = filesOf(g)
-      val perFile = meta.fileStats.getOrElse(g.rel, Map.empty)
-      val files =
-        if (perFile.isEmpty || (windows.isEmpty && notNulls.isEmpty)) all
-        else all.filter { st =>
-          perFile.get(s"gen=${g.gen}/${st.getPath.getName}") match {
-            case None => true
-            case Some(bounds) =>
-              admits(bounds) && notNulls.forall(c =>
-                bounds.getOrElse(c, (None, None))._1.isDefined)
-          }
-        }
-      PartitionDirectory(g.values, files.toArray)
-    }
+    afterPart.filter(g => skip.admits(meta.stats.getOrElse(g.rel, Map.empty),
+        meta.blooms.getOrElse(g.rel, Map.empty)))
+      .map { g =>
+        val perFile = meta.fileStats.getOrElse(g.rel, Map.empty)
+        val files = filesOf(g).filter(st =>
+          perFile.get(s"gen=${g.gen}/${st.getPath.getName}")
+            .forall(skip.admits(_)))
+        PartitionDirectory(g.values, files.toArray)
+      }
   }
 }

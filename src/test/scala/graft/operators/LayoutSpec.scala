@@ -228,6 +228,23 @@ class LayoutSpec extends SparkSpec {
     scans(df.queryExecution.executedPlan)
       .map(_.metrics("numFiles").value).sum
 
+  /** The `rel/gen=G` dirs a read of table `dir` touches: the explicit
+    * readers' input files, or, for a manifest-index scan, the files its
+    * pruned listing returns for the scan's own pushed filters. */
+  private def genDirsRead(dir: String, df: DataFrame): Set[String] = {
+    val files = scans(df.queryExecution.executedPlan).flatMap { s =>
+      s.relation.location match {
+        case idx: graft.plans.ManifestFileIndex =>
+          idx.listFiles(s.partitionFilters, s.dataFilters)
+            .flatMap(_.files.map(_.getPath.toString))
+        case other => other.inputFiles.toSeq
+      }
+    }
+    val root = new org.apache.hadoop.fs.Path(dir).toUri.getPath + "/"
+    files.map(f => new org.apache.hadoop.fs.Path(f).getParent.toUri.getPath
+      .stripPrefix(root)).toSet
+  }
+
   test("merge: latest-wins upsert, unpartitioned — update, insert, carry-over") {
     val dir = tmpDir("merge")
     val base = spark.read.parquet(sf("orders"))
@@ -1690,6 +1707,14 @@ class LayoutSpec extends SparkSpec {
     bf.collect()
     assert(scanFiles(bf) < full, "bloom probe must prune")
     assert(bf.select("u").as[String].collect().toSeq == Seq("u25"))
+    // the explicit readers read exactly the generations the planner
+    // lists for the same predicates
+    val eqDirs = genDirsRead(dir, Layout.readManifestEq(spark, dir, Seq("k" -> 25L)))
+    assert(eqDirs.nonEmpty && eqDirs == genDirsRead(dir, bf))
+    val rangeDirs = genDirsRead(dir,
+      Layout.readManifestPruned(spark, dir, Seq(("v", 100, 119))))
+    assert(rangeDirs.nonEmpty && rangeDirs ==
+      genDirsRead(dir, t.filter(col("v") >= 100 && col("v") <= 119)))
 
     // the SQL surface prunes the same way
     t.createOrReplaceTempView("mfidx_t")
@@ -1897,6 +1922,9 @@ class LayoutSpec extends SparkSpec {
     pruned.collect()
     assert(scanFiles(pruned) < full,
       "stats pruning must reach through the bucketed meta")
+    val rangeDirs = genDirsRead(dir,
+      Layout.readManifestPruned(spark, dir, Seq(("v", 100, 119))))
+    assert(rangeDirs.nonEmpty && rangeDirs == genDirsRead(dir, pruned))
     assert(pruned.select("k").as[Long].collect().sorted.toSeq ==
       (10L until 20L))
   }
@@ -1917,5 +1945,79 @@ class LayoutSpec extends SparkSpec {
       .collect().head.isNullAt(0))
     assert(t.filter(col("k") === 3L).select("score").as[Double]
       .collect().toSeq == Seq(0.5))
+  }
+
+  test("stats and blooms answer in the seed's zone after the session " +
+      "zone changes") {
+    import spark.implicits._
+    val dir = tmpDir("zone")
+    val zoneKey = "spark.sql.session.timeZone"
+    val prevZone = spark.conf.get(zoneKey)
+    def at(iso: String) = java.sql.Timestamp.from(java.time.Instant.parse(iso))
+    val ten = at("2024-03-01T10:00:00Z")
+    spark.conf.set(zoneKey, "UTC")
+    try {
+      Layout.writeManifestTable(spark, dir,
+        Seq((1L, "p0", ten, 1L)).toDF("k", "part", "ts", "ver"),
+        Seq("part"), statsCols = Seq("ts"), bloomCols = Seq("ts"))
+      spark.conf.set(zoneKey, "America/Los_Angeles")
+      val (lo, hi) = (at("2024-03-01T09:00:00Z"), at("2024-03-01T11:00:00Z"))
+      assert(Layout.readManifestPruned(spark, dir, Seq(("ts", lo, hi)))
+        .count() == 1)
+      assert(Layout.readManifestEq(spark, dir, Seq("ts" -> ten)).count() == 1)
+      val t = Layout.manifestTable(spark, dir)
+      assert(t.filter(col("ts") >= lit(lo) && col("ts") <= lit(hi))
+        .count() == 1)
+      assert(t.filter(col("ts") === lit(ten)).count() == 1)
+      // a write under the new zone still renders in the seed's zone
+      val noon = at("2024-03-01T12:00:00Z")
+      Layout.mergeManifest(spark, dir,
+        Seq((2L, "p1", noon, 1L)).toDF("k", "part", "ts", "ver"),
+        Seq("k"), "ver")
+      spark.conf.set(zoneKey, "UTC")
+      assert(Layout.readManifestPruned(spark, dir,
+        Seq(("ts", at("2024-03-01T11:30:00Z"), at("2024-03-01T12:30:00Z"))))
+        .select("k").as[Long].collect().toSeq == Seq(2L))
+      assert(Layout.readManifestEq(spark, dir, Seq("ts" -> noon))
+        .select("k").as[Long].collect().toSeq == Seq(2L))
+    } finally spark.conf.set(zoneKey, prevZone)
+  }
+
+  test("planning an explicit skipping read starts no Spark job") {
+    import spark.implicits._
+    val rows = (0 until 40).map(i => (i.toLong, s"p${i / 10}", i))
+      .toDF("k", "part", "v")
+    val flat = tmpDir("nojob")
+    val hier = tmpDir("nojob_hier")
+    Layout.writeManifestTable(spark, flat, rows, Seq("part"),
+      statsCols = Seq("v"), bloomCols = Seq("k"))
+    Layout.writeManifestTable(spark, hier, rows, Seq("part"),
+      statsCols = Seq("v"), bloomCols = Seq("k"), manifestBuckets = 2)
+    val group = "graft-skipping-plan"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "plan explicit skipping reads")
+      val planned = try Seq(flat, hier).flatMap(d => Seq(
+          Layout.readManifestEq(spark, d, Seq("k" -> 25L)),
+          Layout.readManifestPruned(spark, d, Seq(("v", 10, 19)))))
+        finally sc.clearJobGroup()
+      org.apache.spark.sql.graftbridge.GraftSqlBridge.waitListenerBus(spark)
+      assert(jobs.get == 0, s"${jobs.get} job(s) started while planning")
+      // the listener does see this group's jobs once a read runs
+      sc.setJobGroup(group, "run one skipping read")
+      try assert(planned.head.select("v").as[Int].collect().toSeq == Seq(25))
+      finally sc.clearJobGroup()
+      org.apache.spark.sql.graftbridge.GraftSqlBridge.waitListenerBus(spark)
+      assert(jobs.get > 0)
+    } finally sc.removeSparkListener(listener)
   }
 }
