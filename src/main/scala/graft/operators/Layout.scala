@@ -1222,68 +1222,19 @@ object Layout {
     if (refs.isEmpty) header else readBuckets(spark, path, header, refs)
   }
 
-  /** Per-bucket stats rollup (min of mins / max of maxes across the
-    * bucket's rels, through Spark's Cast + ordering — one tiny local
-    * job for ALL buckets) and bloom rollup (driver-side union). */
+  /** Per-bucket stats rollup (the [[Skipping.Rollup]] of the bucket's
+    * rels' bounds) and bloom rollup (their union), both on the driver. */
   private def bucketRollups(spark: SparkSession, m: ManifestMeta,
                             byBucket: Map[Int, Seq[String]]):
-      Map[Int, (Map[String, (Option[String], Option[String])],
-                Map[String, String])] = {
-    val sch = manifestSchema(m)
-    val z = zoned(spark, m)
-    val statsRollup: Map[Int, Map[String, (Option[String], Option[String])]] =
-      if (m.statsCols.isEmpty) Map.empty
-      else {
-        val rows = byBucket.toSeq.sortBy(_._1).flatMap { case (b, rels) =>
-          rels.map { rel =>
-            val st = m.stats.getOrElse(rel, Map.empty)
-            org.apache.spark.sql.Row.fromSeq(b +: m.statsCols.flatMap { c =>
-              val (mn, mx) = st.getOrElse(c, (None, None))
-              Seq(mn.orNull, mx.orNull)
-            })
-          }
-        }
-        val fields = org.apache.spark.sql.types.StructField("b",
-          org.apache.spark.sql.types.IntegerType) +:
-          m.statsCols.zipWithIndex.flatMap { case (_, i) =>
-            Seq(org.apache.spark.sql.types.StructField(s"__mn_$i",
-              org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField(s"__mx_$i",
-                org.apache.spark.sql.types.StringType))
-          }
-        val aggs = m.statsCols.zipWithIndex.flatMap { case (c, i) =>
-          val dt = sch(c).dataType
-          Seq(z(min(z(col(s"__mn_$i"), dt))).as(s"__mn_$i"),
-            z(max(z(col(s"__mx_$i"), dt))).as(s"__mx_$i"))
-        }
-        spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](
-              scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-            org.apache.spark.sql.types.StructType(fields))
-          .groupBy(col("b")).agg(aggs.head, aggs.tail: _*)
-          .collect().map { r =>
-            r.getInt(0) -> m.statsCols.zipWithIndex.map { case (c, i) =>
-              c -> (Option(r.getAs[String](s"__mn_$i")),
-                Option(r.getAs[String](s"__mx_$i")))
-            }.toMap
-          }.toMap
-      }
-    val dec = java.util.Base64.getDecoder
-    val enc = java.util.Base64.getEncoder
-    val bloomRollup: Map[Int, Map[String, String]] =
-      if (m.bloomCols.isEmpty) Map.empty
-      else byBucket.map { case (b, rels) =>
-        b -> m.bloomCols.flatMap { c =>
-          val parts = rels.flatMap(rel =>
-            m.blooms.getOrElse(rel, Map.empty).get(c))
-          if (parts.isEmpty) None
-          else Some(c -> enc.encodeToString(parts.map(dec.decode(_))
-            .reduce(graft.expressions.BloomSketch.union)))
-        }.toMap
-      }
-    byBucket.keys.map(b => b -> (
-      statsRollup.getOrElse(b, Map.empty),
-      bloomRollup.getOrElse(b, Map.empty))).toMap
+      Map[Int, (Skipping.Bounds, Map[String, String])] = {
+    lazy val rollup = Skipping.rollup(spark, m)
+    byBucket.map { case (b, rels) =>
+      b -> (
+        if (m.statsCols.isEmpty) Map.empty
+        else rollup(rels.map(m.stats.getOrElse(_, Map.empty))),
+        m.bloomCols.flatMap(c => unionBlooms(rels.flatMap(rel =>
+          m.blooms.getOrElse(rel, Map.empty).get(c))).map(c -> _)).toMap)
+    }
   }
 
   private def writeManifestMeta(spark: SparkSession, path: String,
@@ -1481,20 +1432,19 @@ object Layout {
   private[graft] def statsZone(spark: SparkSession, m: ManifestMeta): String =
     m.statsZone.getOrElse(spark.sessionState.conf.sessionLocalTimeZone)
 
-  /** Casts in one fixed zone: `apply(c, dt)` is `c.cast(dt)` evaluated
-    * in `zone` rather than the session's. */
+  /** Renders in one fixed zone: `apply(c)` is `c.cast("string")`
+    * evaluated in `zone` rather than the session's. */
   private final class Zoned(zone: String) {
     import org.apache.spark.sql.graftbridge.GraftSqlBridge
-    def apply(c: org.apache.spark.sql.Column,
-              dt: org.apache.spark.sql.types.DataType = StringType):
-        org.apache.spark.sql.Column =
+    def apply(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       GraftSqlBridge.column(
         org.apache.spark.sql.catalyst.expressions.Cast(
-          GraftSqlBridge.expression(c), dt, Some(zone)))
+          GraftSqlBridge.expression(c), StringType, Some(zone)))
   }
 
-  /** Casts in `m`'s [[statsZone]] — every stats/bloom render and every
-    * parse of a stored stats string goes through one. */
+  /** Renders in `m`'s [[statsZone]] — the in-plan stats and bloom
+    * builds ([[fileStatsUnder]], [[bloomsUnder]]) go through one;
+    * everything else is [[Skipping]]'s. */
   private def zoned(spark: SparkSession, m: ManifestMeta): Zoned =
     new Zoned(statsZone(spark, m))
 
@@ -1727,70 +1677,6 @@ object Layout {
     }
   }
 
-  /** BOTH stats granularities from ONE distributed pass over a
-    * writer's tmp tree: per-file min/max from [[fileStatsUnder]], and
-    * the per-partition bounds rolled up DRIVER-side from them (min of
-    * file mins / max of file maxes through Spark's own Cast +
-    * ordering, one tiny local job — the [[bucketRollups]] shape). The
-    * pre-existing two-pass writers paid one aggregate for partition
-    * stats; file granularity rides along for free. */
-  private def statsAllUnder(spark: SparkSession, m: ManifestMeta,
-                            tmpDir: String):
-      (Map[String, Map[String, (Option[String], Option[String])]],
-       Map[String, Map[String, Map[String, (Option[String], Option[String])]]]) = {
-    if (m.statsCols.isEmpty) (Map.empty, Map.empty)
-    else {
-      val perFile = fileStatsUnder(spark, m, tmpDir)
-      (rollupPerRel(spark, m, perFile), perFile)
-    }
-  }
-
-  /** Per-rel bounds rolled up from per-file stats strings — min of file
-    * mins / max of file maxes through Spark's own Cast + ordering, one
-    * tiny local job (the [[bucketRollups]] shape). */
-  private def rollupPerRel(spark: SparkSession, m: ManifestMeta,
-      perFile: Map[String, Map[String, Map[String, (Option[String], Option[String])]]]):
-      Map[String, Map[String, (Option[String], Option[String])]] = {
-    {
-      val sch = manifestSchema(m)
-      val z = zoned(spark, m)
-      val rows = perFile.toSeq.sortBy(_._1).flatMap { case (rel, files) =>
-        files.values.map { cols =>
-          org.apache.spark.sql.Row.fromSeq(rel +: m.statsCols.flatMap { c =>
-            val (mn, mx) = cols.getOrElse(c, (None, None))
-            Seq(mn.orNull, mx.orNull)
-          })
-        }
-      }
-      val fields = org.apache.spark.sql.types.StructField("rel",
-        org.apache.spark.sql.types.StringType) +:
-        m.statsCols.zipWithIndex.flatMap { case (_, i) =>
-          Seq(org.apache.spark.sql.types.StructField(s"__mn_$i",
-            org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField(s"__mx_$i",
-              org.apache.spark.sql.types.StringType))
-        }
-      val aggs = m.statsCols.zipWithIndex.flatMap { case (c, i) =>
-        val dt = sch(c).dataType
-        Seq(z(min(z(col(s"__mn_$i"), dt))).as(s"__mn_$i"),
-          z(max(z(col(s"__mx_$i"), dt))).as(s"__mx_$i"))
-      }
-      if (rows.isEmpty) Map.empty[String,
-          Map[String, (Option[String], Option[String])]]
-      else spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](
-            scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-          org.apache.spark.sql.types.StructType(fields))
-        .groupBy(col("rel")).agg(aggs.head, aggs.tail: _*)
-        .collect().map { r =>
-          r.getString(0) -> m.statsCols.zipWithIndex.map { case (c, i) =>
-            c -> (Option(r.getAs[String](s"__mn_$i")),
-              Option(r.getAs[String](s"__mx_$i")))
-          }.toMap
-        }.toMap
-    }
-  }
-
   /** The entries of a rel's per-file stats that belong to the given
     * generations — what survives a rewrite that replaced the others. */
   private def fileStatsOfGens(
@@ -1836,8 +1722,8 @@ object Layout {
       files.map { case (rel, fs) => rel -> fs.map(_._2).sum }
   }
 
-  /** Convert one parquet footer statistic to the EXTERNAL Spark value
-    * of the declared column type, or None when the mapping is not
+  /** Convert one parquet footer statistic to the Catalyst (internal)
+    * value of the declared column type, or None when the mapping is not
     * sound (type mismatch, NaN-poisoned float stats, sub-micro
     * timestamp units whose flooring could narrow a bound) — None makes
     * the caller fall back to the data-scan path for the whole table.
@@ -1878,13 +1764,13 @@ object Layout {
             Some(java.lang.Double.valueOf(0.0d))
           else Some(d)
         case StringType if ptn == BINARY =>
-          Some(v.asInstanceOf[org.apache.parquet.io.api.Binary]
-            .toStringUsingUTF8)
+          Some(org.apache.spark.unsafe.types.UTF8String.fromString(
+            v.asInstanceOf[org.apache.parquet.io.api.Binary]
+              .toStringUsingUTF8))
         case DateType if ptn == INT32 &&
             prim.getLogicalTypeAnnotation
               .isInstanceOf[LogicalTypeAnnotation.DateLogicalTypeAnnotation] =>
-          Some(org.apache.spark.sql.catalyst.util.DateTimeUtils
-            .toJavaDate(v.asInstanceOf[java.lang.Integer]))
+          Some(v)
         case TimestampType | TimestampNTZType if ptn == INT64 =>
           prim.getLogicalTypeAnnotation match {
             case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
@@ -1896,19 +1782,11 @@ object Layout {
                 // fallback instead (r17 advice item 3)
                 if t.isAdjustedToUTC == (dt == TimestampType) =>
               val raw = v.asInstanceOf[java.lang.Long].longValue()
-              val micros = t.getUnit match {
+              t.getUnit match {
                 case LogicalTypeAnnotation.TimeUnit.MICROS => Some(raw)
                 case LogicalTypeAnnotation.TimeUnit.MILLIS =>
                   Some(Math.multiplyExact(raw, 1000L))
                 case _ => None // NANOS: flooring could narrow a bound
-              }
-              micros.map { us =>
-                if (dt == TimestampType)
-                  org.apache.spark.sql.catalyst.util.DateTimeUtils
-                    .toJavaTimestamp(us)
-                else
-                  org.apache.spark.sql.catalyst.util.DateTimeUtils
-                    .microsToLocalDateTime(us)
               }
             case _ => None
           }
@@ -1918,12 +1796,14 @@ object Layout {
                 if a.getScale == d.scale =>
               ptn match {
                 case INT32 | INT64 =>
-                  Some(java.math.BigDecimal.valueOf(
-                    v.asInstanceOf[java.lang.Number].longValue(), d.scale))
+                  Some(Decimal(java.math.BigDecimal.valueOf(
+                    v.asInstanceOf[java.lang.Number].longValue(), d.scale),
+                    d.precision, d.scale))
                 case BINARY | FIXED_LEN_BYTE_ARRAY =>
-                  Some(new java.math.BigDecimal(new java.math.BigInteger(
-                    v.asInstanceOf[org.apache.parquet.io.api.Binary]
-                      .getBytes), d.scale))
+                  Some(Decimal(new java.math.BigDecimal(
+                    new java.math.BigInteger(
+                      v.asInstanceOf[org.apache.parquet.io.api.Binary]
+                        .getBytes), d.scale), d.precision, d.scale))
                 case _ => None
               }
             case _ => None
@@ -2030,58 +1910,29 @@ object Layout {
     TmpScan(listed.toMap, perFile.map(_._3).sum, blockStats)
   }
 
-  /** Both stats granularities from a [[scanTmpTree]] result: per-file
-    * strings and the per-rel rollup render through ONE tiny
-    * LocalRelation aggregate (Spark's own min/max ordering + Cast — the
-    * exact semantics of the data-scan path), no data pass. Tables whose
-    * stats columns have no sound footer mapping fall back to
-    * [[statsAllUnder]]'s distributed scan. */
+  /** Both stats granularities from a [[scanTmpTree]] result, with no
+    * data pass and no Spark job: per-file bounds fold from the footer
+    * blocks and per-rel bounds from the files, both through
+    * [[Skipping.Rollup]] (the ordering and rendering of the data-scan
+    * path). Tables whose stats columns have no sound footer mapping
+    * fall back to [[fileStatsUnder]]'s distributed scan. */
   private def statsFromScan(spark: SparkSession, m: ManifestMeta,
                             tmpDir: String, scan: TmpScan):
-      (Map[String, Map[String, (Option[String], Option[String])]],
-       Map[String, Map[String, Map[String, (Option[String], Option[String])]]]) = {
+      (Map[String, Skipping.Bounds],
+       Map[String, Map[String, Skipping.Bounds]]) = {
     if (m.statsCols.isEmpty) (Map.empty, Map.empty)
-    else scan.blockStats match {
-      case None => statsAllUnder(spark, m, tmpDir)
-      case Some(blocks) if blocks.isEmpty => (Map.empty, Map.empty)
-      case Some(blocks) =>
-        val sch = manifestSchema(m)
-        val z = zoned(spark, m)
-        val fields = Seq(
-          org.apache.spark.sql.types.StructField("rel",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("file",
-            org.apache.spark.sql.types.StringType)) ++
-          m.statsCols.zipWithIndex.flatMap { case (c, i) =>
-            Seq(org.apache.spark.sql.types.StructField(s"__mn_$i",
-              sch(c).dataType),
-              org.apache.spark.sql.types.StructField(s"__mx_$i",
-                sch(c).dataType))
+    else {
+      val rollup = Skipping.rollup(spark, m)
+      val perFile = scan.blockStats match {
+        case None => fileStatsUnder(spark, m, tmpDir)
+        case Some(blocks) =>
+          blocks.groupBy(_._1).map { case (rel, bs) =>
+            rel -> bs.groupBy(_._2).map { case (file, fbs) =>
+              file -> rollup.ofValues(fbs.map(_._3)) }
           }
-        val rows = blocks.map { case (rel, file, bounds) =>
-          org.apache.spark.sql.Row.fromSeq(rel +: file +:
-            bounds.flatMap { case (mn, mx) => Seq(mn.orNull, mx.orNull) })
-        }
-        val aggs = m.statsCols.zipWithIndex.flatMap { case (_, i) =>
-          Seq(z(min(col(s"__mn_$i"))).as(s"__mn_$i"),
-            z(max(col(s"__mx_$i"))).as(s"__mx_$i"))
-        }
-        val perFile = spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](
-              scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-            org.apache.spark.sql.types.StructType(fields))
-          .groupBy(col("rel"), col("file")).agg(aggs.head, aggs.tail: _*)
-          .collect()
-          .map { r =>
-            (r.getString(0), r.getString(1),
-              m.statsCols.zipWithIndex.map { case (c, i) =>
-                c -> (Option(r.getAs[String](s"__mn_$i")),
-                  Option(r.getAs[String](s"__mx_$i")))
-              }.toMap)
-          }
-          .groupBy(_._1)
-          .map { case (rel, rs) => rel -> rs.map(t => t._2 -> t._3).toMap }
-        (rollupPerRel(spark, m, perFile), perFile)
+      }
+      (perFile.map { case (rel, files) => rel -> rollup(files.values) },
+        perFile)
     }
   }
 
@@ -2120,23 +1971,18 @@ object Layout {
     * bloom analogue of [[widenStats]]; a fold recomputes exactly). */
   private def widenBlooms(old: Map[String, Map[String, String]],
                           add: Map[String, Map[String, String]]):
-      Map[String, Map[String, String]] = {
-    val enc = java.util.Base64.getEncoder
-    val dec = java.util.Base64.getDecoder
+      Map[String, Map[String, String]] =
     old ++ add.map { case (rel, cols) =>
-      rel -> (old.get(rel) match {
-        case None => cols
-        case Some(prev) => cols.map { case (c, b64) =>
-          c -> (prev.get(c) match {
-            case None => b64
-            case Some(p) => enc.encodeToString(
-              graft.expressions.BloomSketch.union(
-                dec.decode(p), dec.decode(b64)))
-          })
-        }
-      })
+      val prev = old.getOrElse(rel, Map.empty)
+      rel -> cols.map { case (c, b64) =>
+        c -> unionBlooms(prev.get(c).toSeq :+ b64).get }
     }
-  }
+
+  /** The union of base64-encoded bloom filters, None for none. */
+  private def unionBlooms(b64s: Seq[String]): Option[String] =
+    b64s.map(java.util.Base64.getDecoder.decode(_))
+      .reduceOption(graft.expressions.BloomSketch.union)
+      .map(java.util.Base64.getEncoder.encodeToString)
 
   /** EQUALITY data-skipping read: the rows of the LIVE snapshot with
     * `c1 = v1 AND c2 = v2 AND ...`, scanning ONLY the partitions whose
@@ -2926,7 +2772,7 @@ object Layout {
     * generation appended to its LIVE delta list (deltas that landed
     * concurrently stay ahead of it); stats and blooms widen
     * monotonically against the live ones (which already cover those
-    * deltas — the tiny local widen job is bounded by the touched
+    * deltas — the driver-side widen is bounded by the touched
     * partition count), and the delta files ADD to the rel's per-file
     * entries (the base generation's stay valid — nothing rewrote
     * it). */
@@ -3180,55 +3026,18 @@ object Layout {
     * pruning stays sound while the base is never read. Deletes can
     * leave the widened bounds looser than the live rows until
     * [[foldManifestDeltas]] recomputes them exactly — looser bounds
-    * only ever read more, never less. The min/max comparison runs
-    * through Spark's own Cast + least/greatest (null-skipping — a
-    * None side yields the other side's bound), one tiny local job
+    * only ever read more, never less. A driver fold through
+    * [[Skipping.Rollup]] (a None side yields the other side's bound),
     * bounded by the touched partition count. */
   private def widenStats(spark: SparkSession, m: ManifestMeta,
-      add: Map[String, Map[String, (Option[String], Option[String])]]):
-      Map[String, Map[String, (Option[String], Option[String])]] = {
-    if (m.statsCols.isEmpty || add.isEmpty) m.stats
+                         add: Map[String, Skipping.Bounds]):
+      Map[String, Skipping.Bounds] =
+    if (m.statsCols.isEmpty) m.stats
     else {
-      val sch = manifestSchema(m)
-      val z = zoned(spark, m)
-      val rows = add.keys.toSeq.sorted.map { rel =>
-        val old = m.stats.getOrElse(rel, Map.empty)
-        val nw = add(rel)
-        org.apache.spark.sql.Row.fromSeq(rel +: m.statsCols.flatMap { c =>
-          val (omn, omx) = old.getOrElse(c, (None, None))
-          val (amn, amx) = nw.getOrElse(c, (None, None))
-          Seq(omn.orNull, omx.orNull, amn.orNull, amx.orNull)
-        })
-      }
-      val fields = org.apache.spark.sql.types.StructField("rel",
-        org.apache.spark.sql.types.StringType) +:
-        m.statsCols.zipWithIndex.flatMap { case (_, i) =>
-          Seq("omn", "omx", "amn", "amx").map(p =>
-            org.apache.spark.sql.types.StructField(s"__${p}_$i",
-              org.apache.spark.sql.types.StringType))
-        }
-      val sel = col("rel") +: m.statsCols.zipWithIndex.flatMap {
-        case (c, i) =>
-          val dt = sch(c).dataType
-          Seq(
-            z(least(z(col(s"__omn_$i"), dt), z(col(s"__amn_$i"), dt)))
-              .as(s"__mn_$i"),
-            z(greatest(z(col(s"__omx_$i"), dt), z(col(s"__amx_$i"), dt)))
-              .as(s"__mx_$i"))
-      }
-      val widened = spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](
-            scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
-          org.apache.spark.sql.types.StructType(fields))
-        .select(sel: _*).collect()
-      m.stats ++ widened.map { r =>
-        r.getString(0) -> m.statsCols.zipWithIndex.map { case (c, i) =>
-          c -> (Option(r.getString(1 + 2 * i)),
-                Option(r.getString(2 + 2 * i)))
-        }.toMap
-      }.toMap
+      val rollup = Skipping.rollup(spark, m)
+      m.stats ++ add.map { case (rel, st) =>
+        rel -> rollup(Seq(m.stats.getOrElse(rel, Map.empty), st)) }
     }
-  }
 
   /** Pure APPEND onto a DECLARED append-only manifest table (seeded
     * with `appendOnly = true`): the batch lands as spec-less delta

@@ -2020,4 +2020,46 @@ class LayoutSpec extends SparkSpec {
       assert(jobs.get > 0)
     } finally sc.removeSparkListener(listener)
   }
+
+  test("min/max stats add no Spark job to a manifest publish") {
+    import spark.implicits._
+    def batch(ver: Long, lo: Int, hi: Int): DataFrame =
+      (lo until hi).map(i => (i.toLong, s"p${i % 4}", i * 3 + ver.toInt, ver))
+        .toDF("k", "part", "v", "ver")
+    val group = "graft-stats-publish"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    // jobs one CoW merge plus one delta merge start on a fresh table
+    def publishJobs(buckets: Int, statsCols: Seq[String]): Int = {
+      val dir = tmpDir(s"statsjobs_${buckets}_${statsCols.size}")
+      Layout.writeManifestTable(spark, dir, batch(1L, 0, 40), Seq("part"),
+        statsCols = statsCols, manifestBuckets = buckets,
+        keys = Seq("k"), versionCol = Some("ver"))
+      jobs.set(0)
+      sc.setJobGroup(group, "publish")
+      try {
+        Layout.mergeManifest(spark, dir, batch(2L, 20, 60), Seq("k"), "ver")
+        Layout.mergeManifestDelta(spark, dir, batch(3L, 30, 70), Seq("k"),
+          "ver")
+      } finally sc.clearJobGroup()
+      org.apache.spark.sql.graftbridge.GraftSqlBridge.waitListenerBus(spark)
+      assert(Layout.readManifest(spark, dir).count() == 70)
+      jobs.get
+    }
+    sc.addSparkListener(listener)
+    try for (buckets <- Seq(0, 2)) {
+      val plain = publishJobs(buckets, Nil)
+      val withStats = publishJobs(buckets, Seq("v"))
+      assert(plain > 0)
+      assert(withStats == plain, s"manifestBuckets=$buckets: $withStats " +
+        s"job(s) with statsCols = Seq(v), $plain without")
+    } finally sc.removeSparkListener(listener)
+  }
 }
