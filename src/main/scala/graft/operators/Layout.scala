@@ -1432,21 +1432,18 @@ object Layout {
   private[graft] def statsZone(spark: SparkSession, m: ManifestMeta): String =
     m.statsZone.getOrElse(spark.sessionState.conf.sessionLocalTimeZone)
 
-  /** Renders in one fixed zone: `apply(c)` is `c.cast("string")`
-    * evaluated in `zone` rather than the session's. */
-  private final class Zoned(zone: String) {
-    import org.apache.spark.sql.graftbridge.GraftSqlBridge
-    def apply(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      GraftSqlBridge.column(
-        org.apache.spark.sql.catalyst.expressions.Cast(
-          GraftSqlBridge.expression(c), StringType, Some(zone)))
-  }
-
-  /** Renders in `m`'s [[statsZone]] — the in-plan stats and bloom
-    * builds ([[fileStatsUnder]], [[bloomsUnder]]) go through one;
+  /** `c.cast("string")` evaluated in `m`'s [[statsZone]] rather than
+    * the session's — the in-plan stats and bloom builds
+    * ([[fileStatsUnder]], [[bloomsUnder]]) render through it;
     * everything else is [[Skipping]]'s. */
-  private def zoned(spark: SparkSession, m: ManifestMeta): Zoned =
-    new Zoned(statsZone(spark, m))
+  private def zoned(spark: SparkSession, m: ManifestMeta):
+      org.apache.spark.sql.Column => org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.graftbridge.GraftSqlBridge
+    val zone = statsZone(spark, m)
+    c => GraftSqlBridge.column(
+      org.apache.spark.sql.catalyst.expressions.Cast(
+        GraftSqlBridge.expression(c), StringType, Some(zone)))
+  }
 
   /** The read schema for files that may predate renames: the stored
     * fields plus one extra field per PRIOR name (same type as its
@@ -1650,7 +1647,7 @@ object Layout {
     * for). */
   private def fileStatsUnder(spark: SparkSession, m: ManifestMeta,
                              tmpDir: String):
-      Map[String, Map[String, Map[String, (Option[String], Option[String])]]] = {
+      Map[String, Map[String, Skipping.Bounds]] = {
     if (m.statsCols.isEmpty) Map.empty
     else {
       val df = underDir(spark, m, tmpDir)
@@ -1680,9 +1677,8 @@ object Layout {
   /** The entries of a rel's per-file stats that belong to the given
     * generations — what survives a rewrite that replaced the others. */
   private def fileStatsOfGens(
-      files: Map[String, Map[String, (Option[String], Option[String])]],
-      gens: Set[Int]):
-      Map[String, Map[String, (Option[String], Option[String])]] =
+      files: Map[String, Skipping.Bounds],
+      gens: Set[Int]): Map[String, Skipping.Bounds] =
     files.filter { case (k, _) =>
       k.startsWith("gen=") && {
         val d = k.drop(4).takeWhile(_.isDigit)
@@ -1694,9 +1690,8 @@ object Layout {
     * assigned ("gen=G/name") — the stored form. Rels the commit did
     * not rename (a fold/compact skip) drop out. */
   private def genKeyedFileStats(
-      raw: Map[String, Map[String, Map[String, (Option[String], Option[String])]]],
-      newGens: Map[String, Int]):
-      Map[String, Map[String, Map[String, (Option[String], Option[String])]]] =
+      raw: Map[String, Map[String, Skipping.Bounds]],
+      newGens: Map[String, Int]): Map[String, Map[String, Skipping.Bounds]] =
     raw.flatMap { case (rel, files) =>
       newGens.get(rel).map(g =>
         rel -> files.map { case (name, cols) => s"gen=$g/$name" -> cols })
@@ -2594,8 +2589,8 @@ object Layout {
     * the produced partition rels and their published metadata. */
   private final case class Staged(
       fs: TableFs, tmpDir: String, produced: Seq[String],
-      stats: Map[String, Map[String, (Option[String], Option[String])]],
-      fileStats: Map[String, Map[String, Map[String, (Option[String], Option[String])]]],
+      stats: Map[String, Skipping.Bounds],
+      fileStats: Map[String, Map[String, Skipping.Bounds]],
       blooms: Map[String, Map[String, String]],
       bytes: Map[String, Long])
 
